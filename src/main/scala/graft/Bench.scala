@@ -229,45 +229,23 @@ object Bench {
         .agg(sum(col("rn"))).collect()
   }
 
+  /** Usage: `runMain graft.Bench [name...]`. With no args this is the
+    * official run: every query row, the x01–x05 A/B rows, and the
+    * BENCH_FULL.json record. Names restrict the query rows and the
+    * x01–x05 rows to the ones listed, for re-timing a changed plan
+    * without a full pass; such a run prints the same stdout line but
+    * never writes BENCH_FULL.json, so a dev timing cannot overwrite
+    * the official record.
+    */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the allowlisted tiny-frame windows (PlanSweepSpec's audited
-    // census/mart sites) each emit a `WARN WindowExec: No Partition
-    // Defined` — correct plans, known noise; silence just that logger
-    // so the harness's captured stdout tail stays readable
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val only = args.toSet
+    def wanted(name: String): Boolean = only.isEmpty || only(name)
+    val spark = GraftSession(s"local[$cpus]", cpus)
     val load0 = loadAvg()
-    // JIT / codegen warm-up + FULL-COLUMN first-touch of every table: a
-    // parquet count() is metadata-only, so the round-2 warm-up left the
-    // big string/array columns (events.props, documents.text,
-    // embeddings.embedding) cold and whichever query read them FIRST
-    // absorbed the entire cold read — e03 measured 17s in-harness vs
-    // 0.9s in a warm local loop. The noop-format write deserializes
-    // every column once, making per-query numbers comparable across
-    // invocation environments (BASELINE.md is recorded with this same
-    // warm-up).
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    graft.sources.Tables.names.foreach { t =>
-      val df = if (t == "events") graft.sources.Tables.events(spark, sfDir)
-               else spark.read.parquet(s"$sfDir/$t.parquet")
-      df.write.mode("overwrite").format("noop").save()
-    }
-    // dev switch: iterate on the skew A/B without re-timing all queries
-    val skewOnly = sys.env.contains("SPARK_GRAFT_SKEW_ONLY")
+    GraftSession.warmUp(spark, sfDir)
 
     def timed(body: => Unit): Either[String, Double] = {
       val t0 = System.nanoTime()
@@ -276,6 +254,11 @@ object Bench {
         Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
       }
     }
+
+    // one A/B row if the name filter keeps it, evaluated in place so the
+    // kept rows interleave exactly as in a full run
+    def row(name: String)(body: => Either[String, Double]): Seq[(String, Either[String, Double])] =
+      if (wanted(name)) Seq(name -> body) else Nil
 
     def toTimings(runs: Seq[(String, Either[String, Double])]): Map[String, Timing] =
       runs.groupBy(_._1).map { case (name, rs) =>
@@ -291,9 +274,9 @@ object Bench {
     // on untouched queries. The calibration probe set runs once per
     // pass (same interleaving) so `calib` reflects the same tenancy the
     // query numbers experienced.
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(wanted)
     val probeRuns = scala.collection.mutable.ArrayBuffer.empty[(String, Either[String, Double])]
-    val results: Map[String, Timing] = if (skewOnly) Map.empty
+    val results: Map[String, Timing] = if (names.isEmpty) Map.empty
     else {
       val runs = (1 to reps).flatMap { _ =>
         probeRefs.foreach { case (pname, _) =>
@@ -316,8 +299,7 @@ object Bench {
       }
       toTimings(runs)
     }
-    val probeTimings: Map[String, Timing] =
-      if (skewOnly) Map.empty else toTimings(probeRuns.toSeq)
+    val probeTimings: Map[String, Timing] = toTimings(probeRuns.toSeq)
     // median-of-ratios: robust to one probe hitting a pathological
     // stall. TRUE median (even-sized lists average the middle pair) —
     // the lower-middle shortcut would systematically understate tenancy
@@ -335,7 +317,8 @@ object Bench {
     // 90% of lineitem lands on one join key; AQE skew-split and
     // broadcast are disabled so the two entries isolate what manual
     // salting (operators.Skew) buys when neither rescue applies.
-    val skewResults: Seq[(String, Timing)] = {
+    val skewResults: Seq[(String, Timing)] =
+      if (!Seq("x01_skew_plain_join", "x02_skew_salted_join").exists(wanted)) Nil else {
       // ×5 row amplification so the hot key's single join task is the
       // measured cost (at sf0.1 the raw table's hot slice is small
       // enough that fixed per-query overhead would drown the signal)
@@ -361,10 +344,10 @@ object Bench {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
       try {
-        val runs = (1 to reps).flatMap { _ => Seq(
-          "x01_skew_plain_join" -> run(large.join(small, Seq("k"))),
-          "x02_skew_salted_join" -> run(graft.operators.Skew.saltedJoin(
-            large, small, "k", col("row_id"), saltBuckets = cpus.toInt)))
+        val runs = (1 to reps).flatMap { _ =>
+          row("x01_skew_plain_join")(run(large.join(small, Seq("k")))) ++
+            row("x02_skew_salted_join")(run(graft.operators.Skew.saltedJoin(
+              large, small, "k", col("row_id"), saltBuckets = cpus)))
         }
         toTimings(runs).toSeq
       } finally {
@@ -380,7 +363,8 @@ object Bench {
     // bucketed write is untimed setup — it amortizes across every
     // downstream co-located join, the same build-once-use-many contract
     // as the IVF index.
-    val bucketResults: Seq[(String, Timing)] = {
+    val bucketResults: Seq[(String, Timing)] =
+      if (!Seq("x03_shuffle_smj", "x04_bucketed_smj").exists(wanted)) Nil else {
       val wh = java.nio.file.Files.createTempDirectory("graft_bench_bucket").toString
       spark.sql("DROP TABLE IF EXISTS bench_b_orders")
       spark.sql("DROP TABLE IF EXISTS bench_b_lineitem")
@@ -389,10 +373,10 @@ object Bench {
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select(col("l_orderkey"), col("l_extendedprice"), col("l_linenumber"))
       o.write.option("path", s"$wh/o")
-        .bucketBy(cpus.toInt, "o_orderkey").sortBy("o_orderkey")
+        .bucketBy(cpus, "o_orderkey").sortBy("o_orderkey")
         .saveAsTable("bench_b_orders")
       li.write.option("path", s"$wh/li")
-        .bucketBy(cpus.toInt, "l_orderkey").sortBy("l_orderkey")
+        .bucketBy(cpus, "l_orderkey").sortBy("l_orderkey")
         .saveAsTable("bench_b_lineitem")
       def run(l: DataFrame, r: DataFrame): Either[String, Double] = timed {
         l.join(r, col("l_orderkey") === col("o_orderkey"))
@@ -403,10 +387,10 @@ object Bench {
       val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try {
-        val runs = (1 to reps).flatMap { _ => Seq(
-          "x03_shuffle_smj" -> run(li, o),
-          "x04_bucketed_smj" -> run(
-            spark.table("bench_b_lineitem"), spark.table("bench_b_orders")))
+        val runs = (1 to reps).flatMap { _ =>
+          row("x03_shuffle_smj")(run(li, o)) ++
+            row("x04_bucketed_smj")(run(
+              spark.table("bench_b_lineitem"), spark.table("bench_b_orders")))
         }
         toTimings(runs).toSeq
       } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
@@ -415,7 +399,7 @@ object Bench {
     // q24's timed entry publishes codebook + assignment (its contract);
     // this entry times the pure k-means computation so the index-BUILD
     // number is comparable round-over-round independent of write cost.
-    val ivfCompute: Seq[(String, Timing)] = if (skewOnly) Seq.empty else {
+    val ivfCompute: Seq[(String, Timing)] = if (!wanted("x05_ivf_compute")) Nil else {
       val runs = (1 to reps).map { _ =>
         val r = timed(graft.operators.Similarity.ivfAssign(spark, sfDir).count())
         GraftSession.releaseQueryCaches(spark)
@@ -483,8 +467,10 @@ object Bench {
     })
     val fullJson =
       s"""{"metric":"total","value":$total,"total_min":${fmt(totalMin)},"value_calibrated":${fmt(totalCal)},"calib":${fmt(calib)},"calib_by_class":$calibByClass,"unit":"sec","queries":${jmap(all.map { case (k, t) => k -> t.median })},"query_min":${jmap(all.map { case (k, t) => k -> t.min })},"queries_class_calibrated":$classCalibrated,"query_class":$queryClassJson,"query_max":${jmap(all.map { case (k, t) => k -> t.max })},"calibration":$calDetail,"errors":$errs,"reps":$reps,"load_before":$load0,"load_after":$load1,"sf":"$sfDir"}"""
-    val fullPath = new java.io.File("BENCH_FULL.json").getAbsolutePath
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath), fullJson + "\n")
+    // the official record comes only from an unfiltered run: a
+    // name-filtered dev timing must never overwrite it
+    if (only.isEmpty)
+      java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_FULL.json"), fullJson + "\n")
     val shortOf = shortKeys(all.map(_._1))
     def shortKey(k: String): String = shortOf(k)
     def fmt2(v: Double): String =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,18 +8,14 @@ object Verify {
     // query-name filter so one new operator can round-trip without
     // re-dumping the whole surface.
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.start(GraftSession.builder(s"local[$cpus]", cpus)
       // never emit INT96: DuckDB decodes INT96 as int64 NANOSECONDS, so a
       // far-future LTZ literal (9999-12-31) overflows and flips the
-      // driver's hash even when every value is correct (round-1 q10/q11)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      // driver's hash even when every value is correct (round-1 q10/q11).
+      // Verify's own key, not the factory's: it would change the files
+      // every other session writes.
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"))
     new java.io.File(outDir).mkdirs()
     // sorted: deterministic run order, and artifact BUILDERS run before
     // their probers (q24 < q32/q35, d03/d07 < d08/d09 alphabetically)

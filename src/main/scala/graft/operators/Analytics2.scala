@@ -492,7 +492,8 @@ object Analytics2 {
     * products taken in the DOUBLE domain (a long·long intermediate
     * wraps silently once counts reach the ~10¹¹-order regime).
     *
-    * Measured (tools.Scratch A/B at sf0.1, identical outputs): the
+    * Measured (SCALE.md §"Retired measurement mains", q53 A/B at
+    * sf0.1, identical outputs): the
     * self-join plan shuffles 1,112,203 records / 11 MiB per run vs
     * 148,737 / 6 MiB here — 7.5× fewer shuffled records. Warm local
     * wall-clock converges (~1.3 s both) because 11 MiB is free on one

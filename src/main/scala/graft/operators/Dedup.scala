@@ -2201,8 +2201,9 @@ object Dedup {
     // plan — no action), or when spark.graft.hot.df is explicitly set
     // (the spec's forced-floor path). Value-neutral either way:
     // salting never changes the pair set, only who computes it.
-    // 12 MB of estimated shingle input (planner stats, probed per sf
-    // with tools.StatsProbe: sf1 wrapped = 4.9 MB, sf3 = 14.4 MB,
+    // 12 MB of estimated shingle input (planner stats per sf, recorded
+    // in SCALE.md §"Round-13 continuation: the hot-key straggler,
+    // salted": sf1 wrapped = 4.9 MB, sf3 = 14.4 MB,
     // sf10 = 47.6 MB) — the hot task's work grows ~n² (occurrences ×
     // prefix hits), so the census turns on from sf3 up while
     // sf0.1/sf1 keep the censusless round-12 plan (the census costs

@@ -54,6 +54,27 @@ object Graph {
   def copurchasePagerank(spark: SparkSession, dir: String): DataFrame =
     copurchasePagerankOf(Tables.lineitem(spark, dir))
 
+  /** q59's SIZE-GATED shuffle-hash hint on the per-round contrib join
+    * (round 15, closing the r14 verdict's q59-at-sf1 question). At
+    * sf0.1 AQE runtime-broadcasts the rank side and the hint pinned a
+    * slower exchange (r14 A/B: 2.0 → 3.0 s — the rejection stands
+    * THERE); at sf1 the rank side outgrows the broadcast threshold,
+    * the per-round join defaults to SMJ re-sorting the edge side, and
+    * the hinted replay read 19.2-21.9 s vs 23.3-30.3 s as-is (3
+    * interleaved reps) — the q63 logic applies from sf1 up. Gates on
+    * the planner's estimate of the distinct (orderkey, partkey)
+    * projection `li` (SCALE.md §"q59 at sf1": sf0.1 = 2.2 MB, sf1 =
+    * 25.7 MB; threshold 12 MB, the containment census gate's scale),
+    * overridable via spark.graft.q59.hint.bytes. Value-neutral: join
+    * strategy only. Returns (estimate in bytes, hint on); GraphSpec
+    * pins the decision per scale factor.
+    */
+  private[graft] def rankJoinHint(li: DataFrame): (BigInt, Boolean) = {
+    val gate = Dedup.confLong(li.sparkSession, "spark.graft.q59.hint.bytes", 12L << 20)
+    val estimate = li.queryExecution.optimizedPlan.stats.sizeInBytes
+    (estimate, estimate > gate)
+  }
+
   private[graft] def copurchasePagerankOf(lineitem: DataFrame): DataFrame = {
     val li = lineitem.select(col("l_orderkey"), col("l_partkey")).distinct()
     // loud width guard BEFORE the per-order self-join: its fan-out is
@@ -72,21 +93,7 @@ object Graph {
       expr(s"$Scale div n").as("r_init"))
     var ranks = deg.crossJoin(broadcast(teleF))
       .select(col("src").as("node"), col("deg"), col("r_init").as("r"))
-    // SIZE-GATED shuffle-hash hint on the per-round contrib join
-    // (round 15, closing the r14 verdict's q59-at-sf1 question). At
-    // sf0.1 AQE runtime-broadcasts the rank side and the hint pinned a
-    // slower exchange (r14 A/B: 2.0 → 3.0 s — the rejection stands
-    // THERE); at sf1 the rank side outgrows the broadcast threshold,
-    // the per-round join defaults to SMJ re-sorting the edge side, and
-    // the hinted replay read 19.2-21.9 s vs 23.3-30.3 s as-is (3
-    // interleaved reps) — the q63 logic applies from sf1 up. Gate on
-    // the planner's estimate of the distinct (orderkey, partkey)
-    // projection (StatsProbe: sf0.1 = 2.2 MB, sf1 = 25.7 MB; threshold
-    // 12 MB, the containment census gate's scale), overridable via
-    // spark.graft.q59.hint.bytes. Value-neutral: join strategy only.
-    val hintGate = graft.operators.Dedup.confLong(lineitem.sparkSession,
-      "spark.graft.q59.hint.bytes", 12L << 20)
-    val hintOn = li.queryExecution.optimizedPlan.stats.sizeInBytes > hintGate
+    val (_, hintOn) = rankJoinHint(li)
     for (_ <- 1 to Iters) {
       val contribs = ranks.select(col("node").as("src"),
         expr("r div deg").as("contrib"))

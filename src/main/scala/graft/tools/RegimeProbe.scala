@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Controlled A/B of the d16 containment verify regimes on the
   * boilerplate-wrapped (d33) corpus: forced CountingJoin vs PairArrays
@@ -17,17 +17,8 @@ object RegimeProbe {
     val reps = args(1).toInt
     val wanted = if (args.length > 2) args.drop(2).toSet
                  else Set("counting", "arrays", "pair")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_SCALE_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SCALE_SHUFFLE", "32").toInt)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("local[32]",
+      sys.env.getOrElse("GRAFT_SCALE_SHUFFLE", "32").toInt)
     import graft.operators.Dedup
     val regimes: Seq[(String, Dedup.VerifyRegime)] = Seq(
       "counting" -> Dedup.CountingJoin,
@@ -39,7 +30,7 @@ object RegimeProbe {
     for (rep <- 1 to reps; (name, reg) <- regimes) {
       val t0 = System.nanoTime()
       val n = Dedup.containmentDedupOfDocs(wrapped, Some(reg)).count()
-      spark.catalog.clearCache()
+      GraftSession.releaseQueryCaches(spark)
       val t = (System.nanoTime() - t0) / 1e9
       val c = Dedup.lastContainmentCensus.get()
       println(f"REGIME $dir $name rep=$rep rows=$n sec=$t%.2f census=$c load=${

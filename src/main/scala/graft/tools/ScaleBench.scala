@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.{GraftSession, SparkEntry}
+
 /** Two-point scaling measurement: run a set of queries at two scale
   * factors (same session, same `local[32]` discipline as Bench) and
   * report, per query, the cold time (rep 1 — includes any artifact
@@ -27,7 +29,7 @@ import org.apache.spark.sql.SparkSession
   *   runMain graft.tools.ScaleBench <reps> <dir>=<sf> <dir>=<sf>... [-- names...]
   * Prints one JSON line (SCALEBENCH ...) consumed by SCALE.md.
   *
-  * `GRAFT_SCALE_MASTER` (default `local[32]`) overrides the master so
+  * `GRAFT_MASTER` (default `local[32]`) overrides the master so
   * the SAME harness measures the other scaling axis — STRONG scaling:
   * fix the data point, vary the core count (`local[4]`, `local[8]`,
   * ...), and the per-query speedup curve shows whether the plans
@@ -49,13 +51,29 @@ object ScaleBench {
     "t16_dsir_weights", "t19_dsir_select_per_source",
     "e10_click_attribution")
 
-  private def warmUp(spark: SparkSession, dir: String): Unit = {
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    graft.sources.Tables.names.foreach { t =>
-      val df = if (t == "events") graft.sources.Tables.events(spark, dir)
-               else spark.read.parquet(s"$dir/$t.parquet")
-      df.write.mode("overwrite").format("noop").save()
-    }
+  /** The solo-rep loop ScaleBench and StrongScale share: warm the
+    * session on `dir`, then time each query alone `reps` times — rep 1
+    * is `cold` (artifact builds and JIT land there), `warm` is the min
+    * of the later reps. Every rep ends with a full
+    * [[GraftSession.releaseQueryCaches]]: a bare `clearCache()` leaves
+    * q61/q63/d35's localCheckpoint blocks behind for the next rep.
+    * Prints `<label> <name> cold=… warm=…` per query and returns
+    * name → (cold, warm).
+    */
+  private[tools] def soloReps(spark: SparkSession, dir: String, names: Seq[String],
+      reps: Int, label: String): Map[String, (Double, Double)] = {
+    GraftSession.warmUp(spark, dir)
+    names.map { name =>
+      val times = (1 to reps).map { _ =>
+        val t0 = System.nanoTime()
+        SparkEntry.queries(name)(spark, dir).count()
+        GraftSession.releaseQueryCaches(spark)
+        (System.nanoTime() - t0) / 1e9
+      }
+      val warm = if (times.size > 1) times.tail.min else times.head
+      println(f"$label $name cold=${times.head}%.3f warm=$warm%.3f")
+      name -> (times.head, warm)
+    }.toMap
   }
 
   def main(args: Array[String]): Unit = {
@@ -67,7 +85,6 @@ object ScaleBench {
     }.sortBy(_._2)
     require(points.size >= 2, "need at least two <dir>=<sf> points")
     val names = if (nameArgs.length > 1) nameArgs.drop(1).toSeq else defaultNames
-    val master = sys.env.getOrElse("GRAFT_SCALE_MASTER", "local[32]")
     // The 32-partition pin is the comparability discipline (same plan
     // at every SF); production scales shuffle partitions with input
     // volume. GRAFT_SCALE_SHUFFLE exists to run the falsification the
@@ -83,22 +100,8 @@ object ScaleBench {
     val shuffleEnv = sys.env.getOrElse("GRAFT_SCALE_SHUFFLE", "32")
     val propMode = shuffleEnv == "prop"
     val shuffle = if (propMode) 32 else shuffleEnv.toInt
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession("local[32]", shuffle)
 
-    // per (dir, query): solo reps, rep1 = cold (artifact builds land
-    // here), warm = min of later reps — the DevBench discipline
     def measure(dir: String): Map[String, (Double, Double)] = {
       if (propMode) {
         val sf = points.find(_._1 == dir).map(_._2).getOrElse(0.1)
@@ -106,18 +109,7 @@ object ScaleBench {
         spark.conf.set("spark.sql.shuffle.partitions", n)
         println(s"SCALECONF $dir shuffle.partitions=$n")
       }
-      warmUp(spark, dir)
-      names.map { name =>
-        val times = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          graft.SparkEntry.queries(name)(spark, dir).count()
-          spark.catalog.clearCache()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val warm = if (times.size > 1) times.tail.min else times.head
-        println(f"SCALETIME $dir $name cold=${times.head}%.3f warm=$warm%.3f")
-        name -> (times.head, warm)
-      }.toMap
+      soloReps(spark, dir, names, reps, s"SCALETIME $dir")
     }
 
     val measured: Seq[((String, Double), Map[String, (Double, Double)])] =

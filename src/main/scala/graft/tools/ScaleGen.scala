@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Scale-factor amplifier for the test corpus: produce an N× dataset
   * from an existing sf directory by replicating every table with
@@ -62,14 +64,7 @@ object ScaleGen {
     // re-emit a single corrected table without rewriting the rest)
     val only = args.drop(3).toSet
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("local[32]")
     import graft.sources.Tables
 
     val orderStride = maxOf(Tables.orders(spark, srcDir), "o_orderkey") + 1

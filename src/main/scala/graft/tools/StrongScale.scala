@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Strong-scaling measurement — the OTHER axis of the cluster claim:
   * fix the data (one sf directory), vary the core count, and report
@@ -41,38 +41,9 @@ object StrongScale {
       else ScaleBench.defaultNames
 
     def measure(c: Int): Map[String, (Double, Double)] = {
-      val spark = SparkSession.builder()
-        .master(s"local[$c]")
-        .config("spark.sql.shuffle.partitions", 32)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.execution.window.WindowExec",
-        org.apache.logging.log4j.Level.ERROR)
-      try {
-        spark.range(1000000).selectExpr("sum(id)").collect()
-        graft.sources.Tables.names.foreach { t =>
-          val df = if (t == "events") graft.sources.Tables.events(spark, sfDir)
-                   else spark.read.parquet(s"$sfDir/$t.parquet")
-          df.write.mode("overwrite").format("noop").save()
-        }
-        names.map { name =>
-          val times = (1 to reps).map { _ =>
-            val t0 = System.nanoTime()
-            graft.SparkEntry.queries(name)(spark, sfDir).count()
-            spark.catalog.clearCache()
-            (System.nanoTime() - t0) / 1e9
-          }
-          val warm = if (times.size > 1) times.tail.min else times.head
-          println(f"STRONGTIME local[$c] $name cold=${times.head}%.3f warm=$warm%.3f")
-          name -> (times.head, warm)
-        }.toMap
-      } finally spark.stop()
+      val spark = GraftSession(s"local[$c]", 32)
+      try ScaleBench.soloReps(spark, sfDir, names, reps, s"STRONGTIME local[$c]")
+      finally spark.stop()
     }
 
     val measured: Seq[(Int, Map[String, (Double, Double)])] =

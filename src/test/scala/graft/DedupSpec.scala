@@ -311,6 +311,12 @@ class DedupSpec extends AnyFunSuite {
     assert(Dedup.lastContainmentRegime.get() ==
       Dedup.chooseVerifyRegime(o2, np, tt, nd),
       "census regime must match the gate's decision for the measured census")
+    // ...and the census itself must be sane, or the check above is
+    // circular (a zeroed tuple would still agree with the gate): the
+    // sparse fixture has candidate pairs and docs, and Σocc² ≥ Σocc
+    // holds for any integer occurrence counts
+    assert(np > 0 && nd > 0 && o2 >= tt,
+      s"census (nPairs=$np, nDocs=$nd, Σocc=$tt, Σocc²=$o2) is not sane")
     val forcedArrays =
       Dedup.containmentDedupOfDocs(docs, Some(Dedup.PairArrays)).collect()
     assert(key(autoReal) == key(forcedArrays) && autoReal.nonEmpty)

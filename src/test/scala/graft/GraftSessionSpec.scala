@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The env-driven session config (settings.py analog): env wins over
@@ -17,6 +19,22 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(conf("spark.sql.session.timeZone") == "UTC")
     assert(!conf.contains("spark.sql.autoBroadcastJoinThreshold"))
     assert(!conf.contains("spark.sql.warehouse.dir"))
+    // Bench's session, GraftSession(s"local[$cpus]", cpus), resolves to
+    // exactly the map Bench built by hand before it moved onto the
+    // factory, plus skewJoin.enabled=true — Spark's own default
+    Seq(8, 32).foreach { cpus =>
+      val benchHandBuilt = Map(
+        "spark.sql.shuffle.partitions" -> cpus.toString,
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+        "spark.sql.session.timeZone" -> "UTC",
+        "spark.ui.enabled" -> "false")
+      val (bm, bconf) = GraftSession.resolvedConfig(s"local[$cpus]", cpus, Map.empty)
+      assert(bm == s"local[$cpus]")
+      assert(bconf == benchHandBuilt + ("spark.sql.adaptive.skewJoin.enabled" -> "true"),
+        s"cpus=$cpus: ${bconf.toSet diff benchHandBuilt.toSet}")
+    }
   }
 
   test("env overrides master, partitions, broadcast threshold, warehouse dir") {
@@ -42,5 +60,18 @@ class GraftSessionSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("GRAFT_SHUFFLE_PARTITIONS"), label)
     }
+  }
+
+  test("GraftSession is the only place in src/main that builds a session") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val stream = java.nio.file.Files.walk(root)
+    val sites = try stream.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filter(p => new String(java.nio.file.Files.readAllBytes(p))
+          .contains("SparkSession.builder()"))
+        .map(p => root.relativize(p).toString).toSeq.sorted
+      finally stream.close()
+    assert(sites == Seq("graft/GraftSession.scala"),
+      s"session built outside GraftSession: ${sites.filterNot(_ == "graft/GraftSession.scala")}")
   }
 }

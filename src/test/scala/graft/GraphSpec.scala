@@ -315,4 +315,24 @@ class GraphSpec extends AnyFunSuite {
       .functions.col("comp_size"))).collect()(0).getLong(0) == 256L)
     spark.catalog.clearCache()
   }
+
+  test("q59's rank-join hint stays off at sf0.01 and sf0.1") {
+    // the sf0.1 A/B kept AQE's runtime broadcast (hint 2.0 → 3.0 s), so
+    // the size gate must not fire below sf1; the estimate is the
+    // planner's, read without running a job
+    def gate(sf: String): (BigInt, Boolean) = {
+      val dir = new java.io.File(TestSpark.sf).getParent + "/" + sf
+      Graph.rankJoinHint(graft.sources.Tables.lineitem(spark, dir)
+        .select(col("l_orderkey"), col("l_partkey")).distinct())
+    }
+    Seq("sf0.01", "sf0.1").foreach { sf =>
+      val (estimate, on) = gate(sf)
+      info(s"$sf: q59 gate input estimate $estimate bytes")
+      assert(!on, s"$sf: estimate $estimate bytes crossed the q59 hint gate")
+    }
+    // the override still moves the decision
+    spark.conf.set("spark.graft.q59.hint.bytes", "0")
+    try assert(gate("sf0.01")._2, "a 0-byte gate must turn the hint on")
+    finally spark.conf.unset("spark.graft.q59.hint.bytes")
+  }
 }
