@@ -434,7 +434,7 @@ object Pipeline {
         "validation gates failed — aborting load (dag: validate_extract)")
     val stats = stageList(spark, sfDir, mode).map { case (name, mkDf) =>
       val t0 = System.nanoTime()
-      val rows = Sinks.stagePublish(mkDf(), s"$outDir/$name")
+      val rows = Sinks.publish(mkDf(), s"$outDir/$name")
       LoadStat(name, rows, (System.nanoTime() - t0) / 1e9)
     }
     if (validateLoadAfter) requireLoadsValid(spark, outDir, stats)
@@ -559,7 +559,7 @@ object Pipeline {
     else {
       onStage("dedup_removals_standing")
       val t2 = System.nanoTime()
-      val remRows = Sinks.stagePublish(
+      val remRows = Sinks.publish(
         Dedup.standingRemovals(spark, indexDir), s"$outDir/dedup_removals_standing")
       stats :+ stat(LoadStat("dedup_removals_standing", remRows,
         (System.nanoTime() - t2) / 1e9))
@@ -640,7 +640,7 @@ object Pipeline {
         setStage(name)
         val t0 = System.nanoTime()
         val rows = withRetries(stageRetries, name) {
-          Sinks.stagePublish(mkDf(), s"$outDir/$name")
+          Sinks.publish(mkDf(), s"$outDir/$name")
         }
         done += LoadStat(name, rows, (System.nanoTime() - t0) / 1e9)
       }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.Money.{m2, out2, outRaw}
-import graft.sources.{Fetch, Tables}
+import graft.sources.{Fetch, Sinks, Tables}
 
 /** Data cleaning, multi-source conforming, and validation gates —
   * the reference's transform-layer hygiene
@@ -118,11 +118,8 @@ object Cleaning {
       fetcher: Fetch.Fetcher = null): DataFrame = {
     // fingerprint-keyed like the other warehouse artifacts: the JSON
     // feed synthesizes once per source generation, not once per query
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = s"${spark.conf.get("spark.sql.warehouse.dir")}/api_products/" +
-      s"src${key}_${Tables.sourceKey(spark, s"$dir/part.parquet")}"
-    val hp = new org.apache.hadoop.fs.Path(path)
-    if (!hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp))
+    val path = Sinks.artifactPath(spark, "api_products", dir, "part.parquet")
+    if (!Sinks.exists(spark, path))
       Tables.part(spark, dir)
         .select(col("p_partkey").as("product_id"),
           struct(
@@ -184,22 +181,17 @@ object Cleaning {
 
   private[graft] def apiCategoryListVia(spark: SparkSession, dir: String,
       fetcher: Fetch.Fetcher): DataFrame = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = s"${spark.conf.get("spark.sql.warehouse.dir")}/api_categories/" +
-      s"src${key}_${Tables.sourceKey(spark, s"$dir/part.parquet")}/categories.json"
+    val path = Sinks.artifactPath(spark, "api_categories", dir, "part.parquet") +
+      "/categories.json"
     val p = Tables.part(spark, dir)
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(hp)) {
+    Sinks.ensureFile(spark, path) {
       val cats = p.select(col("p_type")).distinct()
         .collect().map(_.getString(0)).sorted
       def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
       val entries = cats.zipWithIndex.map { case (c, i) =>
         s"""  {"category_id": ${i + 1}, "category": "${esc(c)}"}"""
       } :+ s"""  {"category_id": ${cats.length + 1}, "category": "DISCONTINUED"}"""
-      val out = fs.create(hp, true)
-      out.write(entries.mkString("[\n", ",\n", "\n]\n").getBytes("UTF-8"))
-      out.close()
+      entries.mkString("[\n", ",\n", "\n]\n")
     }
     val schema = StructType.fromDDL("category_id BIGINT, category STRING")
     // the reference's SECOND REST shape — a top-level JSON array

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Sinks, Tables}
 
 /** Deduplication operator family over the documents corpus — the
   * LLM-training-data cleaning stack:
@@ -159,15 +159,18 @@ object Dedup {
     // differently changes the oracle constants WITH the artifact.
     val (nb, nr) = chosenBanding(spark, dir)
     val path = candidatesPath(spark, dir, nb, nr)
-    graft.sources.Sinks.stagePublish(
-      bandPairs(minhashBandsOf(
-        wordShingles(spark, dir, dedup = false), nb, nr)), path)
+    Sinks.publish(candidatesFrame(spark, dir, nb, nr), path)
     spark.read.parquet(path)
   }
 
+  private def candidatesFrame(spark: SparkSession, dir: String,
+                              nBands: Int, rowsPerBand: Int): DataFrame =
+    bandPairs(minhashBandsOf(
+      wordShingles(spark, dir, dedup = false), nBands, rowsPerBand))
+
   private def candidatesPath(spark: SparkSession, dir: String,
                              nBands: Int, rowsPerBand: Int): String =
-    graft.sources.Sinks.artifactPath(spark, "lsh_candidates", dir) +
+    Sinks.artifactPath(spark, "lsh_candidates", dir) +
       s"_b${nBands}r$rowsPerBand"
 
   /** Published candidate pairs at the CHOSEN banding, building the
@@ -177,11 +180,8 @@ object Dedup {
     */
   private def candidates(spark: SparkSession, dir: String): DataFrame = {
     val (nb, nr) = chosenBanding(spark, dir)
-    val path = candidatesPath(spark, dir, nb, nr)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) minhashLsh(spark, dir)
-    else spark.read.parquet(path)
+    Sinks.ensure(spark, candidatesPath(spark, dir, nb, nr))(
+      candidatesFrame(spark, dir, nb, nr))
   }
 
   /** LSH candidate pairs from a prebuilt (doc_id, shingle) frame — lets
@@ -561,8 +561,8 @@ object Dedup {
 
   def chosenBanding(spark: SparkSession, dir: String): (Int, Int) =
     bandingMemo.computeIfAbsent(
-      graft.sources.Sinks.artifactPath(spark, "band_choice", dir),
-      _ => graft.sources.Sinks.ensureArtifact(spark, "band_choice", dir) {
+      Sinks.artifactPath(spark, "band_choice", dir),
+      p => Sinks.ensure(spark, p) {
         bandRetune(spark, dir).filter(col("is_chosen"))
           .select(col("n_bands"), col("n_rows"))
       }.collect()
@@ -687,28 +687,19 @@ object Dedup {
     * fan-out report and the d17 pair verify probe the same band set.
     * Fingerprint-keyed to the source so regenerated data invalidates.
     */
-  private def simhashBandsPath(spark: SparkSession, dir: String): String = {
-    val dirKey = dir.replaceAll("[^A-Za-z0-9._-]", "_")
+  private def simhashBandsPath(spark: SparkSession, dir: String): String =
     // "v1": fingerprint FORMAT version — this round already changed the
     // algorithm once (16→64 bits); without a version component in the
     // key, the next change would silently serve stale persisted bands
     // to d17 (the failure mode the IVF index key's v1→v3 bumps exist
-    // to prevent, see Similarity.indexKey)
-    s"${spark.conf.get("spark.sql.warehouse.dir")}/simhash_bands/" +
-      s"v1src${dirKey}_${Tables.sourceKey(spark, s"$dir/documents.parquet")}"
-  }
+    // to prevent, see Similarity.indexArtifact)
+    Sinks.artifactPath(spark, "simhash_bands", dir, tag = "v1")
 
   /** Published band table, building the artifact iff missing (a fresh
     * session running d17 standalone).
     */
-  private[graft] def bandsArtifact(spark: SparkSession, dir: String): DataFrame = {
-    val path = simhashBandsPath(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p))
-      graft.sources.Sinks.stagePublish(simhashBands(spark, dir), path)
-    spark.read.parquet(path)
-  }
+  private[graft] def bandsArtifact(spark: SparkSession, dir: String): DataFrame =
+    Sinks.ensure(spark, simhashBandsPath(spark, dir))(simhashBands(spark, dir))
 
   /** d04 entry: fingerprint the corpus, PUBLISH the band table
     * (stage-then-swap, like d03's candidate pairs), and report per doc
@@ -722,7 +713,7 @@ object Dedup {
     */
   def simhash(spark: SparkSession, dir: String): DataFrame = {
     val path = simhashBandsPath(spark, dir)
-    graft.sources.Sinks.stagePublish(simhashBands(spark, dir), path)
+    Sinks.publish(simhashBands(spark, dir), path)
     val sh = spark.read.parquet(path)
     val grid = sh.groupBy(col("band0"), col("band1"), col("band2"), col("band3"))
       .agg(count(lit(1)).as("c"))
@@ -780,11 +771,8 @@ object Dedup {
     * verified-pair ladder so downstream consumers (d20 survivorship)
     * read the verified result instead of re-running the banded join.
     */
-  private def simhashPairsPath(spark: SparkSession, dir: String): String = {
-    val dirKey = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${spark.conf.get("spark.sql.warehouse.dir")}/simhash_pairs/" +
-      s"v1src${dirKey}_${Tables.sourceKey(spark, s"$dir/documents.parquet")}"
-  }
+  private def simhashPairsPath(spark: SparkSession, dir: String): String =
+    Sinks.artifactPath(spark, "simhash_pairs", dir, tag = "v1")
 
   /** d17 entry: band-blocked, hamming-verified pair report — AND its
     * publisher (the d03/d07 build-once contract applied to the SimHash
@@ -793,20 +781,16 @@ object Dedup {
     */
   def simhashPairs(spark: SparkSession, dir: String): DataFrame = {
     val path = simhashPairsPath(spark, dir)
-    graft.sources.Sinks.stagePublish(
-      simhashPairsFrom(bandsArtifact(spark, dir)), path)
+    Sinks.publish(simhashPairsFrom(bandsArtifact(spark, dir)), path)
     spark.read.parquet(path)
   }
 
   /** Published pair report, building iff missing (a fresh session
     * running d20 standalone).
     */
-  private def simhashPairsArtifact(spark: SparkSession, dir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(simhashPairsPath(spark, dir))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) simhashPairs(spark, dir)
-    else spark.read.parquet(simhashPairsPath(spark, dir))
-  }
+  private def simhashPairsArtifact(spark: SparkSession, dir: String): DataFrame =
+    Sinks.ensure(spark, simhashPairsPath(spark, dir))(
+      simhashPairsFrom(bandsArtifact(spark, dir)))
 
   // ─── d20 SimHash-route dedup survivorship ────────────────────────────
   /** The d07 survivorship rollup over the SIMHASH near-dup route: for
@@ -920,48 +904,41 @@ object Dedup {
     * had just run. Fingerprint-keyed to the source like the candidates.
     */
   private def verifiedPath(spark: SparkSession, dir: String,
-                           nBands: Int, rowsPerBand: Int): String = {
-    val dirKey = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${spark.conf.get("spark.sql.warehouse.dir")}/verified_pairs/" +
-      s"src${dirKey}_${Tables.sourceKey(spark, s"$dir/documents.parquet")}" +
+                           nBands: Int, rowsPerBand: Int): String =
+    Sinks.artifactPath(spark, "verified_pairs", dir) +
       s"_b${nBands}r$rowsPerBand" // derived from the candidates: same key rule
-  }
 
-  /** Build + publish the verified-pair artifact: candidate pairs (their
-    * artifact, build-if-missing, at the chosen banding) → exact Jaccard
-    * on the candidate slice → pairs with jaccard ≥ 0.5, stage-published.
-    * Carries the whole verification cost; returns the published frame.
+  /** The verified-pair artifact: candidate pairs (their artifact,
+    * build-if-missing, at the chosen banding) → exact Jaccard on the
+    * candidate slice → pairs with jaccard ≥ 0.5. `republish` replaces
+    * the artifact (d07 carries the whole verification cost); otherwise
+    * it is built iff missing (a fresh session running d08/d09
+    * standalone, or a changed banding decision — the banding keys this
+    * path like the candidates'). Returns the published frame; the
+    * build's persisted intermediates are released once it is written.
     */
-  private def buildVerified(spark: SparkSession, dir: String): DataFrame = {
-    val (nb, nr) = chosenBanding(spark, dir)
-    val cand = candidates(spark, dir).persist()
-    val (verified, shSets) = verifyPairs(spark, dir, cand, minJaccard = 0.5)
-    val path = verifiedPath(spark, dir, nb, nr)
-    graft.sources.Sinks.stagePublish(
-      verified.select(col("doc_a"), col("doc_b"), col("jaccard")), path)
-    cand.unpersist(false)
-    shSets.unpersist(false)
-    spark.read.parquet(path)
-  }
-
-  /** Published verified pairs, building the artifact iff missing (a
-    * fresh session running d08/d09 standalone, or a changed banding
-    * decision — the banding keys this path like the candidates').
-    */
-  private def verifiedPairsArtifact(spark: SparkSession, dir: String): DataFrame = {
+  private def verifiedPairsArtifact(spark: SparkSession, dir: String,
+                                    republish: Boolean = false): DataFrame = {
     val (nb, nr) = chosenBanding(spark, dir)
     val path = verifiedPath(spark, dir, nb, nr)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) buildVerified(spark, dir)
-    else spark.read.parquet(path)
+    var held = Seq.empty[DataFrame]
+    def build: DataFrame = {
+      val cand = candidates(spark, dir).persist()
+      val (verified, shSets) = verifyPairs(spark, dir, cand, minJaccard = 0.5)
+      held = Seq(cand, shSets)
+      verified.select(col("doc_a"), col("doc_b"), col("jaccard"))
+    }
+    try {
+      if (republish) { Sinks.publish(build, path); spark.read.parquet(path) }
+      else Sinks.ensure(spark, path)(build)
+    } finally held.foreach(_.unpersist(false))
   }
 
   def dedupPipeline(spark: SparkSession, dir: String): DataFrame = {
     // d07 CARRIES the verification build (always re-verifies and
     // republishes, like d03 for candidates and q24 for the IVF index);
     // the survivorship rollup is then a pure aggregation of the artifact
-    val verified = buildVerified(spark, dir)
+    val verified = verifiedPairsArtifact(spark, dir, republish = true)
     verified.groupBy(col("doc_b").as("removed_doc_id"))
       .agg(
         min(col("doc_a")).as("kept_partner"),
@@ -1036,7 +1013,7 @@ object Dedup {
     // the verify stage persists its per-doc shingle arrays (they feed
     // both join sides); the report is tiny, so materialize it eagerly
     // and release the intermediate before returning — the
-    // buildVerified discipline, without an artifact write
+    // verifiedPairsArtifact discipline, without an artifact write
     val out = report.localCheckpoint()
     shSets.unpersist(false)
     out
@@ -1126,12 +1103,9 @@ object Dedup {
     * deployment keys this by corpus snapshot.
     */
   private def corpusBandsPath(spark: SparkSession, dir: String,
-                              nBands: Int, rowsPerBand: Int): String = {
-    val dirKey = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${spark.conf.get("spark.sql.warehouse.dir")}/lsh_bands/" +
-      s"holdout5src${dirKey}_${Tables.sourceKey(spark, s"$dir/documents.parquet")}" +
+                              nBands: Int, rowsPerBand: Int): String =
+    Sinks.artifactPath(spark, "lsh_bands", dir, tag = "holdout5") +
       s"_b${nBands}r$rowsPerBand"
-  }
 
   /** Shingle-array sibling of [[corpusBandsPath]] — the standing
     * index's THIRD artifact tier (bands → pairs → verification
@@ -1139,11 +1113,8 @@ object Dedup {
     * each arriving shard's exact verification reads arrays instead of
     * re-exploding corpus text.
     */
-  private def corpusSetsPath(spark: SparkSession, dir: String): String = {
-    val dirKey = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${spark.conf.get("spark.sql.warehouse.dir")}/shingle_sets/" +
-      s"holdout5src${dirKey}_${Tables.sourceKey(spark, s"$dir/documents.parquet")}"
-  }
+  private def corpusSetsPath(spark: SparkSession, dir: String): String =
+    Sinks.artifactPath(spark, "shingle_sets", dir, tag = "holdout5")
 
   /** d19 entry: split the documents table into a standing corpus
     * (doc_id % 5 ≠ 4) and an arriving shard (doc_id % 5 = 4), publish
@@ -1159,22 +1130,15 @@ object Dedup {
     val isShard = pmod(col("doc_id"), lit(5L)) === 4
     val corpus = docs.filter(!isShard)
     val shard = docs.filter(isShard)
-    val conf = spark.sessionState.newHadoopConf()
     // the standing band index follows the d26 decision, like the d03
     // candidates (banding-keyed path: a changed decision is a fresh
     // index build, never a mixed-banding probe)
     val (nb, nr) = chosenBanding(spark, dir)
-    val bandsP = corpusBandsPath(spark, dir, nb, nr)
-    if (!new org.apache.hadoop.fs.Path(bandsP).getFileSystem(conf)
-          .exists(new org.apache.hadoop.fs.Path(bandsP)))
-      graft.sources.Sinks.stagePublish(
-        minhashBandsOf(wordShinglesOf(corpus, dedup = false), nb, nr), bandsP)
-    val setsP = corpusSetsPath(spark, dir)
-    if (!new org.apache.hadoop.fs.Path(setsP).getFileSystem(conf)
-          .exists(new org.apache.hadoop.fs.Path(setsP)))
-      graft.sources.Sinks.stagePublish(shingleSetsOf(corpus), setsP)
-    shardProbe(corpus, shard, spark.read.parquet(bandsP),
-      Some(spark.read.parquet(setsP)), banding = (nb, nr))
+    val bands = Sinks.ensure(spark, corpusBandsPath(spark, dir, nb, nr))(
+      minhashBandsOf(wordShinglesOf(corpus, dedup = false), nb, nr))
+    val sets = Sinks.ensure(spark, corpusSetsPath(spark, dir))(
+      shingleSetsOf(corpus))
+    shardProbe(corpus, shard, bands, Some(sets), banding = (nb, nr))
   }
 
   // ─── growing-index shard ingest (the composed daily-DAG primitive) ───
@@ -1194,7 +1158,7 @@ object Dedup {
     * The probe reads every published shard partition EXCEPT the
     * shard's own (a retry must not probe against its own previous
     * publish), so RE-RUNNING a tick is idempotent: it overwrites only
-    * its own three partitions (Sinks.stagePublish swap), and the
+    * its own three partitions (Sinks.publish swap), and the
     * union of removal ids over all published reports stays EXACTLY
     * the full-rebuild removal set — every unordered near-dup pair is
     * discovered at the ingest of its LATER shard (same-shard pairs at
@@ -1225,7 +1189,7 @@ object Dedup {
   }
 
   /** The growing index's banding, pinned at creation: the first ingest
-    * writes `<indexDir>/_banding` (atomic create-then-rename) and every
+    * claims `<indexDir>/_banding` ([[Sinks.ensureFile]]) and every
     * later tick reads it — band rows of different (b, r) never
     * bucket-collide, so an index MUST keep one banding for its whole
     * life even if the d26 decision changes underneath (a re-decision
@@ -1235,30 +1199,10 @@ object Dedup {
     */
   private def indexBanding(spark: SparkSession, indexDir: String,
                            creation: (Int, Int)): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/_banding")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      try {
-        val Array(b, r) = scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString.trim.split(" ")
-        (b.toInt, r.toInt)
-      } finally in.close()
-    } else {
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$indexDir/_banding_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-      val out = fs.create(tmp, true)
-      try out.write(s"${creation._1} ${creation._2}".getBytes("UTF-8"))
-      finally out.close()
-      if (!fs.rename(tmp, p)) fs.delete(tmp, true) // concurrent creator won
-      // re-read: whoever won the rename defines the index's banding
-      val in = fs.open(p)
-      try {
-        val Array(b, r) = scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString.trim.split(" ")
-        (b.toInt, r.toInt)
-      } finally in.close()
-    }
+    // whoever claimed the file first defines the index's banding
+    val Array(b, r) = Sinks.ensureFile(spark, s"$indexDir/_banding")(
+      s"${creation._1} ${creation._2}").trim.split(" ")
+    (b.toInt, r.toInt)
   }
 
   /** Shard-frame core of [[shardIngest]]: probe an ARBITRARY shard
@@ -1273,17 +1217,10 @@ object Dedup {
                                      shardKey: String,
                                      creationBanding: (Int, Int) = (6, 3)): DataFrame = {
     val spark = shard.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
     val (nb, nr) = indexBanding(spark, indexDir, creationBanding)
-    val bandsDir = new org.apache.hadoop.fs.Path(s"$indexDir/bands")
-    val fs = bandsDir.getFileSystem(conf)
     // published shards = the shard=<key> partitions already on disk,
     // minus this tick's own (retry semantics)
-    val published: Seq[String] =
-      if (!fs.exists(bandsDir)) Seq.empty
-      else fs.listStatus(bandsDir).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("shard=")).map(_.stripPrefix("shard="))
-        .filter(_ != shardKey).sorted
+    val published = Sinks.shardKeys(spark, s"$indexDir/bands").filter(_ != shardKey)
     val emptyDocs = shard.filter(lit(false))
     val standingBands =
       if (published.isEmpty)
@@ -1314,21 +1251,9 @@ object Dedup {
     // concurrent consumers read cached blocks instead of racing to
     // compute the same partitions twice.
     shardSh.write.mode("overwrite").format("noop").save()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      Seq(
-        scala.concurrent.Future { graft.sources.Sinks.stagePublish(
-          minhashBandsOf(shardSh, nb, nr), bandsP): Unit },
-        scala.concurrent.Future { graft.sources.Sinks.stagePublish(
-          shingleSetsFrom(shardSh), setsP): Unit })
-        .foreach(scala.concurrent.Await.result(_,
-          scala.concurrent.duration.Duration.Inf))
-    } finally {
-      pool.shutdownNow()
-      pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS): Unit
-    }
+    Sinks.concurrently(
+      () => Sinks.publish(minhashBandsOf(shardSh, nb, nr), bandsP),
+      () => Sinks.publish(shingleSetsFrom(shardSh), setsP))
     shardSh.unpersist(false)
     // the report publishes straight from the LAZY probe frame — the
     // publish's write job is the report's one materialization (the
@@ -1341,7 +1266,7 @@ object Dedup {
       shardPrebuilt = Some((spark.read.parquet(bandsP), spark.read.parquet(setsP))),
       banding = (nb, nr))
     val removalsP = s"$indexDir/removals/shard=$shardKey"
-    graft.sources.Sinks.stagePublish(flagged, removalsP)
+    Sinks.publish(flagged, removalsP)
     shSets.unpersist(false)
     spark.read.parquet(removalsP)
   }
@@ -1367,23 +1292,18 @@ object Dedup {
     * don't compact concurrently with an ingest tick.
     */
   def compactIndex(spark: SparkSession, indexDir: String): Int = {
-    val conf = spark.sessionState.newHadoopConf()
-    val bandsDir = new org.apache.hadoop.fs.Path(s"$indexDir/bands")
-    val fs = bandsDir.getFileSystem(conf)
-    if (!fs.exists(bandsDir)) return 0
-    val keys = fs.listStatus(bandsDir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("shard=")).map(_.stripPrefix("shard="))
+    val keys = Sinks.shardKeys(spark, s"$indexDir/bands")
     if (keys.size <= 1) return 0
     val gen = 1 + keys.filter(_.matches("c[0-9]+")).map(_.tail.toInt)
       .foldLeft(-1)(math.max)
     val target = s"c$gen"
-    graft.sources.Sinks.stagePublish(
+    Sinks.publish(
       spark.read.parquet(keys.map(k => s"$indexDir/bands/shard=$k"): _*),
       s"$indexDir/bands/shard=$target")
-    graft.sources.Sinks.stagePublish(
+    Sinks.publish(
       spark.read.parquet(keys.map(k => s"$indexDir/sets/shard=$k"): _*),
       s"$indexDir/sets/shard=$target")
-    graft.sources.Sinks.stagePublish(
+    Sinks.publish(
       spark.read.parquet(keys.map(k => s"$indexDir/removals/shard=$k"): _*)
         .groupBy(col("removed_doc_id"))
         .agg(min(col("kept_partner")).as("kept_partner"),
@@ -1392,6 +1312,8 @@ object Dedup {
           max(col("is_shard_doc")).as("is_shard_doc")),
       s"$indexDir/removals/shard=$target")
     // sources go only after all three consolidated tiers are live
+    val fs = new org.apache.hadoop.fs.Path(indexDir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     keys.foreach { k =>
       Seq("bands", "sets", "removals").foreach { tier =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$tier/shard=$k"), true)
@@ -1407,12 +1329,9 @@ object Dedup {
     * way d07 collapses pairs).
     */
   def standingRemovals(spark: SparkSession, indexDir: String): DataFrame = {
-    val remDir = new org.apache.hadoop.fs.Path(s"$indexDir/removals")
-    val fs = remDir.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(remDir), s"no shard removals published under $indexDir")
-    val parts = fs.listStatus(remDir).toSeq.map(_.getPath.toString)
-      .filter(_.contains("shard="))
-    spark.read.parquet(parts: _*)
+    val keys = Sinks.shardKeys(spark, s"$indexDir/removals")
+    require(keys.nonEmpty, s"no shard removals published under $indexDir")
+    spark.read.parquet(keys.map(k => s"$indexDir/removals/shard=$k"): _*)
       .groupBy(col("removed_doc_id"))
       .agg(min(col("kept_partner")).as("kept_partner"),
         max(col("max_jaccard")).as("max_jaccard"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Sinks, Tables}
 
 /** Fact-table build (/root/reference/etl/transform.py:346-386): the
   * cleaned transactional grain joined to dimension surrogate keys, with
@@ -141,12 +141,13 @@ object Facts {
     // load's commit renames (observed: FileNotFoundException on a
     // month dir that vanished between the root enumeration and the
     // child listing). Each load therefore writes its slice to a
-    // PRIVATE staging root — its own committer, its own _temporary,
-    // full overlap for the expensive fact-join compute — and only the
-    // cheap driver-side partition-dir swap plus the read-back validate
-    // run under a per-target lock. Values are identical:
-    // delete-then-rename per partition dir IS dynamic overwrite's
-    // commit, performed serially.
+    // PRIVATE staging root (a hidden sibling of the table) — its own
+    // committer, its own _temporary, full overlap for the expensive
+    // fact-join compute — and only the cheap driver-side partition-dir
+    // swap plus the read-back validate run under a per-target lock.
+    // Values are identical: replacing each partition dir (Sinks.swap:
+    // old aside, new in, old deleted) IS dynamic overwrite's commit,
+    // performed serially.
     //
     // repartition on the partition column before the write: without it
     // every one of the write's tasks holds rows of every month and the
@@ -156,8 +157,7 @@ object Facts {
     // count, and co-locating each partition's rows is how.
     val target = new org.apache.hadoop.fs.Path(outPath)
     val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-    val staging = new org.apache.hadoop.fs.Path(
-      s"${outPath}_load_staging_${java.util.UUID.randomUUID().toString.take(8)}")
+    val staging = Sinks.hiddenSibling(outPath)
     val partitionPred =
       if (grain == "month")
         col("month_key").between(fromKey / 100, toKey / 100) &&
@@ -168,17 +168,12 @@ object Facts {
       slice.repartition(col(partCol))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy(partCol)
-        .parquet(staging.toString)
+        .parquet(staging)
       commitLocks.computeIfAbsent(outPath, _ => new Object).synchronized {
-        val parts = fs.listStatus(staging)
-          .filter(_.getPath.getName.startsWith(s"$partCol="))
         fs.mkdirs(target)
-        parts.foreach { st =>
-          val tgt = new org.apache.hadoop.fs.Path(target, st.getPath.getName)
-          if (fs.exists(tgt)) fs.delete(tgt, true)
-          require(fs.rename(st.getPath, tgt),
-            s"incremental-load commit: rename to $tgt failed")
-        }
+        fs.listStatus(new org.apache.hadoop.fs.Path(staging))
+          .map(_.getPath.getName).filter(_.startsWith(s"$partCol="))
+          .foreach(n => Sinks.swap(spark, s"$staging/$n", s"$outPath/$n"))
         // _SUCCESS parity with the former direct write: an EMPTY slice
         // is legal daily-DAG input (a day with no orders — it swaps no
         // partitions), and the explicit schema keeps the read-back
@@ -195,7 +190,7 @@ object Facts {
         spark.read.schema(slice.schema).parquet(outPath)
           .filter(partitionPred).count()
       }
-    } finally { fs.delete(staging, true): Unit }
+    } finally { fs.delete(new org.apache.hadoop.fs.Path(staging), true): Unit }
   }
 
   /** Per-target commit lock for [[loadFactIncrement]]: concurrent
@@ -210,11 +205,8 @@ object Facts {
     * keyed to the orders source (like the LSH/IVF artifacts) so
     * regenerated data can't leave stale month partitions behind.
     */
-  private def factIncPath(spark: SparkSession, dir: String): String = {
-    val dirKey = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${spark.conf.get("spark.sql.warehouse.dir")}/fact_sales_inc/" +
-      s"src${dirKey}_${Tables.sourceKey(spark, s"$dir/orders.parquet")}"
-  }
+  private def factIncPath(spark: SparkSession, dir: String): String =
+    Sinks.artifactPath(spark, "fact_sales_inc", dir, "orders.parquet")
 
   /** q47 entry: build the fact warehouse INCREMENTALLY — two fixed
     * calendar slices covering the synthetic corpus's whole date span
@@ -239,18 +231,11 @@ object Facts {
     // SEQUENTIAL by design — it is the idempotent RE-RUN of a
     // sub-slice of load 2, which only demonstrates anything after
     // load 2 committed.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      Seq((0L, 19981231L), (19990101L, 99999999L))
-        .map { case (a, b) => scala.concurrent.Future {
-          spark.sparkContext.setJobDescription(s"q47 load [$a,$b]")
-          loadFactIncrement(spark, dir, out, a, b)
-        }}
-        .foreach(scala.concurrent.Await.result(_,
-          scala.concurrent.duration.Duration.Inf))
-    } finally pool.shutdown()
+    Sinks.concurrently(Seq((0L, 19981231L), (19990101L, 99999999L))
+      .map { case (a, b) => () => {
+        spark.sparkContext.setJobDescription(s"q47 load [$a,$b]")
+        loadFactIncrement(spark, dir, out, a, b)
+      }}: _*)
     // idempotent re-run of a SUB-slice of an already-loaded range —
     // the backfill case: the date filter prunes the rebuild to the
     // year's rows and dynamic overwrite rewrites only its months

@@ -79,7 +79,7 @@ object Scd2 {
 
   /** MERGE-shaped write: read the dimension at `path`, [[merge]] the
     * incoming batch into it, and publish the result back to the same
-    * path. The staging-then-swap write (Sinks.stagePublish) fully
+    * path. The staging-then-swap write (Sinks.publish) fully
     * materializes the merged plan BEFORE the target is overwritten —
     * Spark cannot safely overwrite a path a lazy plan is still reading.
     * Returns the merged row count. This is the reference's
@@ -91,6 +91,6 @@ object Scd2 {
                 farFuture: Column = lit("9999-12-31 00:00:00").cast("timestamp_ntz")): Long = {
     val existing = spark.read.parquet(path)
     val merged = merge(existing, incoming, key, mergeTs, farFuture)
-    graft.sources.Sinks.stagePublish(merged, path)
+    graft.sources.Sinks.publish(merged, path)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
-import graft.sources.Tables
+import graft.sources.{Sinks, Tables}
 
 /** Similarity search over the embedding corpus:
   *
@@ -340,16 +340,15 @@ object Similarity {
     * (the round-2 q32 shape) made the "scan-reduction payoff" cost more
     * than the brute-force baseline.
     */
-  /** Index cache key: sanitized source dir + size/mtime fingerprint of
-    * the embeddings file, so a REGENERATED source invalidates the
-    * persisted index automatically (a stale index would silently serve
-    * assignments for data that no longer exists).
+  /** Index artifact `family` of `dir`, keyed by the embeddings file's
+    * fingerprint (Sinks.artifactKey), so a REGENERATED source
+    * invalidates the persisted index automatically (a stale index would
+    * silently serve assignments for data that no longer exists).
+    * `tag` prefixes the key (a split spec or a dependent tier's
+    * version).
     */
-  private def indexKey(spark: SparkSession, dir: String): String = {
-    val dirKey = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    // "src" prefix: a sanitized absolute path starts with "_", and
-    // underscore-prefixed paths are "hidden" to Spark's file listing
-    // (directly-addressed reads still work, but only via an exemption).
+  private def indexArtifact(spark: SparkSession, family: String, dir: String,
+                            tag: String = ""): String =
     // "v3": index FORMAT version — v3 seeds the codebook by hash-spread
     // mod-k buckets (v2 seeded from vec_id < 16; v1 was the 3-pass
     // build); the version bump invalidates older indexes the source
@@ -357,11 +356,10 @@ object Similarity {
     // key: a corpus has ONE active index (a rebuild with a new k
     // replaces it, the production deployment contract), and searchers
     // read k from the published codebook rather than assuming one.
-    s"v3src${dirKey}_${Tables.sourceKey(spark, s"$dir/embeddings.parquet")}"
-  }
+    Sinks.artifactPath(spark, family, dir, "embeddings.parquet", s"${tag}v3")
 
   private def indexPath(spark: SparkSession, dir: String): String =
-    s"${spark.conf.get("spark.sql.warehouse.dir")}/ivf_index/${indexKey(spark, dir)}"
+    indexArtifact(spark, "ivf_index", dir)
 
   /** Codebook sibling of [[indexPath]]: the 16 centroid embeddings.
     * Search stages with nprobe > 1 rank cells by cosine to these —
@@ -369,12 +367,7 @@ object Similarity {
     * query.
     */
   private def codebookPath(spark: SparkSession, dir: String): String =
-    s"${spark.conf.get("spark.sql.warehouse.dir")}/ivf_codebook/${indexKey(spark, dir)}"
-
-  private def indexExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
+    indexArtifact(spark, "ivf_codebook", dir)
 
   /** q24 entry: run the k-means build ([[ivfAssign]]) and PERSIST the
     * result as the IVF index (stage-then-swap, same pattern as
@@ -406,8 +399,8 @@ object Similarity {
     // the caller's session.
     a2.persist()
     try {
-      graft.sources.Sinks.stagePublish(c2, cbPath)
-      graft.sources.Sinks.stagePublish(assignmentFrom(a2), idxPath)
+      Sinks.publish(c2, cbPath)
+      Sinks.publish(assignmentFrom(a2), idxPath)
     } finally a2.unpersist(false)
   }
 
@@ -415,8 +408,7 @@ object Similarity {
     * session running a search stage standalone).
     */
   private def ensureIndex(spark: SparkSession, dir: String): Unit =
-    if (!indexExists(spark, indexPath(spark, dir)) ||
-        !indexExists(spark, codebookPath(spark, dir)))
+    if (!Sinks.exists(spark, indexPath(spark, dir), codebookPath(spark, dir)))
       ivfBuild(spark, dir)
 
   // ─── semantic-family adaptive index (d22/d23) ────────────────────────
@@ -440,9 +432,9 @@ object Similarity {
     * d22/d23 share one build across calls and sessions.
     */
   def semanticIndex(spark: SparkSession, dir: String): DataFrame = {
-    val idx = s"${spark.conf.get("spark.sql.warehouse.dir")}/ivf_index_sem/${indexKey(spark, dir)}"
-    val cb = s"${spark.conf.get("spark.sql.warehouse.dir")}/ivf_codebook_sem/${indexKey(spark, dir)}"
-    if (!indexExists(spark, idx) || !indexExists(spark, cb)) {
+    val idx = indexArtifact(spark, "ivf_index_sem", dir)
+    val cb = indexArtifact(spark, "ivf_codebook_sem", dir)
+    if (!Sinks.exists(spark, idx, cb)) {
       val e = corpusEmb(spark, dir)
       publishIndex(e, adaptiveCells(e.count()), idx, cb)
     }
@@ -806,16 +798,16 @@ object Similarity {
   def ivfAppend(spark: SparkSession, dir: String): DataFrame = {
     val e = corpusEmb(spark, dir)
     val isNew = pmod(col("vec_id"), lit(5L)) === 4
-    val ip = s"${spark.conf.get("spark.sql.warehouse.dir")}/ivf_index/holdout5${indexKey(spark, dir)}"
-    val cp = s"${spark.conf.get("spark.sql.warehouse.dir")}/ivf_codebook/holdout5${indexKey(spark, dir)}"
-    if (!indexExists(spark, ip) || !indexExists(spark, cp)) {
+    val ip = indexArtifact(spark, "ivf_index", dir, "holdout5")
+    val cp = indexArtifact(spark, "ivf_codebook", dir, "holdout5")
+    if (!Sinks.exists(spark, ip, cp)) {
       val (c2, a2) = ivfModel(e.filter(!isNew), defaultCells)
       a2.persist()
       try {
-        graft.sources.Sinks.stagePublish(c2, cp)
+        Sinks.publish(c2, cp)
         // no cell_size column here: sizes are a property of the SERVED
         // union, recomputed below, not of the frozen standing artifact
-        graft.sources.Sinks.stagePublish(
+        Sinks.publish(
           a2.select(col("vec_id"), col("centroid_id"),
             col("cos_r").as("cos_to_centroid")), ip)
       } finally a2.unpersist(false)
@@ -875,21 +867,12 @@ object Similarity {
   private[graft] def vecIngestCore(shard: DataFrame, indexDir: String,
                                    shardKey: String): DataFrame = {
     val spark = shard.sparkSession
-    val cbPath = s"$indexDir/codebook"
+    val book = Sinks.ensure(spark, s"$indexDir/codebook")(
+      ivfModel(shard, defaultCells)._1)
     val outPath = s"$indexDir/assign/shard=$shardKey"
-    if (!indexExists(spark, cbPath)) {
-      val (c2, _) = ivfModel(shard, defaultCells)
-      graft.sources.Sinks.stagePublish(c2, cbPath)
-      val book = spark.read.parquet(cbPath)
-      graft.sources.Sinks.stagePublish(
-        assignTo(shard, book).select(col("vec_id"), col("centroid_id"),
-          col("cos_r").as("cos_to_centroid")), outPath)
-    } else {
-      val book = spark.read.parquet(cbPath)
-      graft.sources.Sinks.stagePublish(
-        assignTo(shard, book).select(col("vec_id"), col("centroid_id"),
-          col("cos_r").as("cos_to_centroid")), outPath)
-    }
+    Sinks.publish(
+      assignTo(shard, book).select(col("vec_id"), col("centroid_id"),
+        col("cos_r").as("cos_to_centroid")), outPath)
     spark.read.parquet(outPath)
   }
 
@@ -898,12 +881,9 @@ object Similarity {
     * (sizes are a property of the SERVED set, not of any one tick).
     */
   def vecStandingIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    val assignDir = new org.apache.hadoop.fs.Path(s"$indexDir/assign")
-    val fs = assignDir.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(assignDir), s"no vector shards published under $indexDir")
-    val parts = fs.listStatus(assignDir).toSeq.map(_.getPath.toString)
-      .filter(_.contains("shard="))
-    val union = spark.read.parquet(parts: _*)
+    val keys = Sinks.shardKeys(spark, s"$indexDir/assign")
+    require(keys.nonEmpty, s"no vector shards published under $indexDir")
+    val union = spark.read.parquet(keys.map(k => s"$indexDir/assign/shard=$k"): _*)
     val sizes = union.groupBy(col("centroid_id")).agg(count(lit(1)).as("cell_size"))
     union.join(broadcast(sizes), Seq("centroid_id"))
       .select(col("vec_id"), col("centroid_id"), col("cos_to_centroid"),
@@ -1217,9 +1197,8 @@ object Similarity {
     */
   private def pqPaths(spark: SparkSession, dir: String): (String, String) = {
     val k = spark.read.parquet(codebookPath(spark, dir)).count()
-    val key = s"v1pq_k${k}_${indexKey(spark, dir)}"
-    (s"${spark.conf.get("spark.sql.warehouse.dir")}/pq_codebook/$key",
-      s"${spark.conf.get("spark.sql.warehouse.dir")}/pq_codes/$key")
+    (indexArtifact(spark, "pq_codebook", dir, s"v1pq_k${k}_"),
+      indexArtifact(spark, "pq_codes", dir, s"v1pq_k${k}_"))
   }
 
   /** Build + publish the PQ tier (sub-codebooks and per-vector codes)
@@ -1237,11 +1216,11 @@ object Similarity {
     try {
       val s0 = pqSeeds(subs)
       val b = pqMeansFrom(pqAssignTo(subs, s0), s0)
-      graft.sources.Sinks.stagePublish(b, bookPath)
+      Sinks.publish(b, bookPath)
       val book = spark.read.parquet(bookPath)
       val codes = pqAssignTo(subs, book)
         .select(col("vec_id"), col("m"), col("code"))
-      graft.sources.Sinks.stagePublish(codes, codesPath)
+      Sinks.publish(codes, codesPath)
       spark.read.parquet(codesPath)
     } finally subs.unpersist(false)
   }
@@ -1249,8 +1228,7 @@ object Similarity {
   private def ensurePq(spark: SparkSession, dir: String): Unit = {
     ensureIndex(spark, dir)
     val (bookPath, codesPath) = pqPaths(spark, dir)
-    if (!indexExists(spark, bookPath) || !indexExists(spark, codesPath))
-      pqBuild(spark, dir)
+    if (!Sinks.exists(spark, bookPath, codesPath)) pqBuild(spark, dir)
   }
 
   /** Candidate reconstructions from PQ codes: cell centroid + the M

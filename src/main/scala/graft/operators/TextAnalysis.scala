@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
-import graft.sources.Tables
+import graft.sources.{Sinks, Tables}
 
 /** Text-analysis operators over the documents corpus: language ID,
   * quality scoring, token counting, fingerprinting. All narrow,
@@ -808,8 +808,8 @@ object TextAnalysis {
       .select(col("doc_id"), col("n_bigrams"),
         (col("wfp").cast("double") / 1000000.0d).as("weight"))
 
-  /** Build-if-missing published DSIR model (the q32 contract, via the
-    * canonical [[graft.sources.Sinks.ensureArtifact]] keying): the
+  /** Build-if-missing published DSIR model (the q32 contract, claimed
+    * once through [[Sinks.ensure]] at the canonical key): the
     * census pass — the SECOND corpus explosion every t16/t17 run used
     * to pay — runs once per corpus and lands in the warehouse; every
     * weighting/selection run after it is one explosion + a broadcast
@@ -818,7 +818,7 @@ object TextAnalysis {
     * "production reads the published weights table").
     */
   private def ensureDsirModel(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Sinks.ensureArtifact(spark, "dsir_model", dir) {
+    Sinks.ensure(spark, Sinks.artifactPath(spark, "dsir_model", dir)) {
       dsirModelFrame(dsirFeats(Tables.documents(spark, dir)))
     }
 
@@ -975,7 +975,7 @@ object TextAnalysis {
 
   /** Per-source twin of [[ensureDsirModel]]. */
   private def ensureDsirModelPs(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Sinks.ensureArtifact(spark, "dsir_model_ps", dir) {
+    Sinks.ensure(spark, Sinks.artifactPath(spark, "dsir_model_ps", dir)) {
       dsirModelPsFrame(dsirFeatsPs(Tables.documents(spark, dir)))
     }
 

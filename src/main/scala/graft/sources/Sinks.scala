@@ -2,12 +2,52 @@ package graft.sources
 
 import java.util.Properties
 
+import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Warehouse write surface — the reference's load layer
-  * (/root/reference/etl/load.py): truncate loads, append loads, and a
-  * staging-then-publish pattern, re-expressed as parquet-directory
-  * semantics.
+  * (/root/reference/etl/load.py): truncate loads, append loads, and the
+  * one publish protocol every published artifact goes through.
+  *
+  * PUBLISH CONTRACT. This object is the only code in src/main that
+  * stages, renames or keys a published artifact. Two primitives:
+  *
+  *  - REPLACE, [[publish]] = [[stage]] then [[swap]] (load.py:273-274:
+  *    load the batch to staging, then swap it in). `stage` writes the
+  *    frame to a hidden sibling of the target and counts it back (a
+  *    parquet count is footer-metadata-only: it proves every staged
+  *    file is complete without rescanning the data). `swap` renames
+  *    the current target aside, renames the staged copy in, then
+  *    deletes the old copy. The data is written exactly once. Replace
+  *    is SINGLE-WRITER per target: two racing publishers of one path
+  *    can interleave their renames (builders are deterministic, so
+  *    either content is right, but a reader between a swap's two
+  *    renames finds the path missing).
+  *  - CLAIM-ONCE, [[ensure]] (and [[ensureFile]] for one small file):
+  *    build-if-missing. Each prober stages its own copy and claims the
+  *    final name with a no-overwrite rename; exactly one wins, the
+  *    loser drops its copy and reads the winner's. A claimed path is
+  *    never deleted or rewritten, so no reader ever finds it missing;
+  *    a "change" is a new name (the key below), not a rewrite.
+  *
+  * Rules that hold for both:
+  *  - Staged and set-aside copies are `_staging_<uuid8>` and
+  *    `_old_<uuid8>` siblings of the target. The `_` prefix hides them
+  *    from Spark's file index, from `Pipeline.registerWarehouse` and
+  *    from the shard listings. They never contain `=`: Spark's file
+  *    index skips a `_` name only when it has no `=` (it keeps `_a=b`
+  *    as a partition directory), so a `_staging_shard=2_ab` beside
+  *    `shard=1` would fail every read of the parent with
+  *    CONFLICTING_PARTITION_COLUMN_NAMES.
+  *  - Every rename is `FileContext.rename(…, Rename.NONE)`, which fails
+  *    when the destination exists. Hadoop's `FileSystem.rename` onto an
+  *    existing directory nests the source inside it instead.
+  *  - A publisher killed mid-protocol leaves a complete or torn hidden
+  *    sibling behind. That debris is inert — no listing reads it — and
+  *    is not swept: the next publish of the target stages under a fresh
+  *    name. A kill between swap's two renames leaves the target missing
+  *    (its old copy sits aside) until the next publish of it.
+  *  - Artifact keys are [[artifactKey]]'s `src<dirKey>_<sourceKey>`.
   *
   * Scale notes: `partitionedBy` drives partition pruning for downstream
   * readers (the 100 TB equivalent of BigQuery table partitioning);
@@ -16,76 +56,178 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Sinks {
 
-  /** Build-if-missing warehouse artifact under ONE canonical keying
-    * scheme: `warehouse/<family>/src<dirKey>_<sourceKey(keyFile)>` —
-    * dirKey is the shell-safe dir path, sourceKey the (length, mtime)
-    * fingerprint of the keying file, so a corpus change invalidates the
-    * artifact and a same-corpus rebuild (all builders are deterministic)
-    * is byte-identical, making staleness impossible. The single
-    * definition exists so a future change to the fingerprint rule
-    * touches every artifact family at once; route new families through
-    * here rather than hand-rolling the exists-then-build-then-read
-    * idiom (band_choice and the DSIR models already do; the older
-    * families predate this helper and keep their in-place copies to
-    * avoid key churn on published artifacts).
-    *
-    * CONCURRENCY CONTRACT: build-if-missing probes are claim-by-rename.
-    * Each prober builds into its own staging dir, verifies the
-    * read-back, then claims the final name with a no-overwrite rename
-    * (`FileContext.rename` with `Rename.NONE` fails if the target
-    * appeared) — two concurrent probes of a missing artifact both pay
-    * the build, but exactly ONE wins the name and the loser deletes
-    * its staging and reads the winner (builders are deterministic, so
-    * the content is identical either way). Unlike [[stagePublish]]'s
-    * delete-then-rename REPLACE, the final path here is never deleted
-    * once published: a reader can never observe it transiently
-    * missing. REPUBLISHING an artifact (changing its content in
-    * place) remains single-writer by contract — for that, key the
-    * content into the path (as the fingerprint already does) so a
-    * "change" is a new name, not a rewrite.
+  /** The one artifact key rule: `src<dirKey>_<sourceKey(dir/keyFile)>` —
+    * dirKey is the shell-safe source dir path, sourceKey the (length,
+    * mtime) fingerprint of the keying file, so a corpus change is a new
+    * key and a same-corpus rebuild (every builder is deterministic) is
+    * byte-identical: staleness is impossible. The "src" prefix matters:
+    * a sanitized absolute path starts with "_", which would hide the
+    * artifact from Spark's file listing.
     */
-  def ensureArtifact(spark: SparkSession, family: String, dir: String,
-                     keyFile: String = "documents.parquet")
-                    (build: => DataFrame): DataFrame = {
-    val path = artifactPath(spark, family, dir, keyFile)
-    val p = new org.apache.hadoop.fs.Path(path)
+  def artifactKey(spark: SparkSession, dir: String,
+                  keyFile: String = "documents.parquet"): String =
+    s"src${dir.replaceAll("[^A-Za-z0-9._-]", "_")}_" +
+      Tables.sourceKey(spark, s"$dir/$keyFile")
+
+  /** `<warehouse>/<family>/<tag><artifactKey>`; `tag` carries a family's
+    * format version or split spec (`v1`, `v3`, `holdout5`).
+    */
+  def artifactPath(spark: SparkSession, family: String, dir: String,
+                   keyFile: String = "documents.parquet",
+                   tag: String = ""): String =
+    s"${spark.conf.get("spark.sql.warehouse.dir")}/$family/$tag" +
+      artifactKey(spark, dir, keyFile)
+
+  /** True iff every one of `paths` exists. */
+  def exists(spark: SparkSession, paths: String*): Boolean = {
     val conf = spark.sessionState.newHadoopConf()
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) {
-      val staging = new org.apache.hadoop.fs.Path(
-        s"${path}_probe_${java.util.UUID.randomUUID().toString.take(8)}")
-      try {
-        val df = build
-        df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-        // footer-metadata-only count proves every staged file is complete
-        df.sparkSession.read.parquet(staging.toString).count()
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
-        try fc.rename(staging, p) // Rename.NONE: fails if target appeared
-        catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-                     _: java.io.IOException =>
-          fs.delete(staging, true) // lost the claim — read the winner
-        }
-      } catch {
-        case e: Throwable =>
-          try fs.delete(staging, true)
-          catch { case w: Throwable => e.addSuppressed(w) }
-          throw e
-      }
+    paths.forall { path =>
+      val p = new Path(path)
+      p.getFileSystem(conf).exists(p)
     }
+  }
+
+  /** Keys of the published `shard=<key>` partitions under `dir`, sorted
+    * (none when `dir` is missing). A key is alphanumeric, so no hidden
+    * sibling — nor the `shard=<k>_staging_<uuid>` debris that publishes
+    * staging beside the target once left — ever lists as a shard.
+    */
+  def shardKeys(spark: SparkSession, dir: String): Seq[String] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val ShardName = "shard=([A-Za-z0-9]+)".r
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+      .collect { case ShardName(k) => k }.sorted
+  }
+
+  /** A fresh hidden sibling of `path` (see the contract: `_`, no `=`). */
+  private[graft] def hiddenSibling(path: String, kind: String = "staging"): String =
+    new Path(new Path(path).getParent,
+      s"_${kind}_${java.util.UUID.randomUUID().toString.take(8)}").toString
+
+  /** Write `df` to a hidden sibling of `path` and count it back. Returns
+    * the staged dir and its row count; a failed write drops its copy.
+    */
+  def stage(df: DataFrame, path: String): (String, Long) = {
+    val spark = df.sparkSession
+    val staged = hiddenSibling(path)
+    dropOnFailure(spark, staged) {
+      df.write.mode(SaveMode.Overwrite).parquet(staged)
+      // read back the part files by glob: naming the hidden dir itself
+      // draws Spark's "All paths were ignored" warning on every publish
+      (staged, spark.read.parquet(s"$staged/*").count())
+    }
+  }
+
+  /** Move `staged` to `path`, replacing what is there: old copy aside,
+    * staged copy in, old copy deleted.
+    */
+  def swap(spark: SparkSession, staged: String, path: String): Unit = {
+    val (fc, target) = context(spark, path)
+    val old = new Path(hiddenSibling(target.toString, "old"))
+    val had = fc.util().exists(target)
+    if (had) fc.rename(target, old, Options.Rename.NONE)
+    fc.rename(new Path(staged), target, Options.Rename.NONE)
+    if (had) fc.delete(old, true)
+  }
+
+  /** Replace `path` with `df` ([[stage]] then [[swap]]). Returns the
+    * published row count like load.py's load_table.
+    */
+  def publish(df: DataFrame, path: String): Long = {
+    val (staged, n) = stage(df, path)
+    dropOnFailure(df.sparkSession, staged)(swap(df.sparkSession, staged, path))
+    n
+  }
+
+  /** [[publish]] under its former name (perfbench's driver calls it). */
+  def stagePublish(df: DataFrame, path: String): Long = publish(df, path)
+
+  /** Claim-once parquet artifact at `path`: build, stage and claim it
+    * iff missing, then read it. Two concurrent probes of a missing
+    * artifact both pay the build; one claims the name.
+    */
+  def ensure(spark: SparkSession, path: String)(build: => DataFrame): DataFrame = {
+    if (!exists(spark, path)) claim(spark, stage(build, path)._1, path)
     spark.read.parquet(path)
   }
 
-  /** The canonical key alone — for always-republish builders (d03's
-    * contract) that share a family with build-if-missing probes.
-    * The "src" prefix matters: underscore-prefixed dirs are "hidden"
-    * to Spark's file listing.
+  /** Claim-once single file: write `content` to a hidden temp sibling
+    * and claim `path` with it iff `path` is missing, then return the
+    * claimed file's content (the winner's, if another writer claimed
+    * first). A kill mid-write leaves only the temp file, never a torn
+    * `path`.
     */
-  def artifactPath(spark: SparkSession, family: String, dir: String,
-                   keyFile: String = "documents.parquet"): String = {
-    val dirKey = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${spark.conf.get("spark.sql.warehouse.dir")}/$family/" +
-      s"src${dirKey}_${Tables.sourceKey(spark, s"$dir/$keyFile")}"
+  def ensureFile(spark: SparkSession, path: String)(content: => String): String = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) {
+      val bytes = content.getBytes("UTF-8")
+      val tmp = hiddenSibling(path)
+      dropOnFailure(spark, tmp) {
+        val out = fs.create(new Path(tmp), false)
+        try out.write(bytes) finally out.close()
+      }
+      claim(spark, tmp, path)
+    }
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
+
+  /** Run `thunks` on one thread each and wait for ALL of them; the first
+    * failure is rethrown with every other failure attached through
+    * `addSuppressed`, so a double failure reports both causes.
+    */
+  private[graft] def concurrently(thunks: (() => Any)*): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
+    try {
+      val futures = thunks.map(t => pool.submit(
+        new java.util.concurrent.Callable[Any] { def call(): Any = t() }))
+      val failures = futures.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally pool.shutdown()
+  }
+
+  /** No-overwrite rename of `staged` to `path`. A failed rename with
+    * `path` now present lost the claim: drop `staged`, the winner stays.
+    */
+  private def claim(spark: SparkSession, staged: String, path: String): Unit =
+    dropOnFailure(spark, staged) {
+      val (fc, target) = context(spark, path)
+      try fc.rename(new Path(staged), target, Options.Rename.NONE)
+      catch {
+        case _: java.io.IOException if fc.util().exists(target) =>
+          fc.delete(new Path(staged), true): Unit
+      }
+    }
+
+  private def context(spark: SparkSession, path: String): (FileContext, Path) = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val q = p.getFileSystem(conf).makeQualified(p)
+    (FileContext.getFileContext(q.toUri, conf), q)
+  }
+
+  /** Run `body`; if it throws, delete `staged` (attaching a failed delete
+    * to the original error) and rethrow.
+    */
+  private def dropOnFailure[A](spark: SparkSession, staged: String)(body: => A): A =
+    try body
+    catch {
+      case e: Throwable =>
+        try {
+          val p = new Path(staged)
+          p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+        } catch { case w: Throwable => e.addSuppressed(w) }
+        throw e
+    }
 
   /** WRITE_TRUNCATE equivalent (load.py:200: full refresh). */
   def truncateLoad(df: DataFrame, path: String,
@@ -98,45 +240,6 @@ object Sinks {
                  partitionedBy: Seq[String] = Nil,
                  repartitionTo: Int = 0): Unit =
     write(df, path, SaveMode.Append, partitionedBy, repartitionTo)
-
-  /** Staging-then-publish (load.py:273-274: load batch to a `_staging`
-    * suffix, then swap): write to a staging dir, verify it reads back
-    * (a parquet count is footer-metadata-only — it proves every file is
-    * complete and well-formed without rescanning the data), then SWAP
-    * the staging dir into place with a filesystem rename. The data is
-    * written exactly once — the earlier copy-to-publish shape paid a
-    * full second read+write per artifact, which dominated the timed cost
-    * of every index/pair publish. Returns the published row count like
-    * load.py's load_table.
-    */
-  def stagePublish(df: DataFrame, path: String): Long = {
-    // unique per-invocation staging dir: two concurrent builders (e.g.
-    // d04 republishing the band table while d17's build-if-missing probe
-    // fires in another session) can no longer write into the SAME
-    // staging path. The final delete-then-rename swap is still not
-    // atomic across writers — artifact families are single-writer by
-    // contract (concurrent rebuilds are idempotent in content, and a
-    // reader between the delete and rename of two racing publishers can
-    // observe the path missing); a failed attempt cleans its own
-    // staging dir instead of leaving it for the next try to overwrite.
-    val staging = s"${path}_staging_${java.util.UUID.randomUUID().toString.take(8)}"
-    val spark = df.sparkSession
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    val fs = stagingPath.getFileSystem(spark.sessionState.newHadoopConf())
-    try {
-      df.write.mode(SaveMode.Overwrite).parquet(staging)
-      val n = spark.read.parquet(staging).count()
-      val target = new org.apache.hadoop.fs.Path(path)
-      if (fs.exists(target)) fs.delete(target, true)
-      fs.rename(stagingPath, target)
-      n
-    } catch {
-      case e: Throwable =>
-        try fs.delete(stagingPath, true)
-        catch { case w: Throwable => e.addSuppressed(w) }
-        throw e
-    }
-  }
 
   /** JDBC staging store — the reference's optional MySQL staging layer
     * (/root/reference/etl/mysql_staging.py:28-199: create staging table,

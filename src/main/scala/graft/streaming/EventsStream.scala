@@ -159,9 +159,9 @@ object EventsStream {
     *    leaves covered parts visible yet ignored (no double count),
     *    and a replayed trigger finds its base version already
     *    published, skips the rebuild, and re-runs only the idempotent
-    *    sweep. The base itself is staged-then-renamed so a torn write
-    *    is never the newest version. Single writer per census dir (the
-    *    one streaming query) — the same contract as Sinks.stagePublish.
+    *    sweep. The base itself is claimed once (Sinks.ensure) so a
+    *    torn write is never the newest version. Single writer per
+    *    census dir (the one streaming query).
     */
   def attributionCensusStart(clicks: DataFrame, purchases: DataFrame,
                              outDir: String, compactAfter: Int = 64)
@@ -215,20 +215,13 @@ object EventsStream {
     val live = parts.filter(_._1 > curV)
     val newV = batchId - 1 // never fold the replay-able in-flight batch
     if (live.count(_._1 <= newV) > compactAfter && newV > curV) {
-      val target = new org.apache.hadoop.fs.Path(baseDir, s"v=$newV")
-      if (!fs.exists(target)) {
+      graft.sources.Sinks.ensure(spark, s"$baseDir/v=$newV") {
         val folded = live.filter(_._1 <= newV).map(_._2.toString) ++
           bases.filter(_._1 == curV).map(_._2.toString)
-        val df = spark.read.parquet(folded: _*)
+        spark.read.parquet(folded: _*)
           .groupBy(col("gap_bucket"))
           .agg(sum(col("n_pairs")).as("n_pairs"))
-        val staging = new org.apache.hadoop.fs.Path(baseDir,
-          s"_stage_${java.util.UUID.randomUUID().toString.take(8)}")
-        df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-        if (!fs.rename(staging, target)) { // lost a (contract-violating) race
-          fs.delete(staging, true)
-          return
-        }
+          .coalesce(1)
       }
       // idempotent sweep: everything the new base covers
       parts.filter(_._1 <= newV).foreach(p => fs.delete(p._2, true))

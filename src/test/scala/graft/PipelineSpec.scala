@@ -200,8 +200,9 @@ class PipelineSpec extends AnyFunSuite {
 
     // the crashed run: the scheduler died after tick 1, and the death
     // is staged INSIDE each tier's commit protocol — every window of
-    // Sinks.stagePublish (staged-not-swapped; swapped-out-not-renamed)
-    // plus the fact overwrite's committer debris
+    // Sinks.publish (staged-not-swapped; swapped-out-not-renamed), the
+    // fact overwrite's committer debris, and the staging-dir names
+    // older publishes used (a warehouse written by them must heal too)
     val out = Files.createTempDirectory("graft_wh_crash").toString
     Pipeline.dailyRun(spark, TestSpark.sf, out, schedule.take(1), nShards)
     val hconf = spark.sessionState.newHadoopConf()
@@ -236,6 +237,21 @@ class PipelineSpec extends AnyFunSuite {
     fs.delete(path(s"$out/vec_index/assign/shard=1"), true)
     junkDir(s"$out/vec_index/codebook_staging_dead0002")
 
+    // the protocol's own kill state: Sinks.stage without the swap leaves
+    // a COMPLETE staged copy beside its target — under the band and set
+    // tiers (the next tick must not list it as a shard), the vector
+    // assignments (vecStandingIndex must not serve it as a second copy
+    // of shard 0) and the warehouse root (registerWarehouse must not
+    // register it). Plus the complete `shard=<k>_staging_<uuid>` copy
+    // older publishes staged, which made the next tick throw on the
+    // missing `sets/shard=0_staging_<uuid>`.
+    Seq("dedup_index/bands/shard=0", "dedup_index/sets/shard=0",
+        "vec_index/assign/shard=0", "fact_sales").foreach { t =>
+      graft.sources.Sinks.stage(spark.read.parquet(s"$out/$t"), s"$out/$t")
+    }
+    spark.read.parquet(s"$out/dedup_index/bands/shard=0")
+      .write.parquet(s"$out/dedup_index/bands/shard=0_staging_dead0003")
+
     // next scheduled run = the full backfill schedule (the DAG's retry
     // semantics): every tier must converge to the clean-rebuild state
     Pipeline.dailyRun(spark, TestSpark.sf, out, schedule, nShards)
@@ -244,6 +260,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(got._2 == want._2, "standing removals did not heal")
     assert(got._3 == want._3, "vector index did not heal")
     assert(got._4 == want._4, "codebook must match the clean bootstrap")
+    val tables = Pipeline.registerWarehouse(spark, out)
+    tables.foreach(spark.catalog.dropTempView)
+    assert(tables.nonEmpty && tables.forall(t => !t.startsWith("_") && !t.contains("staging")),
+      s"crash debris registered as a table: $tables")
 
     // VECTOR tier, the bootstrap's OWN torn pair: codebook published,
     // shard-0 assignment not (crash between vecIngestCore's two

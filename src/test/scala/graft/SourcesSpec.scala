@@ -106,7 +106,7 @@ class SourcesSpec extends AnyFunSuite {
       def call(): Seq[(Long, String)] = {
         start.countDown()
         start.await(10, java.util.concurrent.TimeUnit.SECONDS)
-        Sinks.ensureArtifact(spark, "probe_race", dir) {
+        Sinks.ensure(spark, Sinks.artifactPath(spark, "probe_race", dir)) {
           Seq((42L, "payload")).toDF("k", "v")
         }.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
       }
@@ -117,15 +117,85 @@ class SourcesSpec extends AnyFunSuite {
       assert(f2.get() == Seq((42L, "payload")))
     } finally pool.shutdown()
     // cleanliness: the family holds the one claimed artifact and no
-    // orphaned probe staging dirs
+    // orphaned probe staging dirs. Staging siblings are `_staging_<uuid>`
+    // and carry no dirKey, so any `_`-prefixed child is a leak too.
     val fam = new org.apache.hadoop.fs.Path(
       s"${spark.conf.get("spark.sql.warehouse.dir")}/probe_race")
     val fs = fam.getFileSystem(spark.sessionState.newHadoopConf())
     val dirKey = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val children = fs.listStatus(fam).map(_.getPath.getName).toSeq
+    val all = fs.listStatus(fam).map(_.getPath.getName).toSeq
+    val children = all
       .filter(_.contains(dirKey)) // other runs' temp-dir artifacts share the family
     assert(children.size == 1 && !children.head.contains("_probe_"),
       s"family dir not clean after the race: $children")
+    assert(!all.exists(_.startsWith("_")), s"staging left in the family dir: $all")
+  }
+
+  test("staging beside a shard=<k> target is hidden, holds no '=', and never breaks the parent's read") {
+    import spark.implicits._
+    val idx = Files.createTempDirectory("graft_stage_eq").toString
+    Sinks.publish(Seq((1L, "a")).toDF("doc_id", "v"), s"$idx/shard=1")
+    // replace: a second publish swaps in the new copy (no nesting, no
+    // set-aside copy left behind)
+    Sinks.publish(Seq((1L, "b")).toDF("doc_id", "v"), s"$idx/shard=1")
+    // the state a JVM kill leaves mid-publish: staged, never swapped
+    val (staged, n) = Sinks.stage(Seq((3L, "c")).toDF("doc_id", "v"), s"$idx/shard=3")
+    assert(n == 1)
+    val name = new org.apache.hadoop.fs.Path(staged).getName
+    assert(name.startsWith("_") && !name.contains("="), s"staging name $name")
+    assert(new java.io.File(idx).list().sorted.toSeq == Seq(name, "shard=1"))
+    // partition discovery over the parent skips the debris
+    val back = spark.read.parquet(idx).collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("v"), r.getAs[Int]("shard"))).toSeq
+    assert(back == Seq((1L, "b", 1)))
+    assert(Sinks.shardKeys(spark, idx) == Seq("1"))
+    // an empty frame publishes (and counts back) zero rows
+    val empty = Files.createTempDirectory("graft_stage_empty").toString
+    assert(Sinks.publish(Seq.empty[(Long, String)].toDF("doc_id", "v"), s"$empty/t") == 0)
+    assert(spark.read.parquet(s"$empty/t").count() == 0)
+  }
+
+  test("ensureFile claims once and ignores a dead writer's temp file") {
+    val dir = Files.createTempDirectory("graft_claimfile").toString
+    // a killed writer's torn temp sibling is not the artifact
+    Files.writeString(java.nio.file.Path.of(s"$dir/_staging_dead0001"), "6 ")
+    assert(Sinks.ensureFile(spark, s"$dir/meta")("9 2") == "9 2")
+    // claimed: a later writer reads the winner's content, never its own
+    assert(Sinks.ensureFile(spark, s"$dir/meta")(sys.error("rebuilt")) == "9 2")
+    assert(new java.io.File(dir).list().filterNot(_.startsWith(".")).sorted.toSeq ==
+      Seq("_staging_dead0001", "meta"), "the claim left its temp file behind")
+  }
+
+  test("concurrent publishes report every failure, not just the first") {
+    val started = new java.util.concurrent.CountDownLatch(2)
+    def failing(msg: String): () => Unit = () => {
+      started.countDown()
+      started.await(10, java.util.concurrent.TimeUnit.SECONDS)
+      throw new IllegalStateException(msg)
+    }
+    var ran = false
+    val e = intercept[IllegalStateException] {
+      Sinks.concurrently(failing("bands tier"), failing("sets tier"), () => ran = true)
+    }
+    val causes = (e +: e.getSuppressed.toSeq).map(_.getMessage).sorted
+    assert(causes == Seq("bands tier", "sets tier"))
+    assert(ran, "a failure must not cancel the other thunks")
+  }
+
+  test("Sinks is the only place in src/main that renames or keys an artifact") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val stream = Files.walk(root)
+    val files = try stream.iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toSeq
+      finally stream.close()
+    def sites(needle: String): Seq[String] = files
+      .filter(p => new String(Files.readAllBytes(p)).contains(needle))
+      .map(p => root.relativize(p).toString).sorted
+    val sinks = Seq("graft/sources/Sinks.scala")
+    assert(sites(".rename(") == sinks, "rename outside Sinks")
+    assert(sites("""replaceAll("[^A-Za-z0-9._-]"""") == sinks,
+      "artifact key rule copied outside Sinks")
   }
 
   test("sourceKey fingerprint changes when the source file is regenerated") {
