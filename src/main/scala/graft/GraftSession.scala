@@ -20,8 +20,8 @@ import graft.sources.Tables
   *
   *  - `GRAFT_MASTER` — Spark master URL (default: caller's `master`
   *    arg, normally `local[*]`; a cluster deployment sets e.g.
-  *    `yarn` or `spark://host:port`; ScaleBench and RegimeProbe read
-  *    it to run their fixed-data measurement on another core count)
+  *    `yarn` or `spark://host:port`; ScaleBench reads it to
+  *    run its fixed-data measurement on another core count)
   *  - `GRAFT_SHUFFLE_PARTITIONS` — positive int (default 32 locally;
   *    a 1000-executor cluster wants ~2-3x its total cores)
   *  - `GRAFT_BROADCAST_THRESHOLD` — spark.sql.autoBroadcastJoinThreshold

@@ -117,15 +117,15 @@ object Cleaning {
   private[graft] def apiRatingsFeed(spark: SparkSession, dir: String,
       fetcher: Fetch.Fetcher = null): DataFrame = {
     // fingerprint-keyed like the other warehouse artifacts: the JSON
-    // feed synthesizes once per source generation, not once per query
+    // feed synthesizes once per source generation, not once per query,
+    // and is claimed whole (staged, then renamed in), never torn
     val path = Sinks.artifactPath(spark, "api_products", dir, "part.parquet")
-    if (!Sinks.exists(spark, path))
+    Sinks.ensureBuilt(spark, path, "json")(
       Tables.part(spark, dir)
         .select(col("p_partkey").as("product_id"),
           struct(
             (lit(1.0) + (col("p_partkey") % 40).cast("double") / 10.0).as("rate"),
-            ((col("p_partkey") * 7) % 500 + 1).as("count")).as("rating"))
-        .write.mode("overwrite").json(path)
+            ((col("p_partkey") * 7) % 500 + 1).as("count")).as("rating")))
     val schema = StructType.fromDDL(
       "product_id BIGINT, rating STRUCT<rate: DOUBLE, count: BIGINT>")
     // The Fetcher seam materializes ONE payload on the driver — correct

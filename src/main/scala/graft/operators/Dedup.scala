@@ -1751,35 +1751,31 @@ object Dedup {
     * pair with no (prefix-of-smaller, anywhere-in-larger) shingle match
     * provably sits below the threshold. Candidates are then verified
     * exactly on the candidate-doc slice, with containment = |A∩B|/|A|,
-    * by a regime CHOSEN FROM A BOUNDED CENSUS of that slice (identical
-    * outputs — distinct-shingle counting, set-array intersection, and
-    * the hot/cold split are the same arithmetic):
-    *  - COUNTING co-shingle join (generated rows ≈ Σ_s occ(s)²) — wins
-    *    on sparse shingle document-frequency, where the d07 set-array
-    *    shape replicates each doc's full set across its ~10² pairs
-    *    (the round-9 sf10 byte-amplification, 129 s);
-    *  - PER-PAIR ARRAYS (shipped shingle copies ≈ Σ_pairs n_a + n_b) —
-    *    wins on boilerplate-heavy, hot-shingle corpora where a single
-    *    shingle shared by D docs makes occ² = D² explode while the
-    *    position-pruned pair count stays bounded. Since round 12 its
-    *    exchanges are CENSUS-SIZED ([[arrayVerifyPartitions]]): the
-    *    round-11 "memory cliff" was per-task array volume under a
-    *    pinned partition count, not semantic quadratic work, so the
-    *    operator now derives the join width from the measured pair
-    *    volume — the partitions-∝-data knob turned from inside the
-    *    plan. (Two alternatives were BUILT and MEASURED on the way:
-    *    a hot/cold threshold hybrid — cold counting still aggregated
-    *    every non-candidate co-pair, 455 s at sf3 — and a fully
-    *    pair-restricted semi-join verify — df-independent but
-    *    row-count-explosive on pair-dense corpora, 107 s vs arrays'
-    *    23-30 s at sf1 and a >60 GB spill at sf3; it survives
-    *    force-only as [[PairRestricted]], the differential yardstick.)
-    * The census (Σ occ, Σ occ², |pairs|, |docs|) is TWO bounded driver
-    * actions over already-needed frames (pair census + gram census);
-    * the cost proxies share one unit (shingle-row instances
-    * materialized), so the switch is a direct comparison — automated
-    * in round 11 (the round-10 verdict's watch item: the trade
-    * inverts silently), de-cliffed in round 12.
+    * by ONE plan: PER-PAIR SET ARRAYS — each candidate doc's distinct
+    * shingle keys are collected once, joined onto both sides of every
+    * pair, and intersected in-row (shipped shingle copies =
+    * Σ_pairs n_a + n_b). Its exchanges are CENSUS-SIZED
+    * ([[arrayVerifyPartitions]]): the round-11 "memory cliff" was
+    * per-task array volume under a pinned partition count, not
+    * semantic quadratic work, so the operator derives the join width
+    * from the measured copy count. Past the local scratch budget the
+    * same plan runs in pair-hash slices ([[verifySlices]]).
+    * The census is ONE bounded driver action over the persisted pair
+    * frame (Σ_pairs n_a + n_b rides the candidate aggregation).
+    *
+    * Three other verify shapes were BUILT, MEASURED and retired (the
+    * outputs were identical; only cost differed):
+    *  - a COUNTING co-shingle join (Σ_s occ(s)² generated rows), once
+    *    chosen by a Σocc² cost gate. After the round-15 prefix
+    *    extension bounded the candidate set, the gate chose the array
+    *    plan for d16 and d33 at sf0.001, sf0.01, sf0.1 and sf1, and
+    *    `ScaleGen` replicas scale both cost terms alike;
+    *  - a hot/cold threshold hybrid: cold counting still aggregated
+    *    every non-candidate co-pair, 455 s at sf3;
+    *  - a PAIR-RESTRICTED semi-join verify (Σ_pairs n_a bare
+    *    (pair, gh) rows): row-count-explosive on pair-dense corpora —
+    *    218.8 s vs the array plan's 106.9 s on the wrapped corpus at
+    *    sf1 (median of 3, local[4]), and a >60 GB spill at sf3.
     *
     * Scale: the prefix join's left side is ~1/5 of the shingle rows;
     * the right side is the full distinct-shingle frame — an equi-join
@@ -1793,36 +1789,6 @@ object Dedup {
     * explode; `subset_only` marks pairs invisible to the jaccard
     * pipeline (containment ≥ 0.8 but J < 0.5).
     */
-  /** Verify-regime tags for [[containmentDedupOf]]. The census chooses
-    * between [[CountingJoin]] and [[PairArrays]] (the latter now with
-    * CENSUS-SIZED exchanges — see [[arrayVerifyPartitions]], the
-    * round-12 de-cliffing); [[PairRestricted]] is FORCE-ONLY, kept as
-    * the differential-spec yardstick and the measured record of why it
-    * lost: it ships Σ_pairs n_a bare (pair, gh) rows — df-independent
-    * and cliff-free, but on a PAIR-DENSE corpus (the wrapped fixture
-    * censuses 232 pairs/doc at sf1) that is 1.5·10⁹ shuffled rows
-    * where arrays ship the same information as 2·|pairs| fat rows:
-    * measured 107 s vs arrays' 23-30 s at sf1, and a >60 GB sort
-    * spill (disk exhaustion) at sf3. Row-count beats payload size
-    * only when pairs-per-doc is small.
-    */
-  private[graft] sealed trait VerifyRegime
-  private[graft] case object CountingJoin extends VerifyRegime
-  private[graft] case object PairArrays extends VerifyRegime
-  private[graft] case object PairRestricted extends VerifyRegime
-  /** The array verify in `slices` sequential sub-jobs (round-13 verdict
-    * item 3): chosen when the census-estimated array-shuffle volume
-    * exceeds the local scratch budget — the documented sf10 death was
-    * DISK, not memory (the pair-array exchange's total shuffle files
-    * outgrew scratch), and no partitioning knob shrinks a TOTAL. Each
-    * slice materializes its scored pairs and releases its shuffle
-    * files before the next starts, bounding in-flight scratch at
-    * ~volume/slices. On the 1000-executor target this gate never
-    * fires (230 MB/executor at the recorded sf10 volume); it is the
-    * single-box degradation path.
-    */
-  private[graft] case class SlicedArrays(slices: Int) extends VerifyRegime
-
   /** Local shuffle-scratch budget the verify may occupy at once.
     * Deliberately below this container's 53 GB free scratch (head-room
     * for the session's other live shuffles); production overrides via
@@ -1846,46 +1812,39 @@ object Dedup {
     */
   private[graft] val ShuffleCompressionFactor = 8.0
 
-  /** The census gate, split out pure so the decision itself is
-    * spec-pinned: counting-join generated rows (Σ occ²) vs array-path
-    * shipped shingle copies (|pairs| · 2 · avg set size) — same unit,
-    * direct comparison, ties to counting (the measured-default regime).
-    * When the array path wins but its estimated shuffle volume
-    * (copies × ~16 B) exceeds `scratchBudgetBytes`, the choice degrades
-    * to [[SlicedArrays]] sized so each slice stays under HALF the
-    * budget (the other half is head-room for the slice's own sort
-    * spill and the not-yet-cleaned previous slice).
+  /** How many sequential pair-hash slices the array verify runs in,
+    * from the census's shipped shingle copies (Σ_pairs n_a + n_b).
+    * One, unless the estimated on-disk shuffle (copies × ~16 B over
+    * [[ShuffleCompressionFactor]]) exceeds `scratchBudgetBytes` — the
+    * documented sf10 death was DISK, not memory (the pair-array
+    * exchange's total shuffle files outgrew scratch), and no
+    * partitioning knob shrinks a TOTAL. Past the budget each slice
+    * stays under HALF of it (the other half is head-room for the
+    * slice's own sort spill and the not-yet-cleaned previous slice).
+    * On the 1000-executor target this never slices (230 MB/executor
+    * at the recorded sf10 volume); it is the single-box degradation
+    * path.
     */
-  private[graft] def chooseVerifyRegime(sumOcc2: Long, nPairs: Long,
-      sumOcc: Long, nDocs: Long,
-      scratchBudgetBytes: Long = DefaultScratchBudgetBytes): VerifyRegime = {
-    val arrayCopies = 2.0 * nPairs.toDouble *
-      (sumOcc.toDouble / math.max(nDocs, 1L).toDouble)
-    if (sumOcc2.toDouble <= arrayCopies) CountingJoin
+  private[graft] def verifySlices(copies: Long,
+      scratchBudgetBytes: Long = DefaultScratchBudgetBytes): Int = {
+    val diskBytes = copies.toDouble * 16.0 / ShuffleCompressionFactor
+    if (diskBytes <= scratchBudgetBytes.toDouble) 1
     else {
-      // on-disk estimate: copies × 16 B, divided by the measured LZ4
-      // ratio (the budget is a DISK number; arrayVerifyPartitions keeps
-      // the uncompressed estimate because task memory sees raw arrays)
-      val diskBytes = arrayCopies * 16.0 / ShuffleCompressionFactor
-      if (diskBytes <= scratchBudgetBytes.toDouble) PairArrays
-      else {
-        // clamp the sub-job count (round-13 advice): a tiny configured
-        // budget or a huge census estimate would otherwise schedule
-        // thousands of sequential slices, each paying full fixed
-        // overhead (Int.MaxValue in the extreme). Past the clamp each
-        // slice simply exceeds half the budget — log loudly so the
-        // operator's degradation is visible, never silent.
-        val raw = math.max(2,
-          math.ceil(diskBytes / (scratchBudgetBytes.toDouble / 2.0))
-            .min(Int.MaxValue.toDouble).toInt)
-        val s = math.min(MaxSlices, raw)
-        if (raw > MaxSlices)
-          System.err.println(s"[graft] containment verify: slice count $raw " +
-            s"clamped to $MaxSlices — each slice will exceed half the " +
-            s"scratch budget ($scratchBudgetBytes B); raise " +
-            "spark.graft.scratch.budget.bytes or expect spill")
-        SlicedArrays(s)
-      }
+      // clamp the sub-job count (round-13 advice): a tiny configured
+      // budget or a huge census estimate would otherwise schedule
+      // thousands of sequential slices, each paying full fixed
+      // overhead (Int.MaxValue in the extreme). Past the clamp each
+      // slice simply exceeds half the budget — log loudly so the
+      // operator's degradation is visible, never silent.
+      val raw = math.max(2,
+        math.ceil(diskBytes / (scratchBudgetBytes.toDouble / 2.0))
+          .min(Int.MaxValue.toDouble).toInt)
+      if (raw > MaxSlices)
+        System.err.println(s"[graft] containment verify: slice count $raw " +
+          s"clamped to $MaxSlices — each slice will exceed half the " +
+          s"scratch budget ($scratchBudgetBytes B); raise " +
+          "spark.graft.scratch.budget.bytes or expect spill")
+      math.min(MaxSlices, raw)
     }
   }
 
@@ -1901,20 +1860,16 @@ object Dedup {
     * of arrays, and at sf3 that crossed task memory (220-285 s of
     * spill; OOM at 8 GB). AQE coalesces small partitions but never
     * SPLITS uniform oversized ones, so the operator sizes the exchange
-    * itself from numbers the census already holds: shipped volume ≈
-    * 2·|pairs|·avgSet elements × ~16 B (8 B key + row/array overhead),
-    * at the AQE advisory 64 MB per task, clamped to [current shuffle
-    * partitions, 32768]. This is the knob a 1000-executor cluster
-    * turns (partitions ∝ data); deterministic — both engines see the
-    * same census, and partitioning never changes values.
+    * itself from the census: shipped volume ≈ `copies` elements ×
+    * ~16 B (8 B key + row/array overhead), at the AQE advisory 64 MB
+    * per task, clamped to [current shuffle partitions, 32768]. This is
+    * the knob a 1000-executor cluster turns (partitions ∝ data);
+    * deterministic — both engines see the same census, and
+    * partitioning never changes values.
     */
-  private[graft] def arrayVerifyPartitions(base: Int, nPairs: Long,
-      sumOcc: Long, nDocs: Long): Int = {
-    val avgSet = sumOcc.toDouble / math.max(nDocs, 1L).toDouble
-    val volBytes = 2.0 * nPairs.toDouble * avgSet * 16.0
+  private[graft] def arrayVerifyPartitions(base: Int, copies: Long): Int =
     math.min(32768, math.max(base,
-      math.ceil(volBytes / (64.0 * 1024 * 1024)).toInt))
-  }
+      math.ceil(copies.toDouble * 16.0 / (64.0 * 1024 * 1024)).toInt))
 
   /** Salt fan-out for hot-key candidate joins. Parallelism-driven
     * (round-13 verdict item 5 — a fixed 32 sized the fan-out to THIS
@@ -1947,48 +1902,34 @@ object Dedup {
       }
     }.getOrElse(default)
 
-  /** Test-only instrumentation: the regime the last [[containmentDedup]]
-    * census chose (the spec pins the gate fires on the right corpora).
-    */
-  private[graft] val lastContainmentRegime =
-    new java.util.concurrent.atomic.AtomicReference[VerifyRegime](null)
-
   /** Test-only instrumentation: how many hot keys the last candidate
     * join salted (0 = the plain join ran).
     */
   private[graft] val lastContainmentHotKeys =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Test/probe instrumentation: the last census readings
-    * (nPairs, nDocs, Σocc, Σocc²) behind the regime choice.
-    */
-  private[graft] val lastContainmentCensus =
-    new java.util.concurrent.atomic.AtomicReference[(Long, Long, Long, Long)](null)
-
   def containmentDedup(spark: SparkSession, dir: String): DataFrame =
-    containmentDedupOf(wordShingles(spark, dir), force = None)
+    containmentDedupOf(wordShingles(spark, dir))
 
-  /** d35: the SLICED verify regime under the driver's oracle (round
-    * 14) — same containment semantics and oracle SQL as d16, forced
-    * through [[SlicedArrays]] at a fixed 3 slices so the
-    * scratch-degradation path (per-slice pair hashing, eager
-    * localCheckpoint materialization, checkpoint union) produces its
-    * VALUES under the
-    * DuckDB gate every round, at every sf the driver runs, not only in
-    * DedupSpec's forced-budget hash-compare. A fixed slice count (not
-    * a tiny conf budget) keeps the row's cost flat across scale
-    * factors: 3 sub-jobs always, instead of a slice count that grows
-    * with the census estimate.
+  /** d35: the SLICED verify under the driver's oracle (round 14) — same
+    * containment semantics and oracle SQL as d16, forced through a
+    * fixed 3 pair-hash slices so the scratch-degradation path
+    * (per-slice pair hashing, eager localCheckpoint materialization,
+    * checkpoint union) produces its VALUES under the DuckDB gate every
+    * round, at every sf the driver runs, not only in DedupSpec's
+    * hash-compare. A fixed slice count (not a tiny conf budget) keeps
+    * the row's cost flat across scale factors: 3 sub-jobs always,
+    * instead of a slice count that grows with the census estimate.
     */
   def slicedDedup(spark: SparkSession, dir: String): DataFrame =
-    containmentDedupOf(wordShingles(spark, dir), force = Some(SlicedArrays(3)))
+    containmentDedupOf(wordShingles(spark, dir), slices = Some(3))
 
   /** Documents-frame entry (spec seam: generated corpora, forced or
-    * census-chosen regime).
+    * census-chosen slice count).
     */
   private[graft] def containmentDedupOfDocs(docs: DataFrame,
-      force: Option[VerifyRegime] = None): DataFrame =
-    containmentDedupOf(wordShinglesOf(docs), force)
+      slices: Option[Int] = None): DataFrame =
+    containmentDedupOf(wordShinglesOf(docs), slices)
 
   // ─── d33/d34 hot-shingle regime coverage (oracle-side) ───────────────
   /** The boilerplate header for the derived hot-shingle corpus: a
@@ -1998,15 +1939,13 @@ object Dedup {
     * greedy md5 search so EVERY cyclic window shingle hashes ≥ 'c'
     * (top quartile of the hash order): none of them can reach a doc's
     * lowest-fifth prefix, so candidate generation sees no hot-shingle
-    * pairs — the counting join's Σocc² census term goes quadratic
-    * (20·|docs|², measured 5.2M vs the array proxy's 2.0M at the
-    * fixture) while the true pair set stays the fixture's own, which
-    * is exactly the regime that forces the census-sized array verify
-    * (per-pair arrays, exchanges widened per [[arrayVerifyPartitions]]
-    * since round 12). (A
-    * weaker bar measured wrong: at ≥ '5' the LOWEST hot shingle sat
-    * near the prefix quantile and leaked ~60k spurious twin-twin
-    * candidates, flipping the census back to counting.)
+    * pairs: the corpus carries 20 shingles at occurrence |docs| while
+    * the true pair set stays the fixture's own — the hot-shingle shape
+    * the candidate join's salting and the census-sized array verify
+    * (per-pair arrays, exchanges widened per [[arrayVerifyPartitions]])
+    * exist for. (A weaker bar measured wrong: at ≥ '5' the LOWEST hot
+    * shingle sat near the prefix quantile and leaked ~60k spurious
+    * twin-twin candidates.)
     */
   private[graft] val BoilerHeader: Seq[String] = Seq(
     "hb59x0", "hb59x1", "hb59x2", "hb59x3", "hb59x6", "hb59x11",
@@ -2046,10 +1985,9 @@ object Dedup {
 
   /** d33: containment dedup over the boilerplate-wrapped corpus — the
     * ORACLE-CHECKED hot-shingle row (round-10 verdict item 8: the
-    * sf0.01 fixture's sparse shingle DF exercises only the counting
-    * verify; this derived corpus forces the census to the array branch,
-    * so BOTH census-chosen d16 regimes are driver-oracle-covered).
-    * Semantics are exactly d16's on the derived corpus; every original
+    * sf0.01 fixture's shingle DF is sparse; this derived corpus puts 20
+    * shingles in every doc, so the driver's oracle covers the verify on
+    * both shingle-DF shapes). Semantics are exactly d16's on the derived corpus; every original
     * doc must surface as contained in its wrapped twin.
     */
   def hotShingleDedup(spark: SparkSession, dir: String): DataFrame =
@@ -2077,25 +2015,27 @@ object Dedup {
   /** CACHE CONTRACT: the returned plan references persisted candidate/
     * slice frames the caller must release after its one consuming
     * action (releaseQueryCaches/clearCache — see [[substringDedupOf]]).
+    * A SLICED result (`slices` > 1) is consumed ONCE: its slices are
+    * localCheckpoints whose lineage is truncated, so after
+    * releaseQueryCaches drops their blocks the returned frame cannot be
+    * replayed — call this operator again instead.
     */
   private[graft] def containmentDedupOf(sh0: DataFrame,
-      force: Option[VerifyRegime]): DataFrame = {
+      slices: Option[Int] = None): DataFrame = {
     val t = 0.8
     // 60-bit md5-prefix shingle KEYS (the d28 wordGrams discipline): the
     // shingle frame is this family's dominant shuffle — the candidate
-    // equi-join, the counting self-join, and the array collects all key
-    // on it — and an 8-byte BIGINT beats a ~34-byte shingle string (or
+    // equi-join and the array collects both key on it — and an 8-byte
+    // BIGINT beats a ~34-byte shingle string (or
     // the old 32-char md5 hex sort column) 4-5× on every one of those
     // exchanges. Measured on the round-11 wrapped-corpus probe: the
-    // array-regime verify's pair⋈sets sort-merge shipped ~40 B/element
+    // array verify's pair⋈sets sort-merge shipped ~40 B/element
     // set arrays and went memory-bound at sf1 (149 s warm, local 8 GB
     // heap); long-keyed arrays put it back under the envelope. Both
     // engines derive the identical prefix, so the rare truncation
     // collision (~2·10⁻¹⁸ per in-doc pair) is deterministic and
     // IDENTICAL — the oracle replays it, exactly like d28's gram keys.
-    // (A within-doc collision would also make the counting and array
-    // regimes differ by one multiset count — the same 2⁻⁶⁰ event class;
-    // documented, not guarded.) Numeric order on the 60-bit prefix =
+    // Numeric order on the 60-bit prefix =
     // lexicographic order on the full md5 except at prefix ties, where
     // the tied keys are EQUAL — rank assignment among equal keys cannot
     // change any downstream value.
@@ -2264,191 +2204,77 @@ object Dedup {
           col("na") - floor(col("na") / 5).cast("long")) &&
         lit(1) + least(col("na") - col("ra0"), col("nb") - col("rb0")) >=
           floor((lit(4) * col("na") + lit(4)) / 5).cast("long"))
-      .select(col("doc_a"), col("doc_b"))
-    // cand feeds the census count, candDocs, AND the final join —
-    // persisted (pair-id-sized: 2 longs/row; before this the prefix-join
-    // chain re-ran per consumer). Cache lifetime: the returned plan
-    // still references it, so release falls to the caller's per-query
+      .select(col("doc_a"), col("doc_b"), (col("na") + col("nb")).as("copies"))
+    // cand feeds the census, candDocs, AND the final join — persisted
+    // (pair-id-sized: 3 longs/row; before this the prefix-join chain
+    // re-ran per consumer). Cache lifetime: the returned plan still
+    // references it, so release falls to the caller's per-query
     // clearCache (the Bench/Verify harness contract, as in q63).
     val candP = cand.persist()
-    // ONE bounded action reads the pair census off the persisted pair
-    // frame (round-11 watch item: the gate ran |pairs| and |docs| as
-    // separate jobs): explode both id columns, count rows (= 2·|pairs|)
-    // and distinct docs in the same aggregate.
-    // nDocs feeds ONLY the regime cost model (avgSet, exchange widths)
-    // — approx_count_distinct's ±2% replaces an exact countDistinct
-    // whose Expand doubled the 2·|pairs| exploded frame and paid a
-    // second full aggregation pass (at sf10 that is a ~460 M-row
-    // Expand for a number a cost model rounds anyway). Deterministic:
-    // the HLL++ sketch is a pure function of the value set.
-    val pairRow = candP
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-      .agg(count(lit(1)).as("two_np"),
-        approx_count_distinct(col("doc_id")).as("nd"))
-      .collect()(0)
-    val nPairs = pairRow.getLong(0) / 2
-    val nDocs = math.max(1L, pairRow.getLong(1))
-    val candDocs = candP.select(col("doc_a").as("doc_id"))
-      .union(candP.select(col("doc_b").as("doc_id"))).distinct()
-    // The candidate shingle slice feeds the census AND the verify (the
-    // census agg, per-doc sizes, and both sides of the counting
-    // self-join / the array collect) — persisted, or the census action
-    // re-runs the full shingle explode + semi join that the final plan
-    // then runs again (measured 2× the whole query at sf0.1 AND sf10
-    // when the gate first landed unpersisted). Slice-sized, not
-    // corpus-sized: only candidate docs' shingles. Released by the
-    // caller's per-query clearCache, like candP.
+    // ONE bounded action reads the census off the persisted pair frame:
+    // the shingle copies the array verify ships (Σ_pairs n_a + n_b),
+    // which sizes its exchanges and its slice count
+    val copiesRow = candP.agg(sum(col("copies"))).collect()(0)
+    val copies = if (copiesRow.isNullAt(0)) 0L else copiesRow.getLong(0)
+    val pairs = candP.select(col("doc_a"), col("doc_b"))
+    val candDocs = pairs.select(col("doc_a").as("doc_id"))
+      .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
+    // The candidate shingle slice: only candidate docs' shingles.
     val shCand = sh.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
+    val s = slices.getOrElse(verifySlices(copies, confLong(sh0.sparkSession,
+      "spark.graft.scratch.budget.bytes", DefaultScratchBudgetBytes)))
+    val base = sh0.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = arrayVerifyPartitions(base, copies / s)
+    // Persisted: both join sides (and every slice) read the sets, and
+    // the planner does not reuse one side's exchange for the other (the
+    // self-join re-instances its attributes), so unpersisted the slice's
+    // shingle explode ran once per side. Released by the caller's
+    // per-query clearCache, like candP.
+    val sets = shCand.groupBy(col("doc_id"))
+      .agg(collect_set(col("gh")).as("sh_set"))
+      .select(col("doc_id"), col("sh_set"),
+        size(col("sh_set")).cast("long").as("n"))
       .persist()
-    // ── the verify-regime census gate ──
-    // Bounded census of the candidate slice (two 1-row actions over
-    // frames the verify needs anyway): per-shingle occurrence counts
-    // collapse to Σ occ (total candidate shingle rows) and Σ occ² (the
-    // counting join's generated-row count, BEFORE map-side combine —
-    // its true cost); |pairs| and |docs| complete the array-path proxy.
-    val cRow = shCand.groupBy(col("gh")).agg(count(lit(1)).as("occ"))
-      .agg(sum(col("occ")).as("tot"), sum(col("occ") * col("occ")).as("occ2"))
-      .collect()(0)
-    val tot = if (cRow.isNullAt(0)) 0L else cRow.getLong(0)
-    val occ2 = if (cRow.isNullAt(1)) 0L else cRow.getLong(1)
-    val scratchBudget = sh0.sparkSession.conf
-      .getOption("spark.graft.scratch.budget.bytes").map(_.toLong)
-      .getOrElse(DefaultScratchBudgetBytes)
-    val regime = force.getOrElse(
-      chooseVerifyRegime(occ2, nPairs, tot, nDocs, scratchBudget))
-    lastContainmentRegime.set(regime)
-    lastContainmentCensus.set((nPairs, nDocs, tot, occ2))
-    // All three regimes compute the IDENTICAL (doc_a, doc_b, inter,
-    // n_a, n_b) — shingles are distinct per doc, so counting
-    // co-occurrences, intersecting set arrays, and counting semi-join
-    // survivors per pair are the same arithmetic. Which one is CHEAP
-    // is corpus-dependent (see the operator Scaladoc): counting
-    // generates Σ occ² in-stage rows (map-side-combined to ~|pairs|
-    // before the exchange) and wins on sparse shingle DF — the
-    // round-9 sf10 record: the array shape's ~10⁴ shingle copies per
-    // doc fell out of page cache and bent the curve superlinear
-    // (129 s). On hot-shingle boilerplate (one shingle in D docs ⇒
-    // occ² = D²) the census-sized array join wins; PairRestricted
-    // (force-only) is the measured also-ran — see the regime tags'
-    // Scaladoc for the full cost accounting.
-    val scored = regime match {
-      case CountingJoin =>
-        val sizes = shCand.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-        val pairCounts = shCand.select(col("doc_id").as("doc_a"), col("gh"))
-          .join(shCand.select(col("doc_id").as("doc_b"), col("gh")), Seq("gh"))
-          .filter(col("doc_a") =!= col("doc_b"))
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("inter"))
-        candP
-          .join(pairCounts, Seq("doc_a", "doc_b"))
-          .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), Seq("doc_a"))
-          .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), Seq("doc_b"))
-      case PairArrays =>
-        val base = shCand.sparkSession.conf
-          .get("spark.sql.shuffle.partitions").toInt
-        val parts = arrayVerifyPartitions(base, nPairs, tot, nDocs)
-        val sets = shCand.groupBy(col("doc_id"))
-          .agg(collect_set(col("gh")).as("sh_set"))
-          .select(col("doc_id"), col("sh_set"),
-            size(col("sh_set")).cast("long").as("n"))
-        // census-sized exchanges: the pair frame enters join 1 and the
-        // (pair + set_a) intermediate enters join 2 hash-partitioned at
-        // `parts`, so each sort-merge task buffers ~64 MB of arrays no
-        // matter the corpus — the de-cliffing (see
-        // [[arrayVerifyPartitions]])
-        candP.repartition(parts, col("doc_a"))
-          .join(sets.select(col("doc_id").as("doc_a"), col("sh_set").as("set_a"),
-            col("n").as("n_a")), Seq("doc_a"))
-          .repartition(parts, col("doc_b"))
-          .join(sets.select(col("doc_id").as("doc_b"), col("sh_set").as("set_b"),
-            col("n").as("n_b")), Seq("doc_b"))
-          .withColumn("inter",
-            size(array_intersect(col("set_a"), col("set_b"))).cast("long"))
-          .select(col("doc_a"), col("doc_b"), col("inter"), col("n_a"), col("n_b"))
-      case SlicedArrays(s) =>
-        // EAGER sliced materialization — the scratch-bound degradation
-        // (see [[SlicedArrays]]): the pair set splits by a deterministic
-        // pair hash into `s` sub-jobs, each the PairArrays plan at
-        // per-slice exchange width; a finished slice's scored rows are
-        // localCheckpointed and its shuffle files are released (refs
-        // dropped + an explicit GC nudge so the ContextCleaner's
-        // reference queue fires between slices, not at some later GC)
-        // before the next slice shuffles. Values are identical to
-        // PairArrays — slicing partitions the pair set, and per-pair
-        // arithmetic never crosses pairs (DedupSpec hash-compares).
-        val spark2 = shCand.sparkSession
-        val base = spark2.conf.get("spark.sql.shuffle.partitions").toInt
-        val parts = arrayVerifyPartitions(base, nPairs / s, tot, nDocs)
-        val sets = shCand.groupBy(col("doc_id"))
-          .agg(collect_set(col("gh")).as("sh_set"))
-          .select(col("doc_id"), col("sh_set"),
-            size(col("sh_set")).cast("long").as("n"))
-          .persist()
-        // Slice handoff is localCheckpoint, not a scratch parquet
-        // (round 15, verdict item 4: the eager per-slice parquet
-        // writes fought the page cache under interleaved load — d35
-        // 5.2 → 3.4 s solo-warm, and the round-14 in-run inflation
-        // track record was 5.4 → 6.0-6.8). The regime's contract is
-        // bounding in-flight SHUFFLE scratch, and the checkpoint keeps
-        // that: each slice's plan is truncated at materialization, its
-        // shuffle refs drop, and the GC nudge lets the ContextCleaner
-        // release the files before the next slice shuffles. Slice
-        // RESULTS ride block storage (MEMORY_AND_DISK — spills, never
-        // OOMs) instead of an external file; same JVM, consumed once,
-        // swept by the harness's releaseQueryCaches like every cache
-        // here. (This also retires the round-13 per-run scratch-path
-        // machinery — no external path, no two-process clobber
-        // surface at all.)
-        val slices = (0 until s).map { i =>
-          val ck = candP
-            .filter(pmod(xxhash64(col("doc_a"), col("doc_b")), lit(s.toLong)) === i)
-            .repartition(parts, col("doc_a"))
-            .join(sets.select(col("doc_id").as("doc_a"),
-              col("sh_set").as("set_a"), col("n").as("n_a")), Seq("doc_a"))
-            .repartition(parts, col("doc_b"))
-            .join(sets.select(col("doc_id").as("doc_b"),
-              col("sh_set").as("set_b"), col("n").as("n_b")), Seq("doc_b"))
-            .withColumn("inter",
-              size(array_intersect(col("set_a"), col("set_b"))).cast("long"))
-            .select(col("doc_a"), col("doc_b"), col("inter"), col("n_a"), col("n_b"))
+    // Per-pair arrays: shingles are distinct per doc, so the size of
+    // the set intersection is |A∩B|. Census-sized exchanges: the pair
+    // frame enters join 1 and the (pair + set_a) intermediate enters
+    // join 2 hash-partitioned at `parts`, so each sort-merge task
+    // buffers ~64 MB of arrays no matter the corpus — the de-cliffing
+    // (see [[arrayVerifyPartitions]]).
+    def verify(ps: DataFrame): DataFrame =
+      ps.repartition(parts, col("doc_a"))
+        .join(sets.select(col("doc_id").as("doc_a"), col("sh_set").as("set_a"),
+          col("n").as("n_a")), Seq("doc_a"))
+        .repartition(parts, col("doc_b"))
+        .join(sets.select(col("doc_id").as("doc_b"), col("sh_set").as("set_b"),
+          col("n").as("n_b")), Seq("doc_b"))
+        .withColumn("inter",
+          size(array_intersect(col("set_a"), col("set_b"))).cast("long"))
+        .select(col("doc_a"), col("doc_b"), col("inter"), col("n_a"), col("n_b"))
+    // Sliced (s > 1), the scratch-bound degradation (see
+    // [[verifySlices]]): the pair set splits by a deterministic pair
+    // hash into `s` sub-jobs, each the one-shot plan at per-slice
+    // exchange width. A finished slice's scored rows are
+    // localCheckpointed and its shuffle refs dropped, with an explicit
+    // GC nudge so the ContextCleaner releases the files before the next
+    // slice shuffles. Values are identical — slicing partitions the
+    // pair set, and per-pair arithmetic never crosses pairs. Slice
+    // RESULTS ride block storage (MEMORY_AND_DISK — spills, never
+    // OOMs): round 15 measured the earlier scratch-parquet handoff
+    // fighting the page cache (d35 5.2 → 3.4 s solo-warm).
+    val scored =
+      if (s == 1) verify(pairs)
+      else {
+        val done = (0 until s).map { i =>
+          val ck = verify(pairs.filter(
+            pmod(xxhash64(col("doc_a"), col("doc_b")), lit(s.toLong)) === i))
             .localCheckpoint()
           System.gc()
           ck
         }
         sets.unpersist()
-        slices.reduce(_.unionByName(_))
-      case PairRestricted =>
-        // Start EVERY gram from the candidate pair set: pair ⋈
-        // grams-of-doc_a replicates each pair by its contained doc's
-        // shingle count (Σ_pairs n_a bare (pair, gh) rows — the array
-        // regime's shipped volume as STREAMED LONGS, no row ever
-        // carrying a whole set), then a semi join on (doc_b, gh) keeps
-        // the grams present in BOTH docs; the count per pair is the
-        // exact intersection. Cost is df-INDEPENDENT — a corpus-hot
-        // gram contributes one row per candidate pair that contains
-        // it, never occ² — and the aggregation state is exactly
-        // |candidate pairs|, so neither the counting join's quadratic
-        // generation nor the array regime's per-pair set
-        // materialization can recur. (A hot/cold split — hot grams
-        // pair-restricted, cold through the counting join — was built
-        // and measured first: the cold half still aggregated every
-        // co-occurring NON-candidate doc pair in the slice, which on
-        // the wrapped corpus is the whole corpus's co-pair census —
-        // 455 s at sf3, 2× the array cliff. Full pair-restriction
-        // removes that term instead of thresholding it.)
-        val sizes = shCand.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-        val inter = candP
-          .join(shCand.select(col("doc_id").as("doc_a"), col("gh")), Seq("doc_a"))
-          .join(shCand.select(col("doc_id").as("doc_b"), col("gh")),
-            Seq("doc_b", "gh"), "left_semi")
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("inter"))
-        candP
-          .join(inter, Seq("doc_a", "doc_b"))
-          .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), Seq("doc_a"))
-          .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), Seq("doc_b"))
-          .select(col("doc_a"), col("doc_b"), col("inter"), col("n_a"), col("n_b"))
-    }
+        done.reduce(_.unionByName(_))
+      }
     scored
       .withColumn("containment", col("inter").cast("double") / col("n_a").cast("double"))
       .filter(col("containment") >= t)
@@ -3015,9 +2841,8 @@ object Dedup {
        |spans AS (SELECT doc_id, island, min(s) AS ss, max(e) AS se FROM isl GROUP BY 1, 2)""".stripMargin
 
   /** d16/d33 oracle twin, parameterized over the docs source so the
-    * SAME chain is driver-checked on both shingle-DF regimes (the raw
-    * fixture's sparse counting regime and the wrapped corpus's
-    * hot-shingle array regime).
+    * SAME chain is driver-checked on both shingle-DF shapes (the raw
+    * fixture's sparse one and the wrapped corpus's hot shingles).
     */
   private def containmentOracleSql(docsSrc: String): String =
     s"""WITH toks AS (

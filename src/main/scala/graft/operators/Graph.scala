@@ -327,13 +327,7 @@ object Graph {
       .crossJoin(broadcast(custs.agg(count(lit(1)).as("n"))))
       .select(col("c"), expr(s"$HitsScale div n").as("h"))
     var auth: DataFrame = null
-    // plan evidence for the in-loop hint (round-14 verdict item: the
-    // final dumped plan hides the half-steps behind localCheckpoint):
-    // with spark.graft.debug.explain set, iteration 1's half-step
-    // plans print BEFORE their checkpoints erase them
-    val debugExplain = custs.sparkSession.conf
-      .getOption("spark.graft.debug.explain").isDefined
-    for (it <- 1 to HitsIters) {
+    for (_ <- 1 to HitsIters) {
       // SHUFFLED HASH on the score side of each half-step (guide §3,
       // the q63 rationale): the stat-less checkpoint leaves made the
       // planner default both half-step joins to SMJ, re-sorting the
@@ -341,22 +335,12 @@ object Graph {
       // node-sized — a per-partition hash build — and grow with the
       // graph, so the hint (not broadcast) is the scale-safe form.
       // Round-14 back-to-back A/B at sf0.1: 4.8 → 4.1 s solo-warm.
-      val aPre = ed.join(hub.hint("shuffle_hash"), Seq("c"))
-        .groupBy(col("p")).agg(sum(col("h")).as("a"))
-      if (debugExplain && it == 1) {
-        println(s"===== q61 iteration-1 auth half-step (pre-checkpoint) =====")
-        aPre.explain("formatted")
-      }
-      val aRaw = aPre.localCheckpoint(false)
+      val aRaw = ed.join(hub.hint("shuffle_hash"), Seq("c"))
+        .groupBy(col("p")).agg(sum(col("h")).as("a")).localCheckpoint(false)
       auth = aRaw.crossJoin(broadcast(aRaw.agg(sum(col("a")).as("ta"))))
         .select(col("p"), expr(s"(a * $HitsScale) div ta").as("a"))
-      val hPre = ed.join(auth.hint("shuffle_hash"), Seq("p"))
-        .groupBy(col("c")).agg(sum(col("a")).as("h"))
-      if (debugExplain && it == 1) {
-        println(s"===== q61 iteration-1 hub half-step (pre-checkpoint) =====")
-        hPre.explain("formatted")
-      }
-      val hRaw = hPre.localCheckpoint(false)
+      val hRaw = ed.join(auth.hint("shuffle_hash"), Seq("p"))
+        .groupBy(col("c")).agg(sum(col("a")).as("h")).localCheckpoint(false)
       hub = hRaw.crossJoin(broadcast(hRaw.agg(sum(col("h")).as("th"))))
         .select(col("c"), expr(s"(h * $HitsScale) div th").as("h"))
     }

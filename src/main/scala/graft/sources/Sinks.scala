@@ -6,8 +6,8 @@ import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Warehouse write surface — the reference's load layer
-  * (/root/reference/etl/load.py): truncate loads, append loads, and the
-  * one publish protocol every published artifact goes through.
+  * (/root/reference/etl/load.py): the one publish protocol every
+  * published artifact goes through, plus JDBC staging and CSV export.
   *
   * PUBLISH CONTRACT. This object is the only code in src/main that
   * stages, renames or keys a published artifact. Two primitives:
@@ -23,7 +23,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *    can interleave their renames (builders are deterministic, so
   *    either content is right, but a reader between a swap's two
   *    renames finds the path missing).
-  *  - CLAIM-ONCE, [[ensure]] (and [[ensureFile]] for one small file):
+  *  - CLAIM-ONCE, [[ensure]] ([[ensureBuilt]] for a non-parquet
+  *    artifact, [[ensureFile]] for one small file):
   *    build-if-missing. Each prober stages its own copy and claims the
   *    final name with a no-overwrite rename; exactly one wins, the
   *    loser drops its copy and reads the winner's. A claimed path is
@@ -48,11 +49,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *    name. A kill between swap's two renames leaves the target missing
   *    (its old copy sits aside) until the next publish of it.
   *  - Artifact keys are [[artifactKey]]'s `src<dirKey>_<sourceKey>`.
-  *
-  * Scale notes: `partitionedBy` drives partition pruning for downstream
-  * readers (the 100 TB equivalent of BigQuery table partitioning);
-  * `repartitionTo` bounds output file counts so a 1000-executor write
-  * doesn't produce a million small files.
   */
 object Sinks {
 
@@ -106,17 +102,18 @@ object Sinks {
     new Path(new Path(path).getParent,
       s"_${kind}_${java.util.UUID.randomUUID().toString.take(8)}").toString
 
-  /** Write `df` to a hidden sibling of `path` and count it back. Returns
-    * the staged dir and its row count; a failed write drops its copy.
+  /** Write `df` as `format` (parquet unless told otherwise) to a hidden
+    * sibling of `path` and count it back. Returns the staged dir and its
+    * row count; a failed write drops its copy.
     */
-  def stage(df: DataFrame, path: String): (String, Long) = {
+  def stage(df: DataFrame, path: String, format: String = "parquet"): (String, Long) = {
     val spark = df.sparkSession
     val staged = hiddenSibling(path)
     dropOnFailure(spark, staged) {
-      df.write.mode(SaveMode.Overwrite).parquet(staged)
+      df.write.mode(SaveMode.Overwrite).format(format).save(staged)
       // read back the part files by glob: naming the hidden dir itself
       // draws Spark's "All paths were ignored" warning on every publish
-      (staged, spark.read.parquet(s"$staged/*").count())
+      (staged, spark.read.format(format).load(s"$staged/*").count())
     }
   }
 
@@ -144,12 +141,17 @@ object Sinks {
   /** [[publish]] under its former name (perfbench's driver calls it). */
   def stagePublish(df: DataFrame, path: String): Long = publish(df, path)
 
-  /** Claim-once parquet artifact at `path`: build, stage and claim it
-    * iff missing, then read it. Two concurrent probes of a missing
-    * artifact both pay the build; one claims the name.
+  /** Claim-once artifact at `path`: build, [[stage]] as `format` and
+    * claim it iff missing. Two concurrent probes of a missing artifact
+    * both pay the build; one claims the name.
     */
+  def ensureBuilt(spark: SparkSession, path: String, format: String = "parquet")(
+      build: => DataFrame): Unit =
+    if (!exists(spark, path)) claim(spark, stage(build, path, format)._1, path)
+
+  /** Claim-once parquet artifact at `path` ([[ensureBuilt]]), read back. */
   def ensure(spark: SparkSession, path: String)(build: => DataFrame): DataFrame = {
-    if (!exists(spark, path)) claim(spark, stage(build, path)._1, path)
+    ensureBuilt(spark, path)(build)
     spark.read.parquet(path)
   }
 
@@ -229,18 +231,6 @@ object Sinks {
         throw e
     }
 
-  /** WRITE_TRUNCATE equivalent (load.py:200: full refresh). */
-  def truncateLoad(df: DataFrame, path: String,
-                   partitionedBy: Seq[String] = Nil,
-                   repartitionTo: Int = 0): Unit =
-    write(df, path, SaveMode.Overwrite, partitionedBy, repartitionTo)
-
-  /** WRITE_APPEND equivalent (load.py:210: incremental fact loads). */
-  def appendLoad(df: DataFrame, path: String,
-                 partitionedBy: Seq[String] = Nil,
-                 repartitionTo: Int = 0): Unit =
-    write(df, path, SaveMode.Append, partitionedBy, repartitionTo)
-
   /** JDBC staging store — the reference's optional MySQL staging layer
     * (/root/reference/etl/mysql_staging.py:28-199: create staging table,
     * bulk-load the batch, read it back for transform). Overwrite gives
@@ -278,12 +268,4 @@ object Sinks {
   def csvExport(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode(SaveMode.Overwrite)
       .option("header", "true").csv(path)
-
-  private def write(df: DataFrame, path: String, mode: SaveMode,
-                    partitionedBy: Seq[String], repartitionTo: Int): Unit = {
-    val sized = if (repartitionTo > 0) df.repartition(repartitionTo) else df
-    val w = sized.write.mode(mode)
-    val wp = if (partitionedBy.nonEmpty) w.partitionBy(partitionedBy: _*) else w
-    wp.parquet(path)
-  }
 }

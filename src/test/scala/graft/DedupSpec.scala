@@ -8,6 +8,33 @@ import graft.operators.Dedup
 class DedupSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** Every containment output column of the given rows, as a set. */
+  private def containmentKey(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
+    (r.getAs[Long]("contained_doc"), r.getAs[Long]("container_doc"),
+      r.getAs[Long]("n_sh_contained"), r.getAs[Long]("n_sh_container"),
+      r.getAs[Long]("inter"), r.getAs[Double]("containment"),
+      r.getAs[Double]("jaccard"), r.getAs[Boolean]("subset_only"))).toSet
+
+  /** d16's output by brute force over ALL doc pairs — no prefix filter,
+    * no candidate step: driver-side word-3-shingle set intersection,
+    * oriented with the smaller doc first (ties break on doc id).
+    */
+  private def bruteContainment(docs: Seq[(Long, String)]) = {
+    val sets = docs.map { case (id, text) =>
+      val t = text.split("\\s+").filter(_.nonEmpty)
+      id -> t.sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
+    }.filter(_._2.nonEmpty).sortBy(_._1)
+    (for {
+      i <- sets.indices; j <- sets.indices if i != j
+      (a, sa) = sets(i); (b, sb) = sets(j)
+      if sa.size < sb.size || (sa.size == sb.size && a < b)
+      inter = (sa & sb).size
+      if inter.toDouble / sa.size >= 0.8
+      jac = inter.toDouble / (sa.size + sb.size - inter).toDouble
+    } yield (a, b, sa.size.toLong, sb.size.toLong, inter.toLong,
+      inter.toDouble / sa.size.toDouble, jac, jac < 0.5)).toSet
+  }
+
   test("exact dedup groups cover the corpus exactly once") {
     val docs = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
     val groups = Dedup.exactDedup(spark, TestSpark.sf)
@@ -226,111 +253,48 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("d16 prefix filtering is lossless: equals the brute-force containment pairs") {
-    val got = Dedup.containmentDedup(spark, TestSpark.sf).collect()
-      .map(r => (r.getAs[Long]("contained_doc"), r.getAs[Long]("container_doc"),
-        r.getAs[Long]("inter"), r.getAs[Double]("containment"))).toSet
-    // brute force over ALL pairs — no prefix filter, no candidate step
-    val sets = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
+    val got = containmentKey(Dedup.containmentDedup(spark, TestSpark.sf).collect())
+    val want = bruteContainment(spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
       .select(col("doc_id"), col("text")).collect()
-      .map { r =>
-        val t = r.getAs[String]("text").split("\\s+").filter(_.nonEmpty)
-        r.getAs[Long]("doc_id") -> t.sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
-      }.filter(_._2.nonEmpty).sortBy(_._1)
-    val want = (for {
-      i <- sets.indices; j <- sets.indices if i != j
-      (a, sa) = sets(i); (b, sb) = sets(j)
-      // orientation: a is the smaller (ties break on doc id)
-      if sa.size < sb.size || (sa.size == sb.size && a < b)
-      inter = (sa & sb).size
-      if inter.toDouble / sa.size >= 0.8
-    } yield (a, b, inter.toLong, inter.toDouble / sa.size)).toSet
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("text"))).toSeq)
     assert(want.nonEmpty)
     assert(got == want, s"missing: ${want -- got}; extra: ${got -- want}")
   }
 
-  test("d16 verify-regime gate: boilerplate-heavy corpus forces the array path, " +
-      "identical output across all three regimes") {
+  test("d16 array verify on a boilerplate-heavy corpus equals the brute-force " +
+      "pairs; sliced and salted runs are identical") {
     import spark.implicits._
-    def key(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
-      (r.getAs[Long]("contained_doc"), r.getAs[Long]("container_doc"),
-        r.getAs[Long]("n_sh_contained"), r.getAs[Long]("n_sh_container"),
-        r.getAs[Long]("inter"), r.getAs[Double]("containment"),
-        r.getAs[Double]("jaccard"), r.getAs[Boolean]("subset_only"))).toSet
-
-    // Boilerplate-heavy inversion corpus. Every doc opens with the SAME
-    // repeated-token header, giving ONE ultra-hot shingle with occ = D
-    // — so the counting join generates Σocc² ≈ D² co-occurrence rows.
+    // Boilerplate-heavy corpus. Every doc opens with the SAME
+    // repeated-token header, giving ONE ultra-hot shingle with occ = D.
     // The hot token is CHOSEN (driver-side md5 search) so its shingle's
     // md5 sorts HIGH: it never lands in any doc's lowest-fifth prefix,
-    // so none of those D² co-occurrences survive into the candidate
-    // set — the counting join pays quadratic work for pairs the array
-    // path never touches, which is exactly the inversion regime the
-    // round-10 verdict flagged. Genuine containment pairs (doc 2k ⊂
-    // doc 2k+1, truncations) keep the output non-trivial and LINEAR in
-    // D, so the array path's cost proxy stays ~2·(D/2)·avgSet ≪ D².
+    // so none of its D² co-occurrences enter the candidate set. Genuine
+    // containment pairs (doc 2k ⊂ doc 2k+1, truncations) keep the
+    // output non-trivial and LINEAR in D.
     val md = java.security.MessageDigest.getInstance("MD5")
     def md5hex(s: String): String =
       md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val hot = (0 to 999).map(i => s"boiler$i")
       .find(t => md5hex(s"$t $t $t") >= "e").get
     val header = Seq.fill(20)(hot).mkString(" ")
-    val boiler = (0L until 300L by 2L).flatMap { k =>
+    val texts = (0L until 300L by 2L).flatMap { k =>
       val tail = (1 to 80).map(j => s"u${k}_$j").mkString(" ")
       val more = (1 to 10).map(j => s"x${k}_$j").mkString(" ")
       Seq((k, s"$header $tail"), (k + 1, s"$header $tail $more"))
-    }.toDF("doc_id", "text")
-    val auto = Dedup.containmentDedupOfDocs(boiler).collect()
-    assert(Dedup.lastContainmentRegime.get() == Dedup.PairArrays,
-      "hot-shingle census must choose the per-pair-array verify")
-    val forcedCounting =
-      Dedup.containmentDedupOfDocs(boiler, Some(Dedup.CountingJoin)).collect()
-    assert(key(auto) == key(forcedCounting) && auto.nonEmpty,
-      "regimes must be output-identical on the boilerplate corpus")
-    val forcedPairBoiler =
-      Dedup.containmentDedupOfDocs(boiler, Some(Dedup.PairRestricted)).collect()
-    assert(key(auto) == key(forcedPairBoiler),
-      "the pair-restricted yardstick must match the array regime on the boilerplate corpus")
+    }
+    val boiler = texts.toDF("doc_id", "text")
+    val auto = containmentKey(Dedup.containmentDedupOfDocs(boiler).collect())
+    assert(auto == bruteContainment(texts),
+      "the array verify must equal the brute-force pairs on the boilerplate corpus")
     // every truncated doc is contained in its extension
-    val pairs = auto.map(r => (r.getAs[Long]("contained_doc"),
-      r.getAs[Long]("container_doc"))).toSet
+    val pairs = auto.map(t => (t._1, t._2))
     (0L until 300L by 2L).foreach(k => assert(pairs.contains((k, k + 1))))
-
-    // Sparse corpus (the real fixture): census picks the counting join
-    // and the array path agrees exactly there too.
-    val docs = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val autoReal = Dedup.containmentDedupOfDocs(docs).collect()
-    // The chosen regime must be the gate's own decision for the census
-    // it read (gate-consistency, not a hardcoded branch: the round-15
-    // prefix extension shrank the candidate slice so far that the
-    // array path's cost proxy undercuts Σocc² on this fixture too —
-    // before it, the sparse fixture censused CountingJoin; both
-    // branches stay value-pinned by the forced-regime comparisons in
-    // this test).
-    val (np, nd, tt, o2) = Dedup.lastContainmentCensus.get()
-    assert(Dedup.lastContainmentRegime.get() ==
-      Dedup.chooseVerifyRegime(o2, np, tt, nd),
-      "census regime must match the gate's decision for the measured census")
-    // ...and the census itself must be sane, or the check above is
-    // circular (a zeroed tuple would still agree with the gate): the
-    // sparse fixture has candidate pairs and docs, and Σocc² ≥ Σocc
-    // holds for any integer occurrence counts
-    assert(np > 0 && nd > 0 && o2 >= tt,
-      s"census (nPairs=$np, nDocs=$nd, Σocc=$tt, Σocc²=$o2) is not sane")
-    val forcedArrays =
-      Dedup.containmentDedupOfDocs(docs, Some(Dedup.PairArrays)).collect()
-    assert(key(autoReal) == key(forcedArrays) && autoReal.nonEmpty)
-    val forcedPairRestricted =
-      Dedup.containmentDedupOfDocs(docs, Some(Dedup.PairRestricted)).collect()
-    assert(key(autoReal) == key(forcedPairRestricted),
-      "pair-restricted must match the counting regime on the raw fixture")
 
     // Scratch-budget degradation (round-13 verdict item 3): the sliced
     // array verify is output-identical to the one-shot array verify
-    val forcedSliced =
-      Dedup.containmentDedupOfDocs(boiler, Some(Dedup.SlicedArrays(3))).collect()
-    assert(key(auto) == key(forcedSliced),
-      "the sliced array verify must match the one-shot array regime")
+    val sliced = Dedup.containmentDedupOfDocs(boiler, Some(3)).collect()
+    assert(auto == containmentKey(sliced),
+      "the sliced array verify must match the one-shot verify")
 
     // Hot-key-salted candidate join (round 13): on the boilerplate
     // corpus the default df floor leaves the plain join (hot occ ~300
@@ -343,35 +307,27 @@ class DedupSpec extends AnyFunSuite {
       val salted = Dedup.containmentDedupOfDocs(boiler).collect()
       assert(Dedup.lastContainmentHotKeys.get() > 0,
         "forced floor must salt the header keys")
-      assert(key(auto) == key(salted),
+      assert(auto == containmentKey(salted),
         "the salted candidate join must be output-identical")
     } finally spark.conf.unset("spark.graft.hot.df")
     spark.catalog.clearCache()
   }
 
-  test("verify-regime gate degrades to SlicedArrays when the estimated " +
-      "array-shuffle volume exceeds the scratch budget") {
-    // counting wins whenever Σocc² <= 2·|pairs|·avgSet, budget ignored
-    assert(Dedup.chooseVerifyRegime(100L, 1000L, 1000L, 10L) == Dedup.CountingJoin)
-    // hot-shingle inversion, volume under budget: one-shot arrays
-    // (2·1000·100 copies × 16 B / the LZ4 factor 8 = 0.4 MB on disk)
-    assert(Dedup.chooseVerifyRegime(10000000L, 1000L, 1000L, 10L) == Dedup.PairArrays)
-    // same shape with a 256 KB budget: 0.4 MB on disk → ceil(0.4/0.125)
-    // = 4 slices (each slice under HALF the budget — spill head-room)
-    assert(Dedup.chooseVerifyRegime(10000000L, 1000L, 1000L, 10L,
-      scratchBudgetBytes = 1L << 18) == Dedup.SlicedArrays(4))
+  test("the array verify slices only when its estimated shuffle exceeds " +
+      "the scratch budget") {
+    // 200k shingle copies (2·1000 pairs × 100-shingle sets) × 16 B / the
+    // LZ4 factor 8 = 0.4 MB on disk: under the default budget, one shot
+    assert(Dedup.verifySlices(200000L) == 1)
+    // same volume with a 256 KB budget: ceil(0.4/0.125) = 4 slices
+    // (each slice under HALF the budget — spill head-room)
+    assert(Dedup.verifySlices(200000L, scratchBudgetBytes = 1L << 18) == 4)
     // the d33 sf10 census shape (~1M wrapped docs × ~232 partners,
-    // ~300-shingle sets → ~139 GB on disk) against the default 32 GB
-    // budget degrades to ~9 slices instead of dying on scratch
-    val sf10 = Dedup.chooseVerifyRegime(
-      sumOcc2 = Long.MaxValue / 4, nPairs = 116000000L,
-      sumOcc = 300000000L, nDocs = 1000000L)
-    assert(sf10 == Dedup.SlicedArrays(9),
-      s"sf10-shaped census must slice ~9 ways, got $sf10")
+    // ~300-shingle sets → 2·116M·300 copies, ~139 GB on disk) against
+    // the default 32 GB budget slices ~9 ways instead of dying on scratch
+    assert(Dedup.verifySlices(2L * 116000000L * 300L) == 9)
     // a pathological budget (1 byte) clamps at MaxSlices instead of
     // scheduling millions of sequential sub-jobs (round-13 advice)
-    assert(Dedup.chooseVerifyRegime(10000000L, 1000L, 1000L, 10L,
-      scratchBudgetBytes = 1L) == Dedup.SlicedArrays(Dedup.MaxSlices))
+    assert(Dedup.verifySlices(200000L, scratchBudgetBytes = 1L) == Dedup.MaxSlices)
   }
 
   test("graft configs parse loudly and the salt fan-out tracks parallelism") {
@@ -386,6 +342,19 @@ class DedupSpec extends AnyFunSuite {
         e.getMessage.contains("not-a-number"))
     } finally spark.conf.unset("spark.graft.hot.df")
     assert(Dedup.confLong(spark, "spark.graft.hot.df", 42L) == 42L)
+    // the containment verify reads its scratch budget the same way
+    spark.conf.set("spark.graft.scratch.budget.bytes", "32GB")
+    try {
+      import spark.implicits._
+      val docs = Seq((1L, "a b c d"), (2L, "a b c d e")).toDF("doc_id", "text")
+      val e = intercept[IllegalArgumentException](
+        Dedup.containmentDedupOfDocs(docs).collect())
+      assert(e.getMessage.contains("spark.graft.scratch.budget.bytes") &&
+        e.getMessage.contains("32GB"))
+    } finally {
+      spark.conf.unset("spark.graft.scratch.budget.bytes")
+      spark.catalog.clearCache()
+    }
     // hot-salt fan-out: parallelism-driven with a 32 floor, config
     // override wins, bounded above
     assert(Dedup.hotSalts(spark) ==
@@ -403,11 +372,6 @@ class DedupSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, size, split}
     val docs = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
     val d33 = Dedup.hotShingleDedup(spark, TestSpark.sf).collect()
-    // the derived corpus is the regime the census gate exists for: the
-    // driver's oracle exercises the census-sized array branch (d16
-    // keeps the counting branch on the raw fixture)
-    assert(Dedup.lastContainmentRegime.get() == Dedup.PairArrays,
-      "d33's census must choose the per-pair-array verify")
     val pairs = d33.map(r => (r.getAs[Long]("contained_doc"),
       r.getAs[Long]("container_doc"))).toSet
     val ids = docs.select("doc_id").collect().map(_.getLong(0))

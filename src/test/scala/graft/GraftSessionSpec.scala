@@ -74,4 +74,19 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(sites == Seq("graft/GraftSession.scala"),
       s"session built outside GraftSession: ${sites.filterNot(_ == "graft/GraftSession.scala")}")
   }
+
+  test("the spark.graft.* conf keys read in src/main are a reviewed set") {
+    // a new knob shows up here as a test diff, not only as a code line
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val stream = java.nio.file.Files.walk(root)
+    val Key = "\"spark\\.graft\\.([A-Za-z0-9._]+)".r
+    val keys = try stream.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap(p => Key.findAllMatchIn(
+          new String(java.nio.file.Files.readAllBytes(p))).map(_.group(1)))
+        .toSet
+      finally stream.close()
+    assert(keys == Set("hot.df", "hot.salts", "prefix.ext", "q59.hint.bytes",
+      "scratch.budget.bytes", "stream.shuffle.partitions"))
+  }
 }

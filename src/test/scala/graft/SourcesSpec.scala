@@ -166,6 +166,27 @@ class SourcesSpec extends AnyFunSuite {
       Seq("_staging_dead0001", "meta"), "the claim left its temp file behind")
   }
 
+  test("a torn staged api_products feed beside a missing target is never read; " +
+      "the next build returns every row") {
+    // a private source dir: its own artifact key, so the shared feed of
+    // the fixture is untouched
+    val dir = Files.createTempDirectory("graft_feed").toString
+    spark.read.parquet(s"${TestSpark.sf}/part.parquet").write.parquet(s"$dir/part.parquet")
+    val path = Sinks.artifactPath(spark, "api_products", dir, "part.parquet")
+    // what a kill mid-stage leaves: a torn hidden copy and no target
+    val torn = java.nio.file.Path.of(Sinks.hiddenSibling(path).stripPrefix("file:"))
+    Files.createDirectories(torn)
+    Files.writeString(torn.resolve("part-00000.json"),
+      "{\"product_id\":1,\"rating\":{\"rate\":1.1,\"count\":8}}\n{\"product_id\":2,\"rat")
+    val feed = graft.operators.Cleaning.apiRatingsFeed(spark, dir)
+      .select("product_id", "rating_rate", "rating_count").collect()
+    val parts = spark.read.parquet(s"$dir/part.parquet").count()
+    assert(feed.length == parts && feed.map(_.getLong(0)).distinct.length == parts)
+    assert(feed.forall(r => !r.isNullAt(1) && !r.isNullAt(2)), "a rating read null")
+    assert(Sinks.exists(spark, path) && Files.exists(torn),
+      "the feed must be claimed beside the inert torn copy")
+  }
+
   test("concurrent publishes report every failure, not just the first") {
     val started = new java.util.concurrent.CountDownLatch(2)
     def failing(msg: String): () => Unit = () => {
