@@ -227,11 +227,16 @@ object Pipeline {
       r.getAs[Long]("ids") == r.getAs[Long]("n")
   }
 
-  private def preGatePass(spark: SparkSession, sfDir: String, mode: Mode): Boolean =
+  /** The validate_extract gate for `mode`: the corpus gates for the
+    * curation build, the retail validation gates otherwise.
+    */
+  private def requireGates(spark: SparkSession, sfDir: String, mode: Mode): Unit =
     mode match {
-      case CurationRun => corpusGatesPass(spark, sfDir)
-      case _ => Cleaning.validationGates(spark, sfDir)
-        .select(col("all_gates_pass")).collect().head.getBoolean(0)
+      case CurationRun => require(corpusGatesPass(spark, sfDir),
+        "corpus gates failed — aborting load (dag: validate_extract)")
+      case _ => require(Cleaning.validationGates(spark, sfDir)
+          .select(col("all_gates_pass")).collect().head.getBoolean(0),
+        "validation gates failed — aborting load (dag: validate_extract)")
     }
 
   /** Pre-flight reachability gate — the reference DAG's
@@ -267,15 +272,14 @@ object Pipeline {
       s"health check failed (dag: task_health_check): warehouse dir not creatable: $outDir")
   }
 
-  /** Persist the run log as a warehouse artifact under
+  /** Publish the run log as a warehouse artifact under
     * `outDir/_run_logs/<runId>` (the reference's etl_run_log table) so
     * an operator can tail run history — and so [[cleanupOldLogs]] has a
     * canonical place to sweep.
     */
   def writeRunLog(spark: SparkSession, stats: Seq[LoadStat], runId: String,
                   outDir: String): Unit =
-    runLog(spark, stats, runId).coalesce(1)
-      .write.mode("overwrite").parquet(s"$outDir/_run_logs/$runId")
+    Sinks.publish(runLog(spark, stats, runId).coalesce(1), s"$outDir/_run_logs/$runId"): Unit
 
   /** Retention sweep — the reference DAG's `cleanup_old_logs`
     * (dags/retail_etl_dag.py:638): delete run-log artifacts (and a
@@ -378,8 +382,10 @@ object Pipeline {
   /** Post-load validation — the reference DAG's `validate_load` task
     * (dags/retail_etl_dag.py:394-441), which re-reads the LOADED tables
     * and compares their row counts against what transform produced:
-    * re-read each PUBLISHED artifact, compare against the write-time
-    * counts, AND check the served schema against [[schemaContracts]].
+    * re-read each PUBLISHED artifact, compare against the count its
+    * own write observed (`Sinks.stage` never reads the staged copy
+    * back, so this is the one read of the published files), AND check
+    * the served schema against [[schemaContracts]].
     * The pre-write gate proves the INPUT was sound; this proves the
     * warehouse actually serves what the run claims it wrote (a partial
     * or clobbered publish passes every pre-write check; a type drift
@@ -421,52 +427,33 @@ object Pipeline {
   }
 
   /** Build the whole warehouse under `outDir`. Returns load stats in
-    * execution order (the reference's pipeline summary). With
-    * `validateLoadAfter` the run re-reads every published artifact and
-    * fails on any row-count mismatch (validate_load).
+    * execution order (the reference's pipeline summary); fails if any
+    * published artifact does not re-read as written (validate_load).
     */
   def run(spark: SparkSession, sfDir: String, outDir: String,
-          validateFirst: Boolean = true, mode: Mode = FullRun,
-          validateLoadAfter: Boolean = true): Seq[LoadStat] = {
-    healthCheck(spark, sfDir, outDir, mode)
-    if (validateFirst)
-      require(preGatePass(spark, sfDir, mode),
-        "validation gates failed — aborting load (dag: validate_extract)")
-    val stats = stageList(spark, sfDir, mode).map { case (name, mkDf) =>
-      val t0 = System.nanoTime()
-      val rows = Sinks.publish(mkDf(), s"$outDir/$name")
-      LoadStat(name, rows, (System.nanoTime() - t0) / 1e9)
-    }
-    if (validateLoadAfter) requireLoadsValid(spark, outDir, stats)
-    stats
-  }
+          validateFirst: Boolean = true, mode: Mode = FullRun): Seq[LoadStat] =
+    build(spark, sfDir, outDir, validateFirst, mode)
 
-  /** Incremental (daily-DAG) fact run — the reference's actual
-    * operating schedule (dags/retail_etl_dag.py: `schedule_interval`
-    * daily; load.py:195 WRITE_APPEND): each invocation loads ONE date
-    * slice of the fact into the standing warehouse via dynamic
-    * partition overwrite (Facts.loadFactIncrement), so a scheduler
-    * retry or backfill of the same slice is idempotent instead of
-    * double-counting. Runs the same health/validation gates as a full
-    * build; each slice becomes one LoadStat whose row count is the
-    * slice's rows as READ BACK from the published partitions (the
-    * validate_load discipline applied per increment).
+  /** The one build loop: health check, the validate_extract gate, one
+    * [[Sinks.publish]] per stage, then validate_load. `onStage` hears
+    * each step's name before it runs; `onStat` each stage's stat once
+    * it has published.
     */
-  def incrementalFactRun(spark: SparkSession, sfDir: String, outDir: String,
-                         slices: Seq[(Long, Long)],
-                         validateFirst: Boolean = true,
-                         grain: String = "month"): Seq[LoadStat] = {
-    healthCheck(spark, sfDir, outDir, FullRun)
-    if (validateFirst)
-      require(preGatePass(spark, sfDir, FullRun),
-        "validation gates failed — aborting load (dag: validate_extract)")
-    slices.map { case (fromKey, toKey) =>
-      val t0 = System.nanoTime()
-      val rows = Facts.loadFactIncrement(
-        spark, sfDir, s"$outDir/fact_sales", fromKey, toKey, grain)
-      LoadStat(s"fact_sales[$fromKey..$toKey]", rows,
-        (System.nanoTime() - t0) / 1e9)
+  private def build(spark: SparkSession, sfDir: String, outDir: String,
+                    validateFirst: Boolean, mode: Mode,
+                    onStage: String => Unit = _ => (),
+                    onStat: LoadStat => Unit = _ => ()): Seq[LoadStat] = {
+    healthCheck(spark, sfDir, outDir, mode)
+    onStage("validate_extract")
+    if (validateFirst) requireGates(spark, sfDir, mode)
+    val stats = stageList(spark, sfDir, mode).map { case (name, mkDf) =>
+      timedStep(name, onStage, onStat)(Sinks.publish(mkDf(), s"$outDir/$name"))
     }
+    // a mismatch here attributes the failure to the post-load gate,
+    // with every completed stage counted
+    onStage("validate_load")
+    requireLoadsValid(spark, outDir, stats)
+    stats
   }
 
   /** One arriving slice of the composed daily schedule: a `date_key`
@@ -500,9 +487,14 @@ object Pipeline {
     * schedule that includes an empty slice and a re-run.
     *
     * Runs the same health/validation gates as a full build once per
-    * invocation; each slice contributes a fact LoadStat and (when a
-    * shard arrived) a dedup LoadStat, so the run log reads like the
-    * DAG's task history.
+    * invocation — the corpus's only when some slice carries a doc or
+    * vector shard, so a fact-only schedule is the plain incremental
+    * fact run (load.py:195 WRITE_APPEND made idempotent: a retry or
+    * backfill of a slice rewrites only its own `grain` partitions).
+    * Each slice contributes a fact LoadStat, whose row count is the
+    * slice as READ BACK from the published partitions, and (when a
+    * shard arrived) a dedup and a vector LoadStat, so the run log reads
+    * like the DAG's task history.
     */
   def dailyRun(spark: SparkSession, sfDir: String, outDir: String,
                slices: Seq[DailySlice], nShards: Int,
@@ -510,42 +502,24 @@ object Pipeline {
                grain: String = "month",
                onStage: String => Unit = _ => (),
                onStat: LoadStat => Unit = _ => ()): Seq[LoadStat] = {
-    def stat(s: LoadStat): LoadStat = { onStat(s); s }
-    healthCheck(spark, sfDir, outDir, FullRun)
-    healthCheck(spark, sfDir, outDir, CurationRun)
+    val modes = FullRun +:
+      (if (slices.exists(s => s.docShard.nonEmpty || s.vecShard.nonEmpty))
+        Seq(CurationRun) else Nil)
+    modes.foreach(healthCheck(spark, sfDir, outDir, _))
     onStage("validate_extract")
-    if (validateFirst) {
-      require(preGatePass(spark, sfDir, FullRun),
-        "validation gates failed — aborting load (dag: validate_extract)")
-      require(preGatePass(spark, sfDir, CurationRun),
-        "corpus gates failed — aborting load (dag: validate_extract)")
-    }
+    if (validateFirst) modes.foreach(requireGates(spark, sfDir, _))
+    def step(table: String)(rows: => Long) = timedStep(table, onStage, onStat)(rows)
     val indexDir = s"$outDir/dedup_index"
     val stats = slices.flatMap { s =>
-      onStage(s"fact_sales[${s.fromKey}..${s.toKey}]")
-      val t0 = System.nanoTime()
-      val factRows = Facts.loadFactIncrement(
-        spark, sfDir, s"$outDir/fact_sales", s.fromKey, s.toKey, grain)
-      val factStat = stat(LoadStat(s"fact_sales[${s.fromKey}..${s.toKey}]",
-        factRows, (System.nanoTime() - t0) / 1e9))
-      val dedupStat = s.docShard.map { i =>
-        onStage(s"shard_dedup[shard=$i/$nShards]")
-        val t1 = System.nanoTime()
-        val rows = Dedup.shardIngest(spark, sfDir, indexDir, i, nShards).count()
-        stat(LoadStat(s"shard_dedup[shard=$i/$nShards]", rows,
-          (System.nanoTime() - t1) / 1e9))
-      }
+      val fact = step(s"fact_sales[${s.fromKey}..${s.toKey}]")(Facts.loadFactIncrement(
+        spark, sfDir, s"$outDir/fact_sales", s.fromKey, s.toKey, grain))
+      val dedup = s.docShard.map(i => step(s"shard_dedup[shard=$i/$nShards]")(
+        Dedup.shardIngest(spark, sfDir, indexDir, i, nShards).count()))
       // the vector side (q51's operating mode): first shard bootstraps
       // the codebook, later shards assign-on-arrival — no retrain
-      val vecStat = s.vecShard.map { i =>
-        onStage(s"vec_index[shard=$i/$nShards]")
-        val t2 = System.nanoTime()
-        val rows = Similarity.vecShardIngest(
-          spark, sfDir, s"$outDir/vec_index", i, nShards).count()
-        stat(LoadStat(s"vec_index[shard=$i/$nShards]", rows,
-          (System.nanoTime() - t2) / 1e9))
-      }
-      Seq(factStat) ++ dedupStat ++ vecStat
+      val vec = s.vecShard.map(i => step(s"vec_index[shard=$i/$nShards]")(
+        Similarity.vecShardIngest(spark, sfDir, s"$outDir/vec_index", i, nShards).count()))
+      fact +: (dedup ++ vec).toSeq
     }
     // the consumer-facing curation table: refreshed once per run, after
     // the last tick (each tick's own report is already published under
@@ -556,23 +530,29 @@ object Pipeline {
     val hasIndex = remDir.getFileSystem(spark.sessionState.newHadoopConf())
       .exists(remDir)
     if (!hasIndex) stats
-    else {
-      onStage("dedup_removals_standing")
-      val t2 = System.nanoTime()
-      val remRows = Sinks.publish(
-        Dedup.standingRemovals(spark, indexDir), s"$outDir/dedup_removals_standing")
-      stats :+ stat(LoadStat("dedup_removals_standing", remRows,
-        (System.nanoTime() - t2) / 1e9))
-    }
+    else stats :+ step("dedup_removals_standing")(Sinks.publish(
+      Dedup.standingRemovals(spark, indexDir), s"$outDir/dedup_removals_standing"))
   }
 
-  /** Bounded stage retry — the reference DAG's `retries=2` default_args
+  /** One reported step: announce `table` to `onStage`, run `rows`, and
+    * hand its [[LoadStat]] (rows, wall seconds) to `onStat`.
+    */
+  private def timedStep(table: String, onStage: String => Unit,
+                        onStat: LoadStat => Unit)(rows: => Long): LoadStat = {
+    onStage(table)
+    val t0 = System.nanoTime()
+    val stat = LoadStat(table, rows, (System.nanoTime() - t0) / 1e9)
+    onStat(stat)
+    stat
+  }
+
+  /** Bounded retry — the reference DAG's `retries=2` default_args
     * (dags/retail_etl_dag.py) and the extract path's retried API calls
-    * (extract.py:75-80): re-attempt a failed STAGE up to `retries`
-    * times before letting the failure propagate to the notifier. Only
-    * transient faults benefit (a torn source mid-replace, a staging
-    * rename race); the attempt count and last error survive into the
-    * thrown exception so the failure log tells the whole story.
+    * (extract.py:75-80), used by [[graft.sources.Fetch]]: re-attempt a
+    * failed step up to `retries` times before letting the failure
+    * propagate. Only transient faults benefit (a rate limit, a torn
+    * source mid-replace); the attempt count and last error survive
+    * into the thrown exception so the failure tells the whole story.
     */
   private[graft] def withRetries[A](retries: Int, stage: String,
       retryDelayMs: Long = 0L)(body: => A): A = {
@@ -625,37 +605,16 @@ object Pipeline {
     *    run id, stage/row/duration totals, the validate_load gate
     *    census, and the SLA-breach count. A failed run deletes it, so
     *    a stale SUCCESS summary can never sit beside a failure log.
+    *
+    * Every record publishes through [[Sinks.publish]], so a kill mid-write
+    * never leaves a torn one.
     */
   def runNotified(spark: SparkSession, sfDir: String, outDir: String,
                   validateFirst: Boolean = true, mode: Mode = FullRun,
-                  runId: String = "run", stageRetries: Int = 0,
+                  runId: String = "run",
                   stageSlaSeconds: Double = Double.PositiveInfinity): Seq[LoadStat] =
-    withAlerts(spark, outDir, runId, stageSlaSeconds) { (setStage, done) =>
-      healthCheck(spark, sfDir, outDir, mode)
-      setStage("validate_extract")
-      if (validateFirst)
-        require(preGatePass(spark, sfDir, mode),
-          "validation gates failed — aborting load (dag: validate_extract)")
-      stageList(spark, sfDir, mode).foreach { case (name, mkDf) =>
-        setStage(name)
-        val t0 = System.nanoTime()
-        val rows = withRetries(stageRetries, name) {
-          Sinks.publish(mkDf(), s"$outDir/$name")
-        }
-        done += LoadStat(name, rows, (System.nanoTime() - t0) / 1e9)
-      }
-      // validate_load: a mismatch here attributes the failure to the
-      // post-load gate, with every completed stage counted
-      setStage("validate_load")
-      val checks = validateLoad(spark, outDir, done.toSeq)
-      val bad = checks.filterNot(c => c.ok && c.schema_ok)
-      require(bad.isEmpty,
-        "post-load validation failed (dag: validate_load): " +
-          bad.map { c =>
-            val rows = s"${c.table} expected=${c.expected_rows} actual=${c.actual_rows}"
-            if (c.schema_ok) rows else s"$rows [schema: ${c.schema_diff}]"
-          }.mkString("; "))
-      (checks.size.toLong, checks.count(c => c.ok && c.schema_ok).toLong)
+    withAlerts(spark, outDir, runId, stageSlaSeconds) { (onStage, onStat) =>
+      build(spark, sfDir, outDir, validateFirst, mode, onStage, onStat).size.toLong
     }
 
   /** The daily schedule with the full notification surface — the DAG's
@@ -671,76 +630,84 @@ object Pipeline {
                        validateFirst: Boolean = true, grain: String = "month",
                        runId: String = "daily",
                        stageSlaSeconds: Double = Double.PositiveInfinity): Seq[LoadStat] =
-    withAlerts(spark, outDir, runId, stageSlaSeconds) { (setStage, done) =>
+    withAlerts(spark, outDir, runId, stageSlaSeconds) { (onStage, onStat) =>
       dailyRun(spark, sfDir, outDir, slices, nShards, validateFirst, grain,
-        onStage = setStage, onStat = s => done += s)
-      (0L, 0L)
+        onStage = onStage, onStat = onStat)
+      0L
     }
 
   /** Shared notification harness (the DAG callback surface): runs
-    * `body`, which reports its current stage via `setStage` and appends
-    * each completed [[LoadStat]] to `done`, then publishes the three
-    * presence-is-the-alert artifacts documented on [[runNotified]]
-    * (`_failure_log` / `_sla_log` / `_run_summary`). `body` returns the
-    * (total, passed) validate_load census for the summary row.
+    * `body`, which reports each step's name through its first callback
+    * and each completed [[LoadStat]] through its second, then publishes
+    * the three presence-is-the-alert artifacts documented on
+    * [[runNotified]] (`_failure_log` / `_sla_log` / `_run_summary`).
+    * `body` returns how many validate_load checks it ran; it throws if
+    * any failed, so a returned census is all-passed.
     */
   private def withAlerts(spark: SparkSession, outDir: String, runId: String,
       stageSlaSeconds: Double)(
-      body: (String => Unit,
-             scala.collection.mutable.ArrayBuffer[LoadStat]) => (Long, Long))
-      : Seq[LoadStat] = {
+      body: (String => Unit, LoadStat => Unit) => Long): Seq[LoadStat] = {
     import spark.implicits._
     val failurePath = s"$outDir/_failure_log"
     val slaPath = s"$outDir/_sla_log"
     val summaryPath = s"$outDir/_run_summary"
     var currentStage = "health_check"
     val done = scala.collection.mutable.ArrayBuffer.empty[LoadStat]
-    def rmIfExists(path: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(p)) fs.delete(p, true)
-    }
     def writeSlaLog(): Unit = {
       val breaches = done.filter(_.seconds > stageSlaSeconds).toSeq
-      if (breaches.isEmpty) rmIfExists(slaPath)
-      else breaches
+      if (breaches.isEmpty) removeRecord(spark, slaPath)
+      else Sinks.publish(breaches
         .map(s => (runId, s.table, s.seconds, stageSlaSeconds, s.rows))
         .toDF("run_id", "stage", "seconds", "sla_seconds", "rows")
-        .withColumn("recorded_at", current_timestamp())
-        .write.mode("overwrite").parquet(slaPath)
+        .withColumn("recorded_at", current_timestamp()), slaPath): Unit
     }
     try {
-      val (nChecks, nChecksOk) = body(s => currentStage = s, done)
+      val nChecks = body(s => currentStage = s, done += _)
       currentStage = "notify_success"
       writeSlaLog()
       val breachCount = done.count(_.seconds > stageSlaSeconds).toLong
-      Seq((runId, done.size.toLong,
-          done.map(_.rows).sum, done.map(_.seconds).sum,
-          nChecks, nChecksOk, breachCount))
-        .toDF("run_id", "n_stages", "total_rows", "total_seconds",
-          "n_load_checks", "n_load_checks_ok", "n_sla_breaches")
-        .withColumn("status", lit("SUCCESS"))
-        .withColumn("finished_at", current_timestamp())
-        .write.mode("overwrite").parquet(summaryPath)
-      rmIfExists(failurePath)
+      publishRecord(spark, summaryPath, contradicts = failurePath) {
+        Seq((runId, done.size.toLong,
+            done.map(_.rows).sum, done.map(_.seconds).sum,
+            nChecks, nChecks, breachCount))
+          .toDF("run_id", "n_stages", "total_rows", "total_seconds",
+            "n_load_checks", "n_load_checks_ok", "n_sla_breaches")
+          .withColumn("status", lit("SUCCESS"))
+          .withColumn("finished_at", current_timestamp())
+      }
       done.toSeq
     } catch {
       case e: Throwable =>
         // the failure log itself can fail (e.g. health_check failed
         // BECAUSE the warehouse dir is unreachable) — never let the
         // alert write mask the root cause
-        try {
+        try publishRecord(spark, failurePath, contradicts = summaryPath) {
           Seq((runId, currentStage, e.getClass.getSimpleName,
               Option(e.getMessage).getOrElse("").take(500), done.size.toLong))
             .toDF("run_id", "failed_stage", "error_class", "error", "n_completed_stages")
             .withColumn("status", lit("FAILED"))
             .withColumn("failed_at", current_timestamp())
-            .write.mode("overwrite").parquet(failurePath)
         } catch { case w: Throwable => e.addSuppressed(w) }
-        try { writeSlaLog(); rmIfExists(summaryPath) }
+        try writeSlaLog()
         catch { case w: Throwable => e.addSuppressed(w) }
         throw e
     }
+  }
+
+  /** Publish the run record `record` at `path` after deleting the record
+    * it `contradicts` (a SUCCESS summary and a failure log). Delete
+    * first: a kill between the two steps then leaves neither record,
+    * never both.
+    */
+  private[graft] def publishRecord(spark: SparkSession, path: String,
+                                   contradicts: String)(record: => DataFrame): Unit = {
+    removeRecord(spark, contradicts)
+    Sinks.publish(record, path): Unit
+  }
+
+  private def removeRecord(spark: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true): Unit
   }
 
   /** Run-log DataFrame from load stats (etl_run_log analog). */

@@ -3,7 +3,8 @@ package graft.sources
 import java.util.Properties
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Warehouse write surface — the reference's load layer
   * (/root/reference/etl/load.py): the one publish protocol every
@@ -14,11 +15,12 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   *  - REPLACE, [[publish]] = [[stage]] then [[swap]] (load.py:273-274:
   *    load the batch to staging, then swap it in). `stage` writes the
-  *    frame to a hidden sibling of the target and counts it back (a
-  *    parquet count is footer-metadata-only: it proves every staged
-  *    file is complete without rescanning the data). `swap` renames
-  *    the current target aside, renames the staged copy in, then
-  *    deletes the old copy. The data is written exactly once. Replace
+  *    frame to a hidden sibling of the target in one job and takes the
+  *    row count from that write, through an unnamed `Observation`: the
+  *    staged copy is never read back. `swap` renames the current target
+  *    aside, renames the staged copy in, then deletes the old copy. The
+  *    data is written exactly once and read by no one until a reader
+  *    (such as `Pipeline.validateLoad`) opens the target. Replace
   *    is SINGLE-WRITER per target: two racing publishers of one path
   *    can interleave their renames (builders are deterministic, so
   *    either content is right, but a reader between a swap's two
@@ -103,17 +105,18 @@ object Sinks {
       s"_${kind}_${java.util.UUID.randomUUID().toString.take(8)}").toString
 
   /** Write `df` as `format` (parquet unless told otherwise) to a hidden
-    * sibling of `path` and count it back. Returns the staged dir and its
-    * row count; a failed write drops its copy.
+    * sibling of `path`. Returns the staged dir and the row count the
+    * write itself observed; a failed write drops its copy.
     */
   def stage(df: DataFrame, path: String, format: String = "parquet"): (String, Long) = {
     val spark = df.sparkSession
     val staged = hiddenSibling(path)
     dropOnFailure(spark, staged) {
-      df.write.mode(SaveMode.Overwrite).format(format).save(staged)
-      // read back the part files by glob: naming the hidden dir itself
-      // draws Spark's "All paths were ignored" warning on every publish
-      (staged, spark.read.format(format).load(s"$staged/*").count())
+      // unnamed: concurrent stages must never share an observation name
+      val written = Observation()
+      df.observe(written, count(lit(1)).as("rows"))
+        .write.mode(SaveMode.Overwrite).format(format).save(staged)
+      (staged, written.get("rows").asInstanceOf[Long])
     }
   }
 

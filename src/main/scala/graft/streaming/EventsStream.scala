@@ -137,10 +137,11 @@ object EventsStream {
     * pairs can surface with event times behind the downstream
     * watermark). So the census rides the CurationStream pattern
     * instead: foreachBatch folds each micro-batch's pairs into
-    * per-batch bucket counts keyed `batch=<id>` — a replayed batch
-    * overwrites only its own partition (at-least-once replay is
-    * idempotent), and [[servedAttributionCensus]] serves the standing
-    * census as the sum over partitions. No chained stateful operator,
+    * per-batch bucket counts keyed `batch=<id>`, each published whole
+    * through `Sinks.publish` — a replayed batch replaces only its own
+    * partition (at-least-once replay is idempotent), and
+    * [[servedAttributionCensus]] serves the standing census as the sum
+    * over partitions. No chained stateful operator,
     * no correctness escape hatch, bounded 4-row state per batch.
     *
     * Long-stream bounds (a census of unbounded lifetime may not grow
@@ -176,10 +177,9 @@ object EventsStream {
           .agg(count(lit(1)).as("n_pairs"))
         val rows = agg.collect() // ≤4 rows by construction
         if (rows.nonEmpty)
-          spark.createDataFrame(
-              java.util.Arrays.asList(rows: _*), agg.schema)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$outDir/census/batch=$id")
+          graft.sources.Sinks.publish(spark.createDataFrame(
+              java.util.Arrays.asList(rows: _*), agg.schema).coalesce(1),
+            s"$outDir/census/batch=$id")
         compactCensus(spark, outDir, id, compactAfter)
       }
       .start()

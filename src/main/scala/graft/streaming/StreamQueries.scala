@@ -142,9 +142,7 @@ object StreamQueries {
     * batch for data that fits in one. Partitions derive from staged
     * bytes at ~16 MB each (clamped to [4, session default] so a big
     * feed keeps the session width and the driver's lower-cpu bench
-    * modes are never widened); `spark.graft.stream.shuffle.partitions`
-    * overrides for production feeds, where the right width tracks
-    * per-trigger volume, not total corpus size. Results are invariant:
+    * modes are never widened). Results are invariant:
     * every wrapper publishes chopping-invariant columns (aggregates,
     * survivor sets, per-key state walks), none of which depend on state
     * partition count. Conf is restored even on failure; the sink
@@ -152,22 +150,18 @@ object StreamQueries {
     */
   private def withFeedShuffle[T](spark: SparkSession, srcDir: String)(body: => T): T = {
     val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val parts = spark.conf.getOption("spark.graft.stream.shuffle.partitions")
-      .map(_.toInt).getOrElse {
-        val p = Paths.get(srcDir)
-        val bytes =
-          if (!Files.exists(p)) 0L
-          else {
-            val s = Files.walk(p)
-            try s.filter(Files.isRegularFile(_))
-              .mapToLong(f => Files.size(f)).sum()
-            finally s.close()
-          }
-        // session width is a TRUE upper bound (r14 advice: the old
-        // max-outside form widened a sub-4-partition session to 4,
-        // contradicting the clamp contract above)
-        math.min(saved.toLong, math.max(4L, bytes / (16L << 20) + 1)).toInt
+    val p = Paths.get(srcDir)
+    val bytes =
+      if (!Files.exists(p)) 0L
+      else {
+        val s = Files.walk(p)
+        try s.filter(Files.isRegularFile(_))
+          .mapToLong(f => Files.size(f)).sum()
+        finally s.close()
       }
+    // session width is a TRUE upper bound: a session narrower than 4
+    // partitions is never widened to 4
+    val parts = math.min(saved.toLong, math.max(4L, bytes / (16L << 20) + 1)).toInt
     spark.conf.set("spark.sql.shuffle.partitions", parts)
     try body finally spark.conf.set("spark.sql.shuffle.partitions", saved)
   }

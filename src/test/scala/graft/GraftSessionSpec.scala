@@ -87,6 +87,6 @@ class GraftSessionSpec extends AnyFunSuite {
         .toSet
       finally stream.close()
     assert(keys == Set("hot.df", "hot.salts", "prefix.ext", "q59.hint.bytes",
-      "scratch.budget.bytes", "stream.shuffle.partitions"))
+      "scratch.budget.bytes"))
   }
 }

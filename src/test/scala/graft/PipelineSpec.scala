@@ -52,9 +52,10 @@ class PipelineSpec extends AnyFunSuite {
     // three calendar slices cover the whole span (synthetic orders run
     // 1995-2001), plus an empty leading slice — a day with no orders is
     // legal daily input and must load as 0 rows, not fail
-    val slices = Seq((19900101L, 19941231L), (0L, 19971231L),
-      (19980101L, 19991231L), (20000101L, 99999999L))
-    val stats = Pipeline.incrementalFactRun(spark, TestSpark.sf, out, slices)
+    val slices = Seq(Pipeline.DailySlice(19900101L, 19941231L),
+      Pipeline.DailySlice(0L, 19971231L), Pipeline.DailySlice(19980101L, 19991231L),
+      Pipeline.DailySlice(20000101L, 99999999L))
+    val stats = Pipeline.dailyRun(spark, TestSpark.sf, out, slices, nShards = 1)
     assert(stats.size == 4)
     assert(stats.head.rows == 0 && stats.tail.forall(_.rows > 0))
     val full = graft.operators.Facts.factSales(spark, TestSpark.sf)
@@ -64,8 +65,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(inc.except(full).count() == 0 && full.except(inc).count() == 0)
     // scheduler retry: re-running the MIDDLE slice rewrites only its
     // partitions — row count unchanged, content unchanged
-    Pipeline.incrementalFactRun(spark, TestSpark.sf, out,
-      Seq(slices(2)), validateFirst = false)
+    Pipeline.dailyRun(spark, TestSpark.sf, out,
+      Seq(slices(2)), nShards = 1, validateFirst = false)
     val after = spark.read.parquet(s"$out/fact_sales").drop("month_key")
     assert(after.count() == full.count())
     assert(after.except(full).count() == 0)
@@ -83,14 +84,14 @@ class PipelineSpec extends AnyFunSuite {
     // mid-month bounds — exactly what month grain must REJECT (dynamic
     // overwrite at month grain would silently drop the rest of a
     // touched month) and day grain handles natively
-    val slices = Seq((19950101L, 19950110L), (19950111L, 19950120L),
-      (19950121L, 19950131L))
+    val slices = Seq(Pipeline.DailySlice(19950101L, 19950110L),
+      Pipeline.DailySlice(19950111L, 19950120L), Pipeline.DailySlice(19950121L, 19950131L))
     val ex = intercept[IllegalArgumentException] {
-      Pipeline.incrementalFactRun(spark, TestSpark.sf, out,
-        Seq((19950101L, 19950110L)), validateFirst = false)
+      Pipeline.dailyRun(spark, TestSpark.sf, out,
+        Seq(Pipeline.DailySlice(19950101L, 19950110L)), nShards = 1, validateFirst = false)
     }
     assert(ex.getMessage.contains("month-aligned"))
-    val stats = Pipeline.incrementalFactRun(spark, TestSpark.sf, out, slices,
+    val stats = Pipeline.dailyRun(spark, TestSpark.sf, out, slices, nShards = 1,
       grain = "day")
     assert(stats.size == 3 && stats.map(_.rows).sum > 0)
     val full = graft.operators.Facts.factSales(spark, TestSpark.sf)
@@ -102,8 +103,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(inc.count() == full.count())
     assert(inc.except(full).count() == 0 && full.except(inc).count() == 0)
     // per-day idempotent re-run of the middle slice
-    Pipeline.incrementalFactRun(spark, TestSpark.sf, out,
-      Seq(slices(1)), validateFirst = false, grain = "day")
+    Pipeline.dailyRun(spark, TestSpark.sf, out,
+      Seq(slices(1)), nShards = 1, validateFirst = false, grain = "day")
     val after = spark.read.parquet(s"$out/fact_sales")
       .select(full.columns.map(col).toSeq: _*)
     assert(after.count() == full.count() && after.except(full).count() == 0)
@@ -503,6 +504,36 @@ class PipelineSpec extends AnyFunSuite {
     val fl = spark.read.parquet(s"$out/b/_failure_log").collect().head
     assert(fl.getAs[String]("run_id") == "daily_boom")
     assert(fl.getAs[String]("status") == "FAILED")
+  }
+
+  test("an alert record deletes its contradiction before it publishes: " +
+      "a kill mid-publish never leaves a SUCCESS summary beside a failure log") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft_wh_alerts").toString
+    val (summary, failure) = (s"$out/_run_summary", s"$out/_failure_log")
+    val fs = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def has(p: String) = fs.exists(new org.apache.hadoop.fs.Path(p))
+    // each direction: the contradicting record stands, then the new
+    // record's publish dies (the thunk throws where a kill would land)
+    for ((standing, next) <- Seq(summary -> failure, failure -> summary)) {
+      Seq("stale").toDF("status").write.parquet(standing)
+      intercept[IllegalStateException] {
+        Pipeline.publishRecord(spark, next, contradicts = standing) {
+          throw new IllegalStateException("killed mid-publish")
+        }
+      }
+      assert(!(has(summary) && has(failure)),
+        "a failure log and a SUCCESS summary must never coexist")
+      assert(!has(standing) && !has(next))
+    }
+    // a completed publish leaves exactly its own record
+    Seq("stale").toDF("status").write.parquet(failure)
+    Pipeline.publishRecord(spark, summary, contradicts = failure) {
+      Seq("SUCCESS").toDF("status")
+    }
+    assert(has(summary) && !has(failure))
+    assert(spark.read.parquet(summary).as[String].collect().toSeq == Seq("SUCCESS"))
   }
 
   test("a successful full run publishes the one-row _run_summary") {

@@ -217,6 +217,62 @@ class SourcesSpec extends AnyFunSuite {
     assert(sites(".rename(") == sinks, "rename outside Sinks")
     assert(sites("""replaceAll("[^A-Za-z0-9._-]"""") == sinks,
       "artifact key rule copied outside Sinks")
+
+    // every DataFrame `.write` outside Sinks is a `noop` warm-up or one
+    // of these named in-place writes, none of them a published artifact
+    val inPlace = Map(
+      "graft/operators/Facts.scala" -> 1, // a fact increment's partitioned staging, swapped in by Sinks.swap
+      "graft/Verify.scala" -> 1, // the correctness dump scripts/check.py reads
+      "graft/tools/ScaleGen.scala" -> 3, // the scaled input tables
+      "graft/streaming/StreamQueries.scala" -> 4, // the scratch feeds a stream query replays
+      "graft/Bench.scala" -> 2) // the bucketed bench tables
+    val WriteSite = """\.write(?![A-Za-z0-9_(])[^\n]*""".r
+    val writes = files.flatMap { p =>
+      WriteSite.findAllIn(new String(Files.readAllBytes(p)))
+        .filterNot(_.contains("\"noop\"")).map(_ => root.relativize(p).toString)
+    }.filterNot(sinks.contains).groupBy(identity).view.mapValues(_.size).toMap
+    assert(writes == inPlace, s"a .write outside Sinks that is not on the named list: $writes")
+  }
+
+  test("stage counts the rows its own write saw, exactly, and a parquet stage is one job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = Files.createTempDirectory("graft_stagecount").toString
+    val li = spark.read.parquet(s"${TestSpark.sf}/lineitem.parquet")
+    // empty, shuffled into 7 partitions, an AQE aggregate, and JSON
+    for ((df, format) <- Seq(li.where(lit(false)) -> "parquet",
+        li.repartition(7, col("l_orderkey")) -> "parquet",
+        li.groupBy(col("l_orderkey")).agg(count(lit(1)).as("n")) -> "parquet",
+        li.groupBy(col("l_orderkey")).agg(count(lit(1)).as("n")) -> "json")) {
+      val (staged, n) = Sinks.stage(df, s"$dir/t", format)
+      assert(n == df.count() && spark.read.format(format).load(staged).count() == n)
+    }
+    // jobs of one group, counted by a listener; a second group's job
+    // marks the end, since the listener bus delivers events in order
+    val sc = spark.sparkContext
+    val group = s"graft_stage_jobs_${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet(): Unit
+          case Some(g) if g == s"$group.end" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one parquet stage")
+      val (_, n) = Sinks.stage(li, s"$dir/jobs")
+      sc.setJobGroup(s"$group.end", "listener drain")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(n == 6000L)
+      assert(jobs.get == 1, s"a parquet stage ran ${jobs.get} jobs")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("sourceKey fingerprint changes when the source file is regenerated") {
