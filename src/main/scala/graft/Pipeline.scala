@@ -473,8 +473,9 @@ object Pipeline {
     *     into the standing fact warehouse by dynamic partition
     *     overwrite (Facts.loadFactIncrement, idempotent on retry), and
     *  2. a d19-style shard-dedup probe — the slice's document shard
-    *     probing the GROWING standing index and publishing its band /
-    *     shingle-array / removal tiers (Dedup.shardIngest),
+    *     publishing its index tier (one bands + shingle-set row per
+    *     doc), probing the GROWING standing index and publishing its
+    *     removal tier (Dedup.shardIngest),
     *  3. a q51-style vector ingest — the slice's embedding shard
     *     bootstrapping the codebook (first shard) or assigning to it
     *     on arrival (Similarity.vecShardIngest),

@@ -184,10 +184,6 @@ object Dedup {
       candidatesFrame(spark, dir, nb, nr))
   }
 
-  /** LSH candidate pairs from a prebuilt (doc_id, shingle) frame — lets
-    * d07 share one shingle computation between the signature build and
-    * the exact-Jaccard verification.
-    */
   /** Per-doc LSH band table (doc_id, band_j, band_hash) from a
     * (doc_id, shingle) frame — 18 min-wise signatures as STATIC
     * aggregate columns over ONE pass (no k-explosion: one row per doc
@@ -200,9 +196,10 @@ object Dedup {
     * are nearly free, which is why this uses MORE of them banded
     * NARROWER (6 bands × 3 rows): recall at J=0.8 rises from ~80%
     * (3×4) to ~99.9%, the property DedupSpec's LSH-recall test pins.
-    * Exposed as its own stage because the band table is ALSO the
-    * standing index a new shard probes (d19) — per-doc rows, so a
-    * subset corpus yields exactly the matching subset of bands.
+    * The same signature, nested one row per doc, is the band column of
+    * the standing index tier a new shard probes (d19, [[indexTierOf]])
+    * — per-doc rows, so a subset corpus yields exactly the matching
+    * subset of bands.
     */
   private[graft] def minhashBandsOf(sh: DataFrame): DataFrame =
     minhashBandsOf(sh, 6, 3)
@@ -218,23 +215,51 @@ object Dedup {
     */
   private[graft] def minhashBandsOf(sh: DataFrame, nBands: Int,
                                     rowsPerBand: Int): DataFrame = {
+    val (sigCols, bandHashes) = signature(nBands, rowsPerBand)
+    val sig = sh.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
+    sig.select(col("doc_id"),
+      explode(array(bandHashes.zipWithIndex.map { case (h, j) =>
+        struct(lit(j.toLong).as("band_j"), h.as("band_hash")) }: _*))
+        .as("b"))
+      .select(col("doc_id"), col("b.band_j").as("band_j"), col("b.band_hash").as("band_hash"))
+  }
+
+  /** The MinHash signature both band layouts share: the per-doc
+    * aggregate columns `sig_k` over a (doc_id, shingle) frame, and the
+    * band hashes over them (band j hashes sig_{r·j} … sig_{r·j+r-1}).
+    */
+  private def signature(nBands: Int, rowsPerBand: Int): (Seq[Column], Seq[Column]) = {
     require(nBands * rowsPerBand <= 18,
       s"banding $nBands x $rowsPerBand exceeds the 18-hash signature family")
     val m = md5(col("shingle"))
     val h1 = conv(substring(m, 1, 15), 16, 10).cast("long")
     val h2 = conv(substring(m, 17, 14), 16, 10).cast("long")
     val ks = 0 until (nBands * rowsPerBand)
-    val sigCols = ks.map(k => min(h1 + lit(k.toLong) * h2).as(s"sig_$k"))
-    val sig = sh.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
-    sig.select(col("doc_id"),
-      explode(array((0 until nBands).map(j => struct(
-        lit(j.toLong).as("band_j"),
-        md5(concat_ws("", (0 until rowsPerBand).map(i =>
-          col(s"sig_${rowsPerBand * j + i}").cast("string")): _*))
-          .as("band_hash"))): _*))
-        .as("b"))
-      .select(col("doc_id"), col("b.band_j").as("band_j"), col("b.band_hash").as("band_hash"))
+    (ks.map(k => min(h1 + lit(k.toLong) * h2).as(s"sig_$k")),
+      (0 until nBands).map(j => md5(concat_ws("", (0 until rowsPerBand).map(i =>
+        col(s"sig_${rowsPerBand * j + i}").cast("string")): _*))))
   }
+
+  /** The shard index tier over a (doc_id, shingle) frame: one row per
+    * doc, (doc_id, bands, sh_set, n), from ONE aggregation — `bands`
+    * holds the doc's band hashes in band order (the band table of
+    * [[minhashBandsOf]], nested), `sh_set` its shingle set and `n` the
+    * set's size (the exact-Jaccard currency of [[verifyWithSets]]). The
+    * probe reads the bands, the verification the sets: one row keeps a
+    * doc's facts together, so a tick publishes them in one write.
+    */
+  private[graft] def indexTierOf(sh: DataFrame, nBands: Int,
+                                 rowsPerBand: Int): DataFrame = {
+    val (sigCols, bandHashes) = signature(nBands, rowsPerBand)
+    sh.groupBy(col("doc_id"))
+      .agg(collect_set(col("shingle")).as("sh_set"), sigCols: _*)
+      .select(col("doc_id"), array(bandHashes: _*).as("bands"), col("sh_set"),
+        size(col("sh_set")).cast("long").as("n"))
+  }
+
+  /** A tier's band rows (doc_id, band_j, band_hash), the probe's join side. */
+  private def tierBands(tier: DataFrame): DataFrame =
+    tier.select(col("doc_id"), posexplode(col("bands")).as(Seq("band_j", "band_hash")))
 
   /** Candidate pairs from any band table — the ≥1-shared-band blocking
     * join (shared by the d03 build and d27's chosen-banding rebuild).
@@ -845,45 +870,41 @@ object Dedup {
                           minJaccard: Double): (DataFrame, DataFrame) =
     verifyPairsOf(Tables.documents(spark, dir), cand, minJaccard)
 
-  /** Documents-frame version of the exact verification — the d19 shard
-    * probe verifies against corpus ∪ shard, not a source dir.
+  /** Documents-frame version of the exact verification — the
+    * full-rebuild reference [[removalSetOf]] verifies an arbitrary
+    * frame, not a source dir.
     */
   private def verifyPairsOf(docs: DataFrame, cand: DataFrame,
                             minJaccard: Double): (DataFrame, DataFrame) = {
-    val candDocs = cand.select(col("doc_a").as("doc_id"))
-      .union(cand.select(col("doc_b").as("doc_id"))).distinct()
     val shSets = shingleSetsOf(
-        docs.join(broadcast(candDocs), Seq("doc_id"), "left_semi"))
+        docs.join(broadcast(candidateDocs(cand)), Seq("doc_id"), "left_semi"))
       .persist()
-    verifyWithSets(shSets, cand, minJaccard)
+    (verifyWithSets(shSets, cand, minJaccard), shSets)
   }
 
+  /** The distinct ids on either side of a (doc_a, doc_b) pair frame —
+    * the broadcast filter that prunes shingle sets to candidate docs.
+    */
+  private def candidateDocs(cand: DataFrame): DataFrame =
+    cand.select(col("doc_a").as("doc_id"))
+      .union(cand.select(col("doc_b").as("doc_id"))).distinct()
+
   /** Per-doc shingle SET arrays (doc_id, sh_set, n) — the verification
-    * currency: `array_intersect` scores pairs against these. Split out
-    * because the arrays are ALSO an artifact tier (d19 persists the
-    * standing corpus's arrays so re-verification per arriving shard
-    * stops re-exploding corpus text).
+    * currency: `array_intersect` scores pairs against these (the shard
+    * index tier carries the same columns, see [[indexTierOf]]).
     */
   private def shingleSetsOf(docs: DataFrame): DataFrame =
-    shingleSetsFrom(wordShinglesOf(docs, dedup = false))
-
-  /** Set-array aggregation over an existing (doc_id, shingle) frame —
-    * the seam that lets a caller holding a persisted shingle frame
-    * (ingestShardCore's two tier writes) derive the arrays without a
-    * second text explosion.
-    */
-  private def shingleSetsFrom(sh: DataFrame): DataFrame =
-    sh.groupBy(col("doc_id"))
+    wordShinglesOf(docs, dedup = false).groupBy(col("doc_id"))
       .agg(collect_set(col("shingle")).as("sh_set"))
       .select(col("doc_id"), col("sh_set"), size(col("sh_set")).cast("long").as("n"))
 
-  /** Exact-Jaccard scoring of `cand` against an ALREADY-PERSISTED
-    * (doc_id, sh_set, n) frame (both pair sides join it). Returns the
-    * verified frame plus that same frame for the caller to unpersist.
+  /** Exact-Jaccard scoring of `cand` against a (doc_id, sh_set, n)
+    * frame (both pair sides join it): the pairs with jaccard ≥
+    * `minJaccard`.
     */
   private def verifyWithSets(shSets: DataFrame, cand: DataFrame,
-                             minJaccard: Double): (DataFrame, DataFrame) = {
-    val verified = cand
+                             minJaccard: Double): DataFrame =
+    cand
       .join(shSets.select(col("doc_id").as("doc_a"), col("sh_set").as("set_a"), col("n").as("n_a")), Seq("doc_a"))
       .join(shSets.select(col("doc_id").as("doc_b"), col("sh_set").as("set_b"), col("n").as("n_b")), Seq("doc_b"))
       .withColumn("inter", size(array_intersect(col("set_a"), col("set_b"))).cast("long"))
@@ -891,8 +912,6 @@ object Dedup {
         col("inter").cast("double") /
           (col("n_a") + col("n_b") - col("inter")).cast("double"))
       .filter(col("jaccard") >= minJaccard)
-    (verified, shSets)
-  }
 
   /** Warehouse path for the VERIFIED pair artifact (jaccard ≥ 0.5) —
     * the tier above the candidate artifact: candidates answer "which
@@ -981,14 +1000,15 @@ object Dedup {
   /** Incremental dedup of a NEW document shard against a standing
     * corpus WITHOUT recomputing the corpus side — the production
     * curation flow (each crawl shard dedups against the published
-    * index, not against a full-corpus rebuild): the shard's MinHash
-    * band rows probe the corpus's published per-doc BAND TABLE by
-    * band-bucket equi-join (plus a shard-internal self-join), and the
-    * exact Jaccard verification runs only on the candidate slice. The
+    * index, not against a full-corpus rebuild): the shard's band
+    * hashes probe the corpus's published INDEX TIER ([[indexTierOf]])
+    * by band-bucket equi-join (plus a shard-internal self-join), and the
+    * exact Jaccard verification runs only on the candidate slice,
+    * against the shingle sets the same tier rows carry. The
     * report uses d07's keep-min survivorship, which keeps incremental
     * EXACTLY equal to a full rebuild: a full rebuild's candidate pairs
     * restricted to shard-involving pairs are precisely the probe's
-    * pairs (band rows are per-doc and deterministic), so
+    * pairs (band hashes are per-doc and deterministic), so
     * standing-corpus removals ∪ this report's removals == the
     * full-rebuild removal set — DedupSpec pins the equality on a split
     * corpus. (Keep-min also means a shard doc can RETRO-REMOVE a
@@ -997,56 +1017,26 @@ object Dedup {
     * the retro rows filtered out.)
     *
     * Scale: the corpus side is READ, never recomputed — the whole
-    * point. Shard bands are computed over the (small) shard only; the
-    * probe is a band-bucket equi-join of shard bands against the index
+    * point. Only the (small) shard is fingerprinted; the probe is a
+    * band-bucket equi-join of shard bands against the index
     * (shard-sized output, never all-pairs); verification touches
     * candidate docs only.
+    *
+    * Returns the lazy report; nothing is persisted, so one query plan
+    * holds the whole probe and reuses its exchanges. `is_shard_doc`
+    * comes from the shard tier's ids: a removed doc has shingles, so it
+    * has a tier row. Both tiers MUST share one banding — bands of
+    * different (b, r) never bucket-collide, so a mismatch silently
+    * probes nothing.
     */
-  def shardProbe(corpusDocs: DataFrame, shardDocs: DataFrame,
-                 corpusBands: DataFrame,
-                 corpusSets: Option[DataFrame] = None,
-                 shardPrebuilt: Option[(DataFrame, DataFrame)] = None,
-                 banding: (Int, Int) = (6, 3)): DataFrame = {
-    val (report, shSets) =
-      shardProbeFrame(corpusDocs, shardDocs, corpusBands, corpusSets,
-        shardPrebuilt, banding)
-    // the verify stage persists its per-doc shingle arrays (they feed
-    // both join sides); the report is tiny, so materialize it eagerly
-    // and release the intermediate before returning — the
-    // verifiedPairsArtifact discipline, without an artifact write
-    val out = report.localCheckpoint()
-    shSets.unpersist(false)
-    out
-  }
-
-  /** Lazy (report, persisted-intermediate) pair behind [[shardProbe]] —
-    * split out so PlanHygieneSpec can pin the probe's plan shape before
-    * the eager checkpoint erases it. With `corpusSets` the corpus side
-    * of the verification reads PRE-BUILT shingle arrays (the standing
-    * index's third artifact tier) instead of re-exploding corpus text —
-    * only the shard's own arrays are computed per arriving shard.
-    */
-  private[graft] def shardProbeFrame(corpusDocs: DataFrame, shardDocs: DataFrame,
-                                     corpusBands: DataFrame,
-                                     corpusSets: Option[DataFrame] = None,
-                                     // (bands, shingle arrays) ALREADY PUBLISHED for the shard —
-                                     // ingestShardCore publishes its tiers first and probes the
-                                     // read-back, so the shard's text is exploded twice per tick
-                                     // (once per tier write), not four times
-                                     shardPrebuilt: Option[(DataFrame, DataFrame)] = None,
-                                     // MUST match the banding `corpusBands` was built with —
-                                     // bands of different (b, r) never bucket-collide, so a
-                                     // mismatch silently probes nothing
-                                     banding: (Int, Int) = (6, 3)): (DataFrame, DataFrame) = {
-    val shardBands = shardPrebuilt.map(_._1)
-      .getOrElse(minhashBandsOf(wordShinglesOf(shardDocs, dedup = false),
-        banding._1, banding._2))
+  private[graft] def shardProbeFrame(corpusTier: DataFrame, shardTier: DataFrame): DataFrame = {
+    val shardBands = tierBands(shardTier)
     // shard bands vs (corpus ∪ shard) bands: shard×corpus pairs appear
     // once, shard×shard twice (both orientations) — least/greatest +
     // distinct normalizes to the same unordered pair set a full
     // rebuild's a.doc_id < b.doc_id join produces on shard-involving
     // pairs
-    val all = corpusBands.union(shardBands)
+    val all = tierBands(corpusTier).union(shardBands)
     val cand = shardBands.as("a").join(all.as("b"),
         col("a.band_j") === col("b.band_j") &&
           col("a.band_hash") === col("b.band_hash") &&
@@ -1054,32 +1044,19 @@ object Dedup {
       .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
       .distinct()
-    val candDocs = cand.select(col("doc_a").as("doc_id"))
-      .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-    val corpusSide = corpusSets match {
-      case Some(cs) => cs.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-      case None => shingleSetsOf(
-        corpusDocs.join(broadcast(candDocs), Seq("doc_id"), "left_semi"))
-    }
-    val shardSide = shardPrebuilt.map(_._2.join(broadcast(candDocs), Seq("doc_id"), "left_semi"))
-      .getOrElse(shingleSetsOf(
-        shardDocs.join(broadcast(candDocs), Seq("doc_id"), "left_semi")))
-    val shSets = corpusSide.unionByName(shardSide).persist()
-    val (verified, _) = verifyWithSets(shSets, cand, minJaccard = 0.5)
-    val report = verified.groupBy(col("doc_b").as("removed_doc_id"))
+    val shSets = corpusTier.unionByName(shardTier)
+      .select(col("doc_id"), col("sh_set"), col("n"))
+      .join(broadcast(candidateDocs(cand)), Seq("doc_id"), "left_semi")
+    val report = verifyWithSets(shSets, cand, minJaccard = 0.5)
+      .groupBy(col("doc_b").as("removed_doc_id"))
       .agg(
         min(col("doc_a")).as("kept_partner"),
         count(lit(1)).as("n_dup_pairs"),
         max(col("jaccard")).as("max_jaccard"))
-    // the flag derives from the SHARD FRAME itself (a tiny-report ⋈
-    // shard-ids join), not a membership predicate the caller must
-    // duplicate — which is what lets a streaming micro-batch, whose
-    // membership IS "rows of this batch", ride the same probe
-    val shardIds = shardDocs
+    val shardIds = shardTier
       .select(col("doc_id").as("removed_doc_id"), lit(true).as("is_shard_doc"))
-    val flagged = report.join(shardIds, Seq("removed_doc_id"), "left")
+    report.join(shardIds, Seq("removed_doc_id"), "left")
       .withColumn("is_shard_doc", coalesce(col("is_shard_doc"), lit(false)))
-    (flagged, shSets)
   }
 
   /** Removal-id set (distinct doc_b of keep-min-verified pairs) over an
@@ -1097,48 +1074,38 @@ object Dedup {
     out
   }
 
-  /** Standing-index path for the d19 demo split: the band table of the
+  /** Standing-index path for the d19 demo split: the index tier of the
     * held-out corpus (doc_id % 5 ≠ 4), fingerprint-keyed to the source
-    * like every artifact. "holdout5" marks the split spec — a real
-    * deployment keys this by corpus snapshot.
+    * like every artifact and banding-keyed like the d03 candidates.
+    * "holdout5" marks the split spec — a real deployment keys this by
+    * corpus snapshot.
     */
-  private def corpusBandsPath(spark: SparkSession, dir: String,
-                              nBands: Int, rowsPerBand: Int): String =
-    Sinks.artifactPath(spark, "lsh_bands", dir, tag = "holdout5") +
+  private def corpusTierPath(spark: SparkSession, dir: String,
+                             nBands: Int, rowsPerBand: Int): String =
+    Sinks.artifactPath(spark, "doc_index", dir, tag = "holdout5") +
       s"_b${nBands}r$rowsPerBand"
 
-  /** Shingle-array sibling of [[corpusBandsPath]] — the standing
-    * index's THIRD artifact tier (bands → pairs → verification
-    * arrays): per-doc sorted shingle sets of the held-out corpus, so
-    * each arriving shard's exact verification reads arrays instead of
-    * re-exploding corpus text.
-    */
-  private def corpusSetsPath(spark: SparkSession, dir: String): String =
-    Sinks.artifactPath(spark, "shingle_sets", dir, tag = "holdout5")
-
   /** d19 entry: split the documents table into a standing corpus
-    * (doc_id % 5 ≠ 4) and an arriving shard (doc_id % 5 = 4), publish
-    * the corpus band table AND its verification arrays iff missing
-    * (the standing index a previous run would have left), probe the
-    * shard against them, and return the shard-involving removal
-    * report. Per-shard cost is then: shard fingerprinting + the
-    * banded probe join + array-vs-array verification — the corpus is
-    * neither re-fingerprinted nor re-exploded.
+    * (doc_id % 5 ≠ 4) and an arriving shard (doc_id % 5 = 4), claim
+    * the corpus index tier iff missing (the standing index a previous
+    * run would have left), probe the shard's tier against it, and
+    * return the shard-involving removal report. Per-shard cost is then:
+    * the shard's one tier aggregation + the banded probe join +
+    * array-vs-array verification — the corpus is neither
+    * re-fingerprinted nor re-exploded.
     */
   def shardDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val isShard = pmod(col("doc_id"), lit(5L)) === 4
-    val corpus = docs.filter(!isShard)
-    val shard = docs.filter(isShard)
-    // the standing band index follows the d26 decision, like the d03
+    // the standing index follows the d26 decision, like the d03
     // candidates (banding-keyed path: a changed decision is a fresh
     // index build, never a mixed-banding probe)
     val (nb, nr) = chosenBanding(spark, dir)
-    val bands = Sinks.ensure(spark, corpusBandsPath(spark, dir, nb, nr))(
-      minhashBandsOf(wordShinglesOf(corpus, dedup = false), nb, nr))
-    val sets = Sinks.ensure(spark, corpusSetsPath(spark, dir))(
-      shingleSetsOf(corpus))
-    shardProbe(corpus, shard, bands, Some(sets), banding = (nb, nr))
+    def tier(d: DataFrame) = indexTierOf(wordShinglesOf(d, dedup = false), nb, nr)
+    val corpus = Sinks.ensure(spark, corpusTierPath(spark, dir, nb, nr))(
+      tier(docs.filter(!isShard)))
+    // the report is tiny: materialize it eagerly
+    shardProbeFrame(corpus, tier(docs.filter(isShard))).localCheckpoint()
   }
 
   // ─── growing-index shard ingest (the composed daily-DAG primitive) ───
@@ -1149,16 +1116,16 @@ object Dedup {
     * is a fixed holdout), the index here accumulates one partition per
     * ingested shard across invocations — the shape a daily DAG
     * actually runs (dags/retail_etl_dag.py:1 daily schedule), with
-    * each tick publishing three shard-keyed tiers:
+    * each tick publishing two shard-keyed tiers:
     *
-    *  - `bands/shard=<i>`   — the shard's MinHash band rows,
-    *  - `sets/shard=<i>`    — its per-doc shingle arrays,
+    *  - `docs/shard=<i>`     — the shard's index tier, one
+    *    (doc_id, bands, sh_set, n) row per doc ([[indexTierOf]]),
     *  - `removals/shard=<i>` — its keep-min removal report.
     *
-    * The probe reads every published shard partition EXCEPT the
+    * The probe reads every published tier partition EXCEPT the
     * shard's own (a retry must not probe against its own previous
     * publish), so RE-RUNNING a tick is idempotent: it overwrites only
-    * its own three partitions (Sinks.publish swap), and the
+    * its own two partitions (Sinks.publish swap), and the
     * union of removal ids over all published reports stays EXACTLY
     * the full-rebuild removal set — every unordered near-dup pair is
     * discovered at the ingest of its LATER shard (same-shard pairs at
@@ -1168,12 +1135,12 @@ object Dedup {
     * schedule; PipelineSpec pins the equality on a 3-shard schedule
     * with a re-run.
     *
-    * Scale: per-tick cost is shard fingerprinting + the band-bucket
-    * probe join + array-vs-array verification on the candidate slice —
-    * the standing corpus is READ (pruned to candidate docs by the
-    * left-semi join inside the probe), never recomputed. The removal
-    * union read [[standingRemovals]] is a scan of tiny per-shard
-    * reports.
+    * Scale: per-tick cost is the shard's one tier aggregation + the
+    * band-bucket probe join + array-vs-array verification on the
+    * candidate slice — the standing corpus is READ (pruned to
+    * candidate docs by the left-semi join inside the probe), never
+    * recomputed. The removal union read [[standingRemovals]] is a scan
+    * of tiny per-shard reports.
     */
   def shardIngest(spark: SparkSession, dir: String, indexDir: String,
                   shardId: Int, nShards: Int): DataFrame = {
@@ -1205,83 +1172,73 @@ object Dedup {
     (b.toInt, r.toInt)
   }
 
-  /** Shard-frame core of [[shardIngest]]: probe an ARBITRARY shard
-    * frame against every published shard partition except `shardKey`'s
-    * own, then publish the three tiers under that key. The corpus side
-    * is always the published artifacts (bands + shingle arrays) — the
-    * raw corpus docs frame is never needed, so any source of shards
-    * works: the batch scheduler's pmod split (integer keys) or a
-    * streaming micro-batch (the CurationStream "b<batchId>" keys).
+  /** Keys of the index's published `docs` tier partitions. An index
+    * that still holds the older two-tier layout (`bands/` beside
+    * `sets/`) is refused: its shards would list as none, and every
+    * pair across them would be silently missed.
+    */
+  private def tierKeys(spark: SparkSession, indexDir: String): Seq[String] = {
+    val old = Seq("bands", "sets").map(t => s"$indexDir/$t").filter(Sinks.exists(spark, _))
+    require(old.isEmpty, s"${old.mkString(", ")}: shard index tier of an older format " +
+      "(one docs/ tier replaced bands/ and sets/); ingest into a fresh index dir")
+    Sinks.shardKeys(spark, s"$indexDir/docs")
+  }
+
+  /** Shard-frame core of [[shardIngest]]: publish the shard's index tier
+    * under `shardKey`, probe it against every OTHER published tier
+    * partition, then publish its removal report under the same key.
+    * The corpus side is always the published tiers — the raw corpus
+    * docs frame is never needed, so any source of shards works: the
+    * batch scheduler's pmod split (integer keys) or a streaming
+    * micro-batch (the CurationStream "b<batchId>" keys).
+    *
+    * A kill between the two publishes leaves a tier partition without
+    * its report. Nothing reads the two in step, so other ticks and
+    * [[compactIndex]] go on, and the replayed tick republishes both;
+    * another shard probing the half-ingested tier can only DISCOVER
+    * pairs this shard's replayed report also holds.
     */
   private[graft] def ingestShardCore(shard: DataFrame, indexDir: String,
                                      shardKey: String,
                                      creationBanding: (Int, Int) = (6, 3)): DataFrame = {
     val spark = shard.sparkSession
     val (nb, nr) = indexBanding(spark, indexDir, creationBanding)
-    // published shards = the shard=<key> partitions already on disk,
-    // minus this tick's own (retry semantics)
-    val published = Sinks.shardKeys(spark, s"$indexDir/bands").filter(_ != shardKey)
-    val emptyDocs = shard.filter(lit(false))
-    val standingBands =
-      if (published.isEmpty)
-        minhashBandsOf(wordShinglesOf(emptyDocs, dedup = false), nb, nr)
-      else spark.read.parquet(published.map(k => s"$indexDir/bands/shard=$k"): _*)
-    val standingSets =
-      if (published.isEmpty) None
-      else Some(spark.read.parquet(published.map(k => s"$indexDir/sets/shard=$k"): _*))
-    // publish the shard's band + array tiers FIRST (one text explosion
-    // each), then probe the READ-BACK — the probe's shard side costs
-    // parquet reads instead of two more explosions. Crash between the
-    // tier writes and the report publish is the same retry story as
-    // before: stage-swap republish is idempotent, and another shard
-    // probing the half-ingested tiers can only DISCOVER pairs this
-    // shard's retried report would also hold.
-    val bandsP = s"$indexDir/bands/shard=$shardKey"
-    val setsP = s"$indexDir/sets/shard=$shardKey"
-    // ONE text explosion per tick, shared by both tier writes (the
-    // band and array tiers each derived their own shingle frame —
-    // round-14): persisted only across the two eager publishes, then
-    // released before the probe.
-    val shardSh = wordShinglesOf(shard, dedup = false).persist()
-    // materialize the shared shingle frame with ONE cheap action, then
-    // run the two independent tier publishes CONCURRENTLY (guide §2.6:
-    // overlap independent jobs — each publish is a small write + a
-    // footer-only count, mostly per-job latency; sequential they cost
-    // ~1.5 s of a ~3.4 s tick at sf0.1). Materializing first means the
-    // concurrent consumers read cached blocks instead of racing to
-    // compute the same partitions twice.
-    shardSh.write.mode("overwrite").format("noop").save()
-    Sinks.concurrently(
-      () => Sinks.publish(minhashBandsOf(shardSh, nb, nr), bandsP),
-      () => Sinks.publish(shingleSetsFrom(shardSh), setsP))
-    shardSh.unpersist(false)
+    // published shards = the tier partitions already on disk, minus
+    // this tick's own (retry semantics)
+    val published = tierKeys(spark, indexDir).filter(_ != shardKey)
+    val tier = indexTierOf(wordShinglesOf(shard, dedup = false), nb, nr)
+    val tierP = s"$indexDir/docs/shard=$shardKey"
+    Sinks.publish(tier, tierP)
+    // every tier partition has the tier frame's schema, so the reads
+    // need no footer inference; the first shard probes an empty corpus
+    def read(paths: Seq[String]) = spark.read.schema(tier.schema).parquet(paths: _*)
+    val shardTier = read(Seq(tierP))
+    val corpusTier =
+      if (published.isEmpty) shardTier.filter(lit(false))
+      else read(published.map(k => s"$indexDir/docs/shard=$k"))
     // the report publishes straight from the LAZY probe frame — the
-    // publish's write job is the report's one materialization (the
-    // former shardProbe localCheckpoint added a full extra
-    // materialization job per tick just to outlive shSets, which the
-    // publish-then-read-back makes redundant); the returned frame reads
-    // the published partition, immutable until this tick's own replay.
-    val (flagged, shSets) = shardProbeFrame(emptyDocs, shard, standingBands,
-      standingSets,
-      shardPrebuilt = Some((spark.read.parquet(bandsP), spark.read.parquet(setsP))),
-      banding = (nb, nr))
+    // publish's write job is the report's one materialization; the
+    // returned frame reads the published partition, immutable until
+    // this tick's own replay.
+    val report = shardProbeFrame(corpusTier, shardTier)
     val removalsP = s"$indexDir/removals/shard=$shardKey"
-    Sinks.publish(flagged, removalsP)
-    shSets.unpersist(false)
-    spark.read.parquet(removalsP)
+    Sinks.publish(report, removalsP)
+    spark.read.schema(report.schema).parquet(removalsP)
   }
 
-  /** Compact the growing shard index: fold every published shard
-    * partition (prior compactions included) into ONE generation-keyed
-    * partition per tier (`shard=c<n>`), then remove the sources — the
+  /** Compact the growing shard index: fold each tier's published
+    * partitions (prior compactions included) into ONE generation-keyed
+    * partition of that tier (`shard=c<n>`), then remove the sources — the
     * quiet-hour maintenance a per-batch-growing index needs so probe
     * cost stays O(index size), not O(index size + partition count).
-    * Returns the number of partitions folded (0 = nothing to do).
+    * Returns the number of `docs` partitions folded (0 = nothing to do).
     *
-    * Probe semantics are preserved EXACTLY: band rows merge as a set
+    * Each tier is listed and folded on its own, so a torn tick (a tier
+    * partition whose report never landed) compacts like any other.
+    * Probe semantics are preserved EXACTLY: tier rows merge as a set
     * union and candidate generation distincts band-bucket pairs, so
     * even the crash window where old and new partitions briefly
-    * coexist can only duplicate band rows, never change the pair set
+    * coexist can only duplicate tier rows, never change the pair set
     * a future probe discovers; re-running compaction cleans the
     * leftovers. The removal tier rolls up by keep-min (min
     * kept_partner / max jaccard commute with the merge; n_dup_pairs
@@ -1292,34 +1249,28 @@ object Dedup {
     * don't compact concurrently with an ingest tick.
     */
   def compactIndex(spark: SparkSession, indexDir: String): Int = {
-    val keys = Sinks.shardKeys(spark, s"$indexDir/bands")
-    if (keys.size <= 1) return 0
-    val gen = 1 + keys.filter(_.matches("c[0-9]+")).map(_.tail.toInt)
-      .foldLeft(-1)(math.max)
-    val target = s"c$gen"
-    Sinks.publish(
-      spark.read.parquet(keys.map(k => s"$indexDir/bands/shard=$k"): _*),
-      s"$indexDir/bands/shard=$target")
-    Sinks.publish(
-      spark.read.parquet(keys.map(k => s"$indexDir/sets/shard=$k"): _*),
-      s"$indexDir/sets/shard=$target")
-    Sinks.publish(
-      spark.read.parquet(keys.map(k => s"$indexDir/removals/shard=$k"): _*)
-        .groupBy(col("removed_doc_id"))
+    val fs = new org.apache.hadoop.fs.Path(indexDir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def fold(tier: String, keys: Seq[String])(merge: DataFrame => DataFrame): Int =
+      if (keys.size <= 1) 0
+      else {
+        val gen = 1 + keys.filter(_.matches("c[0-9]+")).map(_.tail.toInt)
+          .foldLeft(-1)(math.max)
+        Sinks.publish(merge(spark.read.parquet(keys.map(k => s"$indexDir/$tier/shard=$k"): _*)),
+          s"$indexDir/$tier/shard=c$gen")
+        // the sources go only once their fold is live
+        keys.foreach(k =>
+          fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$tier/shard=$k"), true))
+        keys.size
+      }
+    val folded = fold("docs", tierKeys(spark, indexDir))(identity)
+    fold("removals", Sinks.shardKeys(spark, s"$indexDir/removals"))(
+      _.groupBy(col("removed_doc_id"))
         .agg(min(col("kept_partner")).as("kept_partner"),
           sum(col("n_dup_pairs")).as("n_dup_pairs"),
           max(col("max_jaccard")).as("max_jaccard"),
-          max(col("is_shard_doc")).as("is_shard_doc")),
-      s"$indexDir/removals/shard=$target")
-    // sources go only after all three consolidated tiers are live
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    keys.foreach { k =>
-      Seq("bands", "sets", "removals").foreach { tier =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$tier/shard=$k"), true)
-      }
-    }
-    keys.size
+          max(col("is_shard_doc")).as("is_shard_doc")))
+    folded
   }
 
   /** The standing removal table a consumer reads after any number of

@@ -152,9 +152,8 @@ object Facts {
     // repartition on the partition column before the write: without it
     // every one of the write's tasks holds rows of every month and the
     // load emits (#months × #tasks) small files — measured 13s warm at
-    // sf0.1 against ~3s with the exchange. Same reasoning as
-    // Sinks.repartitionTo: a 1000-executor write must bound its file
-    // count, and co-locating each partition's rows is how.
+    // sf0.1 against ~3s with the exchange: a 1000-executor write must
+    // bound its file count, and co-locating each partition's rows is how.
     val target = new org.apache.hadoop.fs.Path(outPath)
     val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
     val staging = Sinks.hiddenSibling(outPath)

@@ -9,7 +9,8 @@ import graft.operators.Dedup
   * scheduler as a STREAM: documents arrive continuously, each
   * micro-batch is treated as one arriving shard, probed against the
   * same growing standing index the batch scheduler maintains, and
-  * published as batch-keyed band / shingle-array / removal tiers.
+  * published as batch-keyed index and removal tiers (the index tier
+  * holds one (doc_id, bands, sh_set, n) row per doc).
   * DocStream is the exact-dedup front door (bounded-state, in-flight);
   * this is the near-dup back door — the stage that needs the standing
   * index and therefore runs per-batch against published artifacts
@@ -21,7 +22,7 @@ import graft.operators.Dedup
   * Exactly-once: the sink is `foreachBatch` + the stage-swap publish
   * under partitions keyed by `b<batchId>`, so a REPLAYED batch (the
   * restart-recovery case foreachBatch documents as at-least-once)
-  * overwrites only its own three partitions and probes only the OTHER
+  * overwrites only its own two partitions and probes only the OTHER
   * published shards — the ingestShardCore retry contract. The removal
   * union over all published reports therefore stays exactly the
   * full-rebuild removal set however the stream is chopped into batches

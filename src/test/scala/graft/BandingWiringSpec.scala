@@ -10,7 +10,7 @@ import graft.operators.Dedup
 /** The d26 decision DRIVES the standing artifacts: force a non-default
   * banding decision on an isolated corpus copy (its own fingerprint →
   * its own artifact family) and prove d03's candidate artifact, d07's
-  * verified-pair pipeline, and d19's standing band index are all built
+  * verified-pair pipeline, and d19's standing index tier are all built
   * at the forced (b, r) — paths keyed by the banding, results equal to
   * an independent rebuild at that banding. This is the wiring the
   * oracle can't see (on the real corpus the retune derives the shipped
@@ -26,7 +26,7 @@ class BandingWiringSpec extends AnyFunSuite {
     Files.copy(Paths.get(s"${TestSpark.sf}/documents.parquet"),
       Paths.get(s"$d/documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
     // force the decision BEFORE any consumer probes it: a published
-    // (9, 2) band_choice artifact — ensureArtifact serves it as-is
+    // (9, 2) band_choice artifact — Sinks.ensure serves it as-is
     import spark.implicits._
     Seq((9L, 2L)).toDF("n_bands", "n_rows")
       .write.parquet(graft.sources.Sinks.artifactPath(spark, "band_choice", d))
@@ -112,13 +112,13 @@ class BandingWiringSpec extends AnyFunSuite {
 
   test("d19 probes a forced-banding standing index; incremental == full rebuild") {
     val report = Dedup.shardDedup(spark, dir)
-    // the standing band index is keyed by the forced banding
+    // the standing index tier is keyed by the forced banding
     val whDir = spark.conf.get("spark.sql.warehouse.dir")
     val fs = new org.apache.hadoop.fs.Path(whDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val bandsFam = new org.apache.hadoop.fs.Path(s"$whDir/lsh_bands")
+    val tierFam = new org.apache.hadoop.fs.Path(s"$whDir/doc_index")
     val dirKey = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val mine = fs.listStatus(bandsFam).map(_.getPath.getName)
+    val mine = fs.listStatus(tierFam).map(_.getPath.getName)
       .filter(_.contains(dirKey))
     assert(mine.nonEmpty && mine.forall(_.endsWith("_b9r2")))
     // keep-min equality at the forced banding: standing removals ∪

@@ -7,6 +7,39 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSpark {
   lazy val spark: SparkSession = GraftSession.builder("local[4]", 4).getOrCreate()
   val sf: String = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the jobs it submits, counted by a listener on a
+    * job group of its own; a marker job in a second group drains the
+    * listener, since the listener bus delivers events in order.
+    */
+  def jobsOf[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graft_jobs_${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet(): Unit
+          case Some(g) if g == s"$group.end" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = body
+      sc.setJobGroup(s"$group.end", "listener drain")
+      sc.parallelize(Seq(1), 1).count()
+      require(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus did not drain")
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 /** Driver-contract invariants: every query runs, returns rows, and every

@@ -47,9 +47,9 @@ class CurationStreamSpec extends AnyFunSuite {
     assert(standing() == full)
 
     // three batch-keyed partitions per tier
-    val bands = new java.io.File(s"$out/index/bands").list().toSeq
+    val tier = new java.io.File(s"$out/index/docs").list().toSeq
       .filter(_.startsWith("shard=b"))
-    assert(bands.size == 3, s"expected 3 batch partitions, got $bands")
+    assert(tier.size == 3, s"expected 3 batch partitions, got $tier")
 
     // crash-replay: re-deliver batch 1's rows under its own batchId —
     // the tick overwrites only its own partitions, probes only the
@@ -61,7 +61,7 @@ class CurationStreamSpec extends AnyFunSuite {
     // an empty replay publishes nothing new
     CurationStream.ingestBatch(
       Seq.empty[(Long, String)].toDF("doc_id", "text"), s"$out/index", 99L)
-    assert(new java.io.File(s"$out/index/bands").list().toSeq
+    assert(new java.io.File(s"$out/index/docs").list().toSeq
       .count(_.startsWith("shard=")) == 3)
     assert(standing() == full)
 
@@ -70,7 +70,7 @@ class CurationStreamSpec extends AnyFunSuite {
     // converges (its rows now live inside the consolidated partition —
     // duplicated band rows can only rediscover pairs, never add)
     assert(graft.operators.Dedup.compactIndex(spark, s"$out/index") == 3)
-    val parts = new java.io.File(s"$out/index/bands").list().toSeq
+    val parts = new java.io.File(s"$out/index/docs").list().toSeq
       .filter(_.startsWith("shard="))
     assert(parts == Seq("shard=c0"), s"expected one compacted partition, got $parts")
     assert(standing() == full)
@@ -79,11 +79,35 @@ class CurationStreamSpec extends AnyFunSuite {
     assert(standing() == full)
     // second compaction folds the replay back in under the next generation
     assert(graft.operators.Dedup.compactIndex(spark, s"$out/index") == 2)
-    assert(new java.io.File(s"$out/index/bands").list().toSeq
+    assert(new java.io.File(s"$out/index/docs").list().toSeq
       .filter(_.startsWith("shard=")) == Seq("shard=c1"))
     assert(standing() == full)
     // idempotent floor: a single-partition index has nothing to fold
     assert(graft.operators.Dedup.compactIndex(spark, s"$out/index") == 0)
+  }
+
+  test("compaction survives a torn tick; the replayed batch restores the full-rebuild set") {
+    import spark.implicits._
+    val docs = graft.sources.Tables.documents(spark, TestSpark.sf)
+      .select(col("doc_id"), col("text"))
+    val chunks = docs.as[(Long, String)].collect().toSeq.grouped(100).toSeq.take(3)
+    val idx = java.nio.file.Files.createTempDirectory("graft_cur_torn").toString
+    chunks.zipWithIndex.foreach { case (c, b) =>
+      CurationStream.ingestBatch(c.toDF("doc_id", "text"), idx, b.toLong)
+    }
+    // the kill between batch 1's two publishes: its tier partition
+    // landed, its removal report did not
+    val hadoopPath = new org.apache.hadoop.fs.Path(s"$idx/removals/shard=b1")
+    hadoopPath.getFileSystem(spark.sessionState.newHadoopConf()).delete(hadoopPath, true)
+    assert(graft.operators.Dedup.compactIndex(spark, idx) == 3)
+    val full = graft.operators.Dedup.removalSetOf(chunks.flatten.toDF("doc_id", "text"))
+      .collect().map(_.getLong(0)).toSet
+    def standing(): Set[Long] = CurationStream.standingRemovals(spark, idx)
+      .select("removed_doc_id").collect().map(_.getLong(0)).toSet
+    assert(standing() != full, "batch 1's lost report must hold removals no other report holds")
+    CurationStream.ingestBatch(chunks(1).toDF("doc_id", "text"), idx, 1L)
+    assert(standing() == full)
+    spark.catalog.clearCache()
   }
 
   test("streamed vector ingest: first batch bootstraps the codebook, later batches assign to it") {

@@ -225,10 +225,10 @@ class PipelineSpec extends AnyFunSuite {
 
     // BAND-INDEX tier — (a) staged-not-swapped on the standing rollup:
     // a dead publisher's staging dir sits beside the (stale) target;
-    // (b) torn multi-artifact shard publish: bands/sets landed,
-    // removals did not (the crash between ingestShardCore's publishes)
+    // (b) torn shard tick: the index tier landed, removals did not
+    // (the crash between ingestShardCore's two publishes)
     junkDir(s"$out/dedup_removals_standing_staging_dead0001")
-    assert(fs.exists(path(s"$out/dedup_index/bands/shard=0")))
+    assert(fs.exists(path(s"$out/dedup_index/docs/shard=0")))
     fs.delete(path(s"$out/dedup_index/removals/shard=0"), true)
 
     // VECTOR tier — torn publish on the APPEND path: shard-1's
@@ -239,19 +239,19 @@ class PipelineSpec extends AnyFunSuite {
     junkDir(s"$out/vec_index/codebook_staging_dead0002")
 
     // the protocol's own kill state: Sinks.stage without the swap leaves
-    // a COMPLETE staged copy beside its target — under the band and set
-    // tiers (the next tick must not list it as a shard), the vector
+    // a COMPLETE staged copy beside its target — under the index tier
+    // (the next tick must not list it as a shard), the vector
     // assignments (vecStandingIndex must not serve it as a second copy
     // of shard 0) and the warehouse root (registerWarehouse must not
     // register it). Plus the complete `shard=<k>_staging_<uuid>` copy
-    // older publishes staged, which made the next tick throw on the
-    // missing `sets/shard=0_staging_<uuid>`.
-    Seq("dedup_index/bands/shard=0", "dedup_index/sets/shard=0",
+    // older publishes staged, which made a tick of the older two-tier
+    // index throw on the missing `sets/shard=0_staging_<uuid>`.
+    Seq("dedup_index/docs/shard=0",
         "vec_index/assign/shard=0", "fact_sales").foreach { t =>
       graft.sources.Sinks.stage(spark.read.parquet(s"$out/$t"), s"$out/$t")
     }
-    spark.read.parquet(s"$out/dedup_index/bands/shard=0")
-      .write.parquet(s"$out/dedup_index/bands/shard=0_staging_dead0003")
+    spark.read.parquet(s"$out/dedup_index/docs/shard=0")
+      .write.parquet(s"$out/dedup_index/docs/shard=0_staging_dead0003")
 
     // next scheduled run = the full backfill schedule (the DAG's retry
     // semantics): every tier must converge to the clean-rebuild state

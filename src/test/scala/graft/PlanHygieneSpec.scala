@@ -91,13 +91,12 @@ class PlanHygieneSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = graft.sources.Tables.documents(spark, TestSpark.sf)
     val isShard = pmod(col("doc_id"), lit(5L)) === 4
-    // any (doc_id, shingle) frame yields the same probe plan shape
-    val corpusBands = Dedup.minhashBandsOf(
-      Seq((1L, "a b c"), (1L, "b c d"), (2L, "a b c")).toDF("doc_id", "shingle"))
-    val (report, shSets) = Dedup.shardProbeFrame(
-      docs.filter(!isShard), docs.filter(isShard), corpusBands)
-    val p = plan(report)
-    shSets.unpersist(false)
+    // a tier over any (doc_id, shingle) frame yields the same probe plan shape
+    val corpusTier = Dedup.indexTierOf(
+      Seq((1L, "a b c"), (1L, "b c d"), (2L, "a b c")).toDF("doc_id", "shingle"), 6, 3)
+    val shardTier = Dedup.indexTierOf(
+      Dedup.wordShinglesOf(docs.filter(isShard), dedup = false), 6, 3)
+    val p = plan(Dedup.shardProbeFrame(corpusTier, shardTier))
     // candidate generation must be band-bucket equi-joins — a cartesian
     // or nested-loop pair join is the all-pairs scan LSH exists to avoid
     assert(!p.contains("CartesianProduct"), s"shard probe went all-pairs:\n$p")

@@ -235,7 +235,6 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("stage counts the rows its own write saw, exactly, and a parquet stage is one job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val dir = Files.createTempDirectory("graft_stagecount").toString
     val li = spark.read.parquet(s"${TestSpark.sf}/lineitem.parquet")
     // empty, shuffled into 7 partitions, an AQE aggregate, and JSON
@@ -246,33 +245,9 @@ class SourcesSpec extends AnyFunSuite {
       val (staged, n) = Sinks.stage(df, s"$dir/t", format)
       assert(n == df.count() && spark.read.format(format).load(staged).count() == n)
     }
-    // jobs of one group, counted by a listener; a second group's job
-    // marks the end, since the listener bus delivers events in order
-    val sc = spark.sparkContext
-    val group = s"graft_stage_jobs_${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet(): Unit
-          case Some(g) if g == s"$group.end" => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "one parquet stage")
-      val (_, n) = Sinks.stage(li, s"$dir/jobs")
-      sc.setJobGroup(s"$group.end", "listener drain")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(n == 6000L)
-      assert(jobs.get == 1, s"a parquet stage ran ${jobs.get} jobs")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val ((_, n), jobs) = TestSpark.jobsOf(Sinks.stage(li, s"$dir/jobs"))
+    assert(n == 6000L)
+    assert(jobs == 1, s"a parquet stage ran $jobs jobs")
   }
 
   test("sourceKey fingerprint changes when the source file is regenerated") {
