@@ -1035,7 +1035,12 @@ object Dedup {
     // once, shard×shard twice (both orientations) — least/greatest +
     // distinct normalizes to the same unordered pair set a full
     // rebuild's a.doc_id < b.doc_id join produces on shard-involving
-    // pairs
+    // pairs. The pair join feeds three consumers (the verify and both
+    // sides of `candidateDocs`); each would otherwise get its own
+    // inferred not-null filter on doc_a, doc_b or both, so their plans
+    // would differ and the join would run three times. The explicit
+    // filter (always true: `=!=` drops null ids) states all three up
+    // front, so the copies match and AQE reuses one pair shuffle.
     val all = tierBands(corpusTier).union(shardBands)
     val cand = shardBands.as("a").join(all.as("b"),
         col("a.band_j") === col("b.band_j") &&
@@ -1043,6 +1048,7 @@ object Dedup {
           col("a.doc_id") =!= col("b.doc_id"))
       .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
+      .where(col("doc_a").isNotNull && col("doc_b").isNotNull)
       .distinct()
     val shSets = corpusTier.unionByName(shardTier)
       .select(col("doc_id"), col("sh_set"), col("n"))

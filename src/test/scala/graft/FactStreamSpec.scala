@@ -4,6 +4,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 import graft.streaming.FactStream
 import graft.streaming.FactStream.LineitemEvent
 
@@ -57,5 +59,72 @@ class FactStreamSpec extends AnyFunSuite {
     val months = spark.read.parquet(s"$out/fact")
       .select("month_key").distinct().count()
     assert(months > 10, s"expected many month partitions, got $months")
+  }
+
+  test("each fact micro-batch writes its month files from more than one task, one file per month") {
+    import org.apache.spark.scheduler._
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val li = graft.sources.Tables.lineitem(spark, TestSpark.sf)
+      .select(col("l_orderkey"), col("l_partkey"), col("l_linenumber"),
+        col("l_quantity"), col("l_extendedprice"), col("l_discount"), col("l_tax"))
+      .as[LineitemEvent].collect().toSeq
+    val orders = graft.sources.Tables.orders(spark, TestSpark.sf)
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
+    val part = graft.sources.Tables.part(spark, TestSpark.sf)
+      .select(col("p_partkey"), col("p_type"))
+
+    // the completed stages; a marker job drains the listener bus, as in
+    // TestSpark.jobsOf
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    val marker = s"graft_fact_sink_${System.nanoTime()}"
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          drained.countDown()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        done.add(e.stageInfo): Unit
+    }
+    val src = MemoryStream[LineitemEvent]
+    val out = java.nio.file.Files.createTempDirectory("graft_fact_sink").toString
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = FactStream.run(
+        FactStream.factStream(src.toDF(), orders, part),
+        s"$out/fact", s"$out/ckpt")
+      try li.grouped((li.size + 2) / 3).foreach { chunk =>
+        src.addData(chunk: _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      spark.sparkContext.setJobDescription(marker)
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus did not drain")
+    } finally {
+      spark.sparkContext.setJobDescription(null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+
+    // a batch's sink-write stage is the one whose tasks wrote records;
+    // the batches run one after another, so these are batches 0, 1, 2
+    val writeTasks = done.toArray(Array.empty[StageInfo]).toSeq
+      .filter(_.taskMetrics.outputMetrics.recordsWritten > 0).map(_.numTasks)
+    assert(writeTasks.size == 3, s"expected one sink-write stage per batch, got $writeTasks")
+    writeTasks.zipWithIndex.foreach { case (tasks, b) =>
+      assert(tasks > 1, s"batch $b wrote its month files from $tasks task(s)")
+    }
+
+    // the sink's metadata log lists each batch's files: one per month dir
+    val log = java.nio.file.Paths.get(out, "fact", "_spark_metadata")
+    for (b <- 0 to 2) {
+      val dirs = java.nio.file.Files.readAllLines(log.resolve(b.toString)).asScala.toSeq
+        .filter(_.startsWith("{"))
+        .map(l => """"path":"([^"]+)"""".r.findFirstMatchIn(l).get.group(1))
+        .map(p => p.substring(0, p.lastIndexOf('/')))
+      assert(dirs.nonEmpty, s"batch $b wrote no files")
+      val multi = dirs.groupBy(identity).collect { case (d, fs) if fs.size > 1 => d -> fs.size }
+      assert(multi.isEmpty, s"batch $b wrote more than one file into $multi")
+    }
   }
 }

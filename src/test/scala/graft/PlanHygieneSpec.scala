@@ -105,6 +105,29 @@ class PlanHygieneSpec extends AnyFunSuite {
     assert(!p.contains("Window"), s"shard probe must not window:\n$p")
   }
 
+  test("ingest tick probe: the band pair join runs once, its shuffle reused by every consumer") {
+    import org.apache.spark.sql.functions._
+    val docs = graft.sources.Tables.documents(spark, TestSpark.sf)
+    val isShard = pmod(col("doc_id"), lit(5L)) === 4
+    // a tick probes published tiers: parquet reads, as in ingestShardCore
+    val idx = java.nio.file.Files.createTempDirectory("graft_probe_plan").toString
+    val tier = (d: org.apache.spark.sql.DataFrame, name: String) => {
+      Dedup.indexTierOf(Dedup.wordShinglesOf(d, dedup = false), 6, 3)
+        .write.parquet(s"$idx/$name")
+      spark.read.parquet(s"$idx/$name")
+    }
+    val probe = Dedup.shardProbeFrame(
+      tier(docs.filter(!isShard), "corpus"), tier(docs.filter(isShard), "shard"))
+    probe.collect()
+    // the final adaptive plan prints a reused stage once, as ReusedExchange;
+    // the verify and both candidateDocs branches read the one pair join
+    val p = plan(probe).split("== Initial Plan ==").head
+    assert(p.contains("== Final Plan =="), p)
+    val bandJoins = p.linesIterator.count(l => l.contains("Join") && l.contains("band_hash"))
+    assert(bandJoins == 1, s"the band pair join is planned $bandJoins times:\n$p")
+    assert(p.contains("ReusedExchange"), s"no consumer reuses the pair shuffle:\n$p")
+  }
+
   test("q58 cube: one Expand, one aggregation exchange, dim broadcast") {
     val p = plan(Analytics.segmentPriorityCube(spark, TestSpark.sf))
     // all four grains must ride ONE Expand into one combining agg — four

@@ -24,10 +24,10 @@ class ShardIndexSpec extends AnyFunSuite {
     tick(idx, 1)
     val (_, jobs) = TestSpark.jobsOf(tick(idx, 2))
     // the documents read's schema 1, the tier publish 2 (its aggregation
-    // and its write), the report publish 11 (the probe's shuffle and
+    // and its write), the report publish 9 (the probe's shuffle and
     // broadcast stages and its write), the returned frame's count 2.
     // The two-tier index ran 27.
-    assert(jobs == 16, s"a warm shard tick ran $jobs jobs")
+    assert(jobs == 14, s"a warm shard tick ran $jobs jobs")
     assert(new java.io.File(idx).list().filterNot(_.startsWith(".")).sorted.toSeq ==
       Seq("_banding", "docs", "removals"))
     assert(graft.sources.Sinks.shardKeys(spark, s"$idx/docs") == Seq("0", "1", "2"))
