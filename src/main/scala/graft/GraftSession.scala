@@ -148,12 +148,17 @@ object GraftSession {
     *     query can rely on the space being back.
     *
     * After this returns, re-running a released query simply recomputes
-    * and re-persists — release is always safe, never corrupting
-    * (Spark recomputes unpersisted frames from lineage; the
-    * localCheckpoint leaves are only referenced by already-returned
-    * DataFrames, which a caller releasing caches has finished with).
-    * Artifact-table state (the IVF index, verified-pair parquet) is
-    * on disk and unaffected.
+    * and re-persists, and a returned frame over persisted data
+    * recomputes from lineage. A returned frame whose plan reads a
+    * localCheckpoint leaf does NOT: its blocks are gone, and the next
+    * action on it fails with `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`.
+    * Three query frames are of that kind — `d19_shard_dedup`
+    * (`shardDedup` returns a localCheckpoint), `d35_sliced_dedup`
+    * (its slices are eager localCheckpoints) and `q61_purchase_hits`
+    * (each HITS half-step is a lazy localCheckpoint). Release only
+    * after such a frame is consumed, or re-run its query rather than
+    * re-use the frame. Artifact-table state (the IVF index,
+    * verified-pair parquet) is on disk and unaffected.
     */
   def releaseQueryCaches(spark: SparkSession): Unit = {
     spark.catalog.clearCache()

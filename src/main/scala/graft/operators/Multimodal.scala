@@ -1024,14 +1024,4 @@ object Multimodal {
         |  JOIN bit y ON y.doc_id = media_b AND y.k = x.k
         |  GROUP BY 1, 2)
         |SELECT media_a, media_b, hamming FROM ham WHERE hamming <= 6""".stripMargin)
-
-  /** Frame-sampling stub: pick every `stride`-th byte — stands in for
-    * video frame sampling keeping the 1:N row explosion shape.
-    */
-  def frameSample(media: Dataset[MediaRow], stride: Int): DataFrame =
-    media.toDF().select(
-      col("media_id"),
-      posexplode(expr(s"filter(transform(sequence(1, int(length(payload))), i -> " +
-        s"CASE WHEN (i - 1) % $stride = 0 THEN substring(payload, i, 1) END), x -> x IS NOT NULL)"))
-        .as(Seq("frame_idx", "frame")))
 }

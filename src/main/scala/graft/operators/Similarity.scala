@@ -273,19 +273,15 @@ object Similarity {
   def adaptiveCells(n: Long): Int =
     math.max(1, math.min(4096, math.floor(math.sqrt(n.toDouble)).toInt))
 
-  /** Adaptive-k twins of [[ivfAssign]]/[[ivfBuild]]: one bounded count
-    * picks k, then the standard parameterized build runs. The search
-    * stages need no changes — they read k from the published artifacts
-    * (the reason k was never baked into the index key).
+  /** Adaptive-k twin of [[ivfAssign]]: one bounded count picks k, then
+    * the standard model runs. An adaptive index is
+    * `ivfBuild(spark, dir, adaptiveCells(n))`; the search stages need
+    * no changes — they read k from the published artifacts (the
+    * reason k was never baked into the index key).
     */
   def ivfAssignAdaptive(spark: SparkSession, dir: String): DataFrame = {
     val e = corpusEmb(spark, dir)
     assignmentFrom(ivfModel(e, adaptiveCells(e.count()))._2)
-  }
-
-  def ivfBuildAdaptive(spark: SparkSession, dir: String): DataFrame = {
-    val e = corpusEmb(spark, dir)
-    ivfBuild(spark, dir, adaptiveCells(e.count()))
   }
 
   /** Deterministic hash-spread seeding: one seed per mod-k bucket of
@@ -439,109 +435,6 @@ object Similarity {
       publishIndex(e, adaptiveCells(e.count()), idx, cb)
     }
     spark.read.parquet(idx)
-  }
-
-  // ─── hierarchical semantic index (spec tier: past-the-clamp path) ────
-  /** Two-level cell counts for n vectors: the same ⌊√n⌋ FINE-cell
-    * granularity target as [[adaptiveCells]], factored as k1 coarse ×
-    * k2 sub-cells with k1 = ⌈√k⌉ ≈ n^(1/4) — so the build scores each
-    * vector against k1 + k2 ≈ 2·n^(1/4) centroids instead of the flat
-    * build's √n.
-    */
-  def hierarchicalCells(n: Long): (Int, Int) = {
-    val k = adaptiveCells(n)
-    val k1 = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
-    (k1, math.max(1, math.ceil(k.toDouble / k1).toInt))
-  }
-
-  /** Two-level (coarse → sub-cell) semantic assignment — the build
-    * shape a deployment switches to where the flat [[semanticIndex]]
-    * build stops scaling. The flat build's E-step scores n × k
-    * cosines; at k = √n that is Θ(n^1.5) build work, and past the
-    * [[adaptiveCells]] clamp (n > 16.7M) holding k flat would let the
-    * within-cell pair term grow again. The hierarchy keeps the SAME
-    * fine-cell granularity (≈ √n cells, so d22's pair term stays at
-    * n^1.5) while cutting build work to Θ(n·n^(1/4)): level 1 runs the
-    * standard 2-E-step Lloyd at k1 ≈ n^(1/4) coarse cells; level 2
-    * seeds k2 ≈ n^(1/4) sub-centroids INSIDE each coarse cell
-    * (hash-spread mod-k2 buckets of the cell's members — the
-    * [[seedCodebook]] rule, cell-locally) and refines them with one
-    * M-step, each vector scoring ONLY its own cell's k2 sub-centroids
-    * via an equi-join on the coarse id (never the full k1·k2
-    * codebook). The published fine cell id is coarse·k2 + sub — the
-    * same flat centroid_id contract d22/d23 block on.
-    *
-    * Every step reuses the deterministic conventions of the flat
-    * build (md5 hash-spread seeding, 4-dp rounded cosine, decimal-
-    * exact means, ties by smallest id), so the assignment is
-    * bit-stable across sessions and engines. Spec tier by design —
-    * like the learned OPQ rotation, this demonstrates the scaling
-    * seam without disturbing the oracle-checked flat path, whose
-    * results at test scale the hierarchy deliberately does NOT
-    * reproduce (different cell boundaries are the point: same
-    * granularity, cheaper build).
-    */
-  /** The hierarchy's cell-local E-step: each vector scores only its
-    * own coarse cell's sub-centroids — a pure MAP via
-    * [[graft.plans.NearestInGroup]] keyed by coarse_id (the
-    * ≤ k1·k2 ≤ ~4096-row sub-codebook rides along as reference
-    * objects; same bit-compat contract as [[assignTo]]'s flat
-    * expression, pinned in NearestInGroupSpec). `a1` carries
-    * (vec_id, emb, coarse_id); `cents` (coarse_id, sub_id, c_emb).
-    */
-  private[graft] def assignSubForTest(a1: DataFrame, cents: DataFrame): DataFrame = {
-    val (grouped, d) = collectGroupedCodebook(cents, "coarse_id", "sub_id", "c_emb")
-    val nearest = graft.plans.NearestInGroup.nearestInGroup(
-      col("coarse_id"), col("emb"), grouped, d, useCosine = true)
-    a1.select(col("vec_id"), col("coarse_id"), col("emb"), nearest.as("nb"))
-      .filter(col("nb").isNotNull) // cell with no seeds: the row the old inner join dropped (unreachable — seeds exist per occupied cell)
-      .select(col("vec_id"), col("coarse_id"), col("emb"),
-        col("nb.best_id").as("sub_id"), col("nb.score").as("cos_r"))
-  }
-
-  def semanticAssignHierarchical(spark: SparkSession, dir: String): DataFrame = {
-    val e = corpusEmb(spark, dir)
-    val (k1, k2) = hierarchicalCells(e.count())
-    // level 1: standard 2-E-step model; a1 = final coarse assignment.
-    // Materialized once (localCheckpoint): three consumers below
-    // (seeding, both sub-E-steps) must not re-run the coarse model —
-    // the build-cost claim is 2·n·(k1 + k2) corpus scorings TOTAL.
-    val a1 = ivfModel(e, k1)._2
-      .select(col("vec_id"), col("emb"), col("centroid_id").as("coarse_id"))
-      .localCheckpoint()
-    // level 2 seeds: hash-spread mod-k2 buckets WITHIN each coarse cell
-    val seeds2 = a1
-      .groupBy(col("coarse_id"), pmod(col("vec_id"), lit(k2.toLong)).as("sub_id"))
-      .agg(min(struct(
-        md5(col("vec_id").cast("string")).as("h"),
-        col("vec_id").as("v"),
-        col("emb").as("e"))).as("s"))
-      .select(col("coarse_id"), col("sub_id"), col("s.e").as("c_emb"))
-    // cell-local E-step: each vector scores only its own cell's k2
-    // sub-centroids (see [[assignSubForTest]])
-    def assignSub(cents: DataFrame): DataFrame = assignSubForTest(a1, cents)
-    // one M-step refinement (decimal-exact means per (coarse, sub,
-    // dim); empty sub-cells keep their seed), then the final E-step
-    val assigned1 = assignSub(seeds2)
-    val means = assigned1
-      .select(col("coarse_id"), col("sub_id"),
-        posexplode(col("emb")).as(Seq("pos", "v")))
-      .groupBy(col("coarse_id"), col("sub_id"), col("pos"))
-      .agg((sum(col("v").cast("decimal(27,10)")).cast("double") / count(lit(1))).as("m"))
-      .groupBy(col("coarse_id"), col("sub_id"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        s => s.getField("m")).as("c_emb_new"))
-    val cents2 = seeds2.join(means, Seq("coarse_id", "sub_id"), "left")
-      .select(col("coarse_id"), col("sub_id"),
-        coalesce(col("c_emb_new"), col("c_emb")).as("c_emb"))
-    val fin = assignSub(cents2)
-      .select(col("vec_id"),
-        (col("coarse_id") * k2 + col("sub_id")).as("centroid_id"),
-        col("cos_r").as("cos_to_centroid"))
-    val sizes = fin.groupBy(col("centroid_id")).agg(count(lit(1)).as("cell_size"))
-    fin.join(broadcast(sizes), Seq("centroid_id"))
-      .select(col("vec_id"), col("centroid_id"),
-        col("cos_to_centroid"), col("cell_size"))
   }
 
   // ─── q32 IVF search stage (probe the query's cell only) ──────────────
@@ -908,12 +801,11 @@ object Similarity {
   // residual subvectors PER CELL to avoid degenerate (empty/duplicate)
   // codewords, and the sf0.1 holdout cells hold hundreds of vectors.
   // The 8-bit production width itself is NOT gated on test data any
-  // more: [[pqTrain]] is width-parameterized and PqWideSpec drives it
+  // more: [[pqBookOf]] is width-parameterized and PqWideSpec drives it
   // at ks=256 on a generated 4k-vector corpus (codebooks populate,
   // error strictly tightens vs 16 codes). Raising this constant swaps
   // the published tier to 8-bit; the q49/q50 oracles extend by
-  // swapping the same constant. An OPQ rotation would slot in as one
-  // orthogonal transform of the residual frame before [[pqResidualSubs]].
+  // swapping the same constant.
   private val pqCodesPerSub = 16
 
   // Squared L2 lives as the dot-product identity `dot(a,a) −
@@ -921,35 +813,19 @@ object Similarity {
   // engines must evaluate the SAME IEEE expression for the 4-dp
   // rounding to agree, and three index-ordered folds are what any
   // engine replays. The expression itself now lives inside
-  // plans.NearestInGroup (useCosine = false); the oracle SQL spells
-  // it out with list_dot_product.
+  // plans.NearestInGroup; the oracle SQL spells it out with
+  // list_dot_product.
 
   /** Per-vector residual subvectors (vec_id, m, rm): residual vs the
     * PUBLISHED cell centroid (the c2 codebook — the mean of the cell's
     * members, the best same-cell reference), split into M equal slices.
     */
   private def pqResidualSubs(e: DataFrame, assign: DataFrame,
-                             codebook: DataFrame): DataFrame =
-    pqResidualSubs(e, assign, codebook, rotateDim = None)
-
-  /** `rotateDim = Some(d)` applies the OPQ-lite [[rotateResidual]]
-    * transform (d = embedding dimension) to the residual BEFORE slicing
-    * — the seam a variance-skewed corpus turns on (PqWideSpec drives it
-    * end-to-end). The shipped q49/q50 tier stays unrotated: its oracle
-    * replays unrotated residuals, and the sf0.1 corpus is not skewed
-    * enough for the rotation to pay for the oracle complexity.
-    */
-  private[graft] def pqResidualSubs(e: DataFrame, assign: DataFrame,
-                                    codebook: DataFrame,
-                                    rotateDim: Option[Int]): DataFrame = {
-    val resid = e.join(assign, Seq("vec_id"))
+                             codebook: DataFrame): DataFrame = {
+    val r = e.join(assign, Seq("vec_id"))
       .join(broadcast(codebook), Seq("centroid_id"))
       .select(col("vec_id"),
         zip_with(col("emb"), col("c_emb"), (a, b) => a - b).as("r"))
-    val r = rotateDim match {
-      case Some(d) => resid.select(col("vec_id"), rotateResidual(col("r"), d).as("r"))
-      case None => resid
-    }
     val subLen = ceil(size(col("r")) / pqSubspaces).cast("int")
     r.select(col("vec_id"),
         explode(sequence(lit(0), lit(pqSubspaces - 1))).as("m"), col("r"))
@@ -959,9 +835,9 @@ object Similarity {
 
   /** Collect a (group, id, emb) codebook frame into the per-group
     * reference shape [[graft.plans.NearestInGroup]] takes — a bounded
-    * MODEL materialization (subspace codebooks, sub-centroid books),
-    * the same class of driver-sized object as [[assignTo]]'s flat
-    * codebook. Returns the grouped entries plus the uniform dim.
+    * MODEL materialization (the subspace codebooks), the same class of
+    * driver-sized object as [[assignTo]]'s flat codebook. Returns the
+    * grouped entries plus the uniform dim.
     */
   private def collectGroupedCodebook(
       book: DataFrame, groupCol: String, idCol: String, embCol: String)
@@ -997,7 +873,7 @@ object Similarity {
   private[graft] def pqAssignTo(subs: DataFrame, book: DataFrame): DataFrame = {
     val (grouped, dim) = collectGroupedCodebook(book, "m", "code", "code_emb")
     val nearest = graft.plans.NearestInGroup.nearestInGroup(
-      col("m"), col("rm"), grouped, dim, useCosine = false)
+      col("m"), col("rm"), grouped, dim)
     subs.select(col("vec_id"), col("m"), col("rm"), nearest.as("nb"))
       .filter(col("nb").isNotNull) // subspace absent from the book: the row the old inner join dropped
       .select(col("vec_id"), col("m"), col("rm"), col("nb.best_id").as("code"))
@@ -1022,7 +898,7 @@ object Similarity {
     * residual subvectors: bucket j = vec_id mod ks, seed = the bucket
     * member with the smallest (md5(vec_id), vec_id).
     */
-  private def pqSeeds(subs: DataFrame, ks: Int = pqCodesPerSub): DataFrame =
+  private def pqSeeds(subs: DataFrame, ks: Int): DataFrame =
     subs.groupBy(col("m"),
         pmod(col("vec_id"), lit(ks.toLong)).as("code"))
       .agg(min(struct(
@@ -1031,160 +907,16 @@ object Similarity {
         col("rm").as("e"))).as("s"))
       .select(col("m"), col("code"), col("s.e").as("code_emb"))
 
-  /** OPQ-lite rotation: a deterministic SIGNED PERMUTATION of the
-    * residual dimensions, applied before subspace slicing. A signed
-    * permutation is orthogonal (L2 exactly preserved — each coordinate
-    * moves and flips sign, nothing mixes), and it is the cheap member
-    * of the OPQ family: when a few adjacent dimensions carry most of
-    * the variance, plain slicing concentrates them in one subspace
-    * whose 2^bits codewords then absorb all the quantization error;
-    * spreading dimensions hash-uniformly re-balances per-subspace
-    * variance (the Faiss "random rotation" pre-transform, made
-    * deterministic). A learned OPQ rotation (PCA + Procrustes) would
-    * slot in at the same seam but is data-dependent and iterative —
-    * this transform is a pure function of the dimension count, so
-    * re-runs, retried stages, and the DuckDB oracle replay it exactly
-    * (position j reads source dim perm(j) with sign s(j), both derived
-    * from md5("rot_<j>")).
-    *
-    * Returns, for each target position, (source dim, sign).
+  /** Sub-codebooks of width `ks` over any residual-subvector frame
+    * (vec_id, m, rm): seed → E → M. [[pqBuild]] runs it at
+    * [[pqCodesPerSub]]; the trainer is width-blind, and PqWideSpec
+    * drives it at ks=256 on a generated corpus large enough to
+    * populate every codeword (256 codes would be degenerate in the
+    * sf0.1 holdout cells).
     */
-  private[graft] def signedPermOf(dim: Int): Seq[(Int, Int)] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def hex(i: Int): String =
-      md.digest(s"rot_$i".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val order = (0 until dim).map(i => (hex(i), i)).sorted.map(_._2)
-    order.map(src => (src, if (hex(src).charAt(16) < '8') 1 else -1))
-  }
-
-  /** Rotated residual column — [[signedPermOf]] applied to an
-    * array<double> of known length.
-    */
-  private[graft] def rotateResidual(r: Column, dim: Int): Column =
-    array(signedPermOf(dim).map { case (src, sgn) =>
-      element_at(r, src + 1) * lit(sgn.toDouble) }: _*)
-
-  // ─── learned OPQ rotation (PCA + eigenvalue allocation) ──────────────
-  /** LEARNED OPQ rotation — the non-iterative "parametric" variant of
-    * the OPQ paper (Ge et al., CVPR'13 §4: for near-Gaussian residuals
-    * the optimal product-quantization rotation is PCA followed by
-    * EIGENVALUE ALLOCATION — distribute principal directions across
-    * the M subspaces so each subspace's variance product balances,
-    * instead of letting a few dominant directions land in one slice).
-    * This is the data-dependent upgrade the [[signedPermOf]] seam was
-    * built for: a signed permutation re-balances AXIS-ALIGNED skew
-    * only; when the dominant variance directions are rotated off-axis
-    * (correlated dims), only a learned basis can decorrelate them.
-    *
-    * Algorithm: (1) residual covariance via a DISTRIBUTED decimal-sum
-    * aggregation — per-(i,j) cells sum exact `decimal(27,12)` products
-    * so the matrix is bit-identical at any partitioning (a plain
-    * double sum would make the learned basis run-dependent); at scale
-    * the covariance runs on a deterministic md5-permille sample (d²
-    * cells need O(d²) rows, not the corpus); (2) driver-side `eigSym`
-    * of the d×d matrix (d is small — this is the one legitimately
-    * driver-sized object in the pipeline, like a codebook); each
-    * eigenvector sign-fixed (largest-|component| entry positive) to
-    * kill the ±v ambiguity; (3) greedy eigenvalue allocation: visit
-    * eigenvalues descending, assign each to the unfilled subspace with
-    * the smallest log-variance sum. Returns the rotation rows (target
-    * position → source-basis vector, subspace-0 rows first). Rows are
-    * orthonormal, so the transform preserves L2 exactly like the
-    * signed permutation (PqLearnedSpec pins orthogonality, norm
-    * preservation, a strict error win over BOTH plain slicing and the
-    * signed permutation on an off-axis-correlated corpus, and
-    * byte-determinism across calls).
-    *
-    * Deliberately OUTSIDE the oracle discipline (spec-tier, like the
-    * signed permutation): eigendecomposition is not replayable in SQL.
-    */
-  private[graft] def opqRotationOf(resid: DataFrame, dim: Int,
-                                   m: Int = pqSubspaces,
-                                   samplePermille: Int = 1000): Seq[Array[Double]] = {
-    require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
-    val sampled =
-      if (samplePermille >= 1000) resid
-      else resid.filter(
-        conv(substring(md5(concat_ws("_", col("vec_id"), lit("opq"))), 1, 4), 16, 10)
-          .cast("long") % 1000 < samplePermille)
-    // covariance cells: sum_v r_i·r_j as exact decimals — d² rows out
-    val cells = sampled
-      .select(col("r"), posexplode(col("r")).as(Seq("i", "vi")))
-      .select(col("i"), col("vi"), posexplode(col("r")).as(Seq("j", "vj")))
-      .filter(col("j") >= col("i")) // symmetric: compute the upper triangle once
-      .groupBy(col("i"), col("j"))
-      .agg(sum((col("vi") * col("vj")).cast("decimal(27,12)")).cast("double").as("c"))
-      .collect()
-    val cov = breeze.linalg.DenseMatrix.zeros[Double](dim, dim)
-    cells.foreach { row =>
-      val (i, j, c) = (row.getInt(0), row.getInt(1), row.getDouble(2))
-      cov(i, j) = c; cov(j, i) = c
-    }
-    val es = breeze.linalg.eigSym(cov)
-    // breeze returns eigenvalues ascending; visit descending
-    val order = (0 until dim).sortBy(k => -es.eigenvalues(k))
-    val vecs: Seq[(Double, Array[Double])] = order.map { k =>
-      val v = Array.tabulate(dim)(i => es.eigenvectors(i, k))
-      val pivot = v.indices.maxBy(i => (math.abs(v(i)), -i)) // deterministic
-      val fixed = if (v(pivot) < 0) v.map(-_) else v
-      (math.max(es.eigenvalues(k), 1e-12), fixed)
-    }
-    // greedy eigenvalue allocation: next (largest remaining) direction
-    // goes to the unfilled subspace with the smallest log-variance sum
-    val cap = dim / m
-    val buckets = Array.fill(m)(scala.collection.mutable.ArrayBuffer.empty[Array[Double]])
-    val logSum = Array.fill(m)(0.0)
-    vecs.foreach { case (lambda, v) =>
-      val tgt = (0 until m).filter(buckets(_).size < cap)
-        .minBy(b => (logSum(b), b))
-      buckets(tgt) += v
-      logSum(tgt) += math.log(lambda)
-    }
-    buckets.toSeq.flatMap(_.toSeq)
-  }
-
-  /** Apply a learned rotation (rows from [[opqRotationOf]]) to an
-    * array<double> column: target position j = ⟨row_j, r⟩.
-    */
-  private[graft] def rotateByMatrix(r: Column, rot: Seq[Array[Double]]): Column =
-    array(rot.map(row => dot(r, array(row.map(lit(_)): _*))): _*)
-
-  /** [[pqResidualSubs]] with the LEARNED rotation applied before
-    * slicing — the OPQ seam's data-dependent tier (spec-only; the
-    * shipped oracle tier stays unrotated, see pqResidualSubs docs).
-    */
-  private[graft] def pqResidualSubsLearned(e: DataFrame, assign: DataFrame,
-                                           codebook: DataFrame,
-                                           rot: Seq[Array[Double]]): DataFrame = {
-    val resid = e.join(assign, Seq("vec_id"))
-      .join(broadcast(codebook), Seq("centroid_id"))
-      .select(col("vec_id"),
-        zip_with(col("emb"), col("c_emb"), (a, b) => a - b).as("r"))
-    val dim = rot.size
-    val subLen = dim / pqSubspaces
-    resid.select(col("vec_id"), rotateByMatrix(col("r"), rot).as("r"))
-      .select(col("vec_id"),
-        explode(sequence(lit(0), lit(pqSubspaces - 1))).as("m"), col("r"))
-      .select(col("vec_id"), col("m").cast("long").as("m"),
-        slice(col("r"), (col("m") * subLen + 1).cast("int"), lit(subLen)).as("rm"))
-  }
-
-  /** Code-width-parameterized trainer over any residual-subvector frame
-    * (vec_id, m, rm) — seed → E → M → final E, the pqBuild recipe
-    * without the artifact plumbing. This is where the 8-bit production
-    * default lives: the shipped q49/q50 tier stays at ks=16 because the
-    * sf0.1 holdout cells hold only hundreds of vectors (256 codes would
-    * be degenerate there — see [[pqCodesPerSub]]), but the trainer is
-    * width-blind and PqWideSpec drives it at ks=256 on a generated
-    * corpus large enough to populate every codeword. Returns
-    * (sub-codebooks, codes).
-    */
-  private[graft] def pqTrain(subs: DataFrame, ks: Int): (DataFrame, DataFrame) = {
+  private[graft] def pqBookOf(subs: DataFrame, ks: Int): DataFrame = {
     val s0 = pqSeeds(subs, ks)
-    val book = pqMeansFrom(pqAssignTo(subs, s0), s0)
-    val codes = pqAssignTo(subs, book)
-      .select(col("vec_id"), col("m"), col("code"))
-    (book, codes)
+    pqMeansFrom(pqAssignTo(subs, s0), s0)
   }
 
   /** PQ tier paths, keyed by source fingerprint AND the active index's
@@ -1214,9 +946,7 @@ object Similarity {
     val cb = spark.read.parquet(codebookPath(spark, dir))
     val subs = pqResidualSubs(corpusEmb(spark, dir), assign, cb).persist()
     try {
-      val s0 = pqSeeds(subs)
-      val b = pqMeansFrom(pqAssignTo(subs, s0), s0)
-      Sinks.publish(b, bookPath)
+      Sinks.publish(pqBookOf(subs, pqCodesPerSub), bookPath)
       val book = spark.read.parquet(bookPath)
       val codes = pqAssignTo(subs, book)
         .select(col("vec_id"), col("m"), col("code"))

@@ -463,10 +463,6 @@ object Sketches {
     */
   private val ThetaShift = 6
   private val ThetaT = 1L << (60 - ThetaShift)
-  /** The fixed-θ threshold, exposed for the streaming twin (the filter
-    * is what bounds its dedup state to 2⁻⁶ of the vocabulary).
-    */
-  private[graft] def thetaThreshold: Long = ThetaT
 
   /** s03: pairwise source vocabulary overlap — theta-sampled Jaccard vs
     * exact. d09 computes the exact per-source doc overlap; this is its

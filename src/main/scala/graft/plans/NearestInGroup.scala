@@ -9,32 +9,27 @@ import org.apache.spark.sql.types._
 
 /** Grouped sibling of [[NearestCentroid]]: nearest codeword of an
   * `array<double>` vector among ONLY its own group's codewords — the
-  * group key (PQ subspace `m`, hierarchical coarse cell id) is a
-  * second child expression, and the codebook is a bounded per-group
-  * model riding along as reference objects. This retires the last two
-  * uses of the sort-aggregate argmax shape (equi-join on the group key
-  * → `groupBy(vec_id)` → `max(struct)`/`min(struct)`), whose
+  * group key (PQ subspace `m`) is a second child expression, and the
+  * codebook is a bounded per-group model riding along as reference
+  * objects. This retires the sort-aggregate argmin shape (equi-join on
+  * the group key → `groupBy(vec_id, m)` → `min(struct)`), whose
   * non-hash-aggregable buffers externally sort n·k_g rows carrying
   * full vectors — the same physical failure the flat E-step hit at
   * the sf10 scaling point, here bounded only by today's small k_g.
   *
-  * Two metrics, chosen at construction:
-  *  - `useCosine = true`: argMAX of the 4-dp-rounded cosine
-  *    (CosineSimilarity's fused index-ordered loop; NaN ranks
-  *    GREATEST per Spark double ordering, so it wins the max);
-  *  - `useCosine = false`: argMIN of the 4-dp-rounded squared L2 via
-  *    the dot-product identity `dot(a,a) − 2·dot(a,b) + dot(b,b)`
-  *    (three index-ordered folds, the exact IEEE expression the
-  *    DuckDB oracle replays; NaN ranks GREATEST, so it loses the min).
+  * The metric is the argMIN of the 4-dp-rounded squared L2 via the
+  * dot-product identity `dot(a,a) − 2·dot(a,b) + dot(b,b)` (three
+  * index-ordered folds, the exact IEEE expression the DuckDB oracle
+  * replays; NaN ranks GREATEST per Spark double ordering, so it loses
+  * the min).
   *
-  * Shared corner semantics, matching the aggregates verbatim
-  * (NearestInGroupSpec pins both): ties keep the SMALLEST codeword
+  * Corner semantics, matching the aggregate verbatim
+  * (NearestInGroupSpec pins them): ties keep the SMALLEST codeword
   * id (ascending iteration, strict improvement); a malformed vector
   * (length ≠ dim, or a null element) scores nothing and lands on
   * `(smallest id in its group, null score)` — exactly where an
-  * all-null score column sends `max(struct)` (null orders first ⇒
-  * loses max ⇒ id tie-break) and `min(struct)` (null orders first ⇒
-  * wins min ⇒ id tie-break) alike. A group key absent from the
+  * all-null score column sends `min(struct)` (null orders first ⇒
+  * wins min ⇒ id tie-break). A group key absent from the
   * codebook yields a NULL struct — the row the old inner equi-join
   * dropped; callers filter `isNotNull` where that contract matters.
   *
@@ -48,8 +43,7 @@ case class NearestInGroup(
     groupKeys: Array[Long],       // sorted ascending
     ids: Array[Array[Long]],      // per group, ascending codeword ids
     flat: Array[Array[Double]],   // per group, row-major k_g x dim
-    dim: Int,
-    useCosine: Boolean)
+    dim: Int)
     extends BinaryExpression {
 
   require(groupKeys.nonEmpty, "NearestInGroup needs a non-empty codebook")
@@ -93,7 +87,7 @@ case class NearestInGroup(
 
   override def toString: String =
     s"nearest_in_group($left, $right, groups=${groupKeys.length}, " +
-      s"dim=$dim, ${if (useCosine) "cos" else "d2"})"
+      s"dim=$dim, d2)"
 
   override def nullSafeEval(g: Any, v: Any): Any = {
     val gi = java.util.Arrays.binarySearch(groupKeys, g.asInstanceOf[Long])
@@ -123,13 +117,8 @@ case class NearestInGroup(
           var i2 = 0
           val base = c * dim
           while (i2 < dim) { dotp += xs(i2) * gFlat(base + i2); i2 += 1 }
-          val score = NearestCentroid.round4(
-            if (useCosine) dotp / (math.sqrt(nx) * math.sqrt(gNorm(c)))
-            else nx - 2.0 * dotp + gNorm(c))
-          val better =
-            if (useCosine) java.lang.Double.compare(score, bestScore) > 0
-            else java.lang.Double.compare(score, bestScore) < 0
-          if (bestNull || better) {
+          val score = NearestCentroid.round4(nx - 2.0 * dotp + gNorm(c))
+          if (bestNull || java.lang.Double.compare(score, bestScore) < 0) {
             bestNull = false; bestScore = score; bestId = gIds(c)
           }
           c += 1
@@ -165,13 +154,6 @@ case class NearestInGroup(
     val score = ctx.freshName("score")
     val base = ctx.freshName("base")
     val vals = ctx.freshName("vals")
-    val rawExpr =
-      if (useCosine)
-        s"$dotp / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($gNorm[$c]))"
-      else s"$nx - 2.0 * $dotp + $gNorm[$c]"
-    val betterExpr =
-      if (useCosine) s"java.lang.Double.compare($score, $bestScore) > 0"
-      else s"java.lang.Double.compare($score, $bestScore) < 0"
     nullSafeCodeGen(ctx, ev, (g, v) =>
       s"""
          |int $gi = java.util.Arrays.binarySearch($keysRef, $g);
@@ -202,7 +184,7 @@ case class NearestInGroup(
          |        for (int $i2 = 0; $i2 < $dim; $i2++) {
          |          $dotp += $xbuf[$i2] * $gFlat[$base + $i2];
          |        }
-         |        double $raw = $rawExpr;
+         |        double $raw = $nx - 2.0 * $dotp + $gNorm[$c];
          |        double $score;
          |        if (Double.isNaN($raw) || Double.isInfinite($raw)) {
          |          $score = $raw;
@@ -210,7 +192,7 @@ case class NearestInGroup(
          |          $score = java.math.BigDecimal.valueOf($raw)
          |            .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue();
          |        }
-         |        if ($bestNull || ($betterExpr)) {
+         |        if ($bestNull || java.lang.Double.compare($score, $bestScore) < 0) {
          |          $bestNull = false; $bestScore = $score; $bestId = $gIds[$c];
          |        }
          |      }
@@ -237,7 +219,7 @@ object NearestInGroup {
     */
   def nearestInGroup(group: Column, vec: Column,
                      codebook: Seq[(Long, (Array[Long], Array[Double]))],
-                     dim: Int, useCosine: Boolean): Column = {
+                     dim: Int): Column = {
     val sorted = codebook.sortBy(_._1)
     sorted.foreach { case (g, (i, _)) =>
       require(i.sliding(2).forall(w => w.length < 2 || w(0) < w(1)),
@@ -248,6 +230,6 @@ object NearestInGroup {
       sorted.map(_._1).toArray,
       sorted.map(_._2._1).toArray,
       sorted.map(_._2._2).toArray,
-      dim, useCosine))
+      dim))
   }
 }

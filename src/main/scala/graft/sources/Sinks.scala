@@ -1,14 +1,12 @@
 package graft.sources
 
-import java.util.Properties
-
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
 /** Warehouse write surface — the reference's load layer
   * (/root/reference/etl/load.py): the one publish protocol every
-  * published artifact goes through, plus JDBC staging and CSV export.
+  * published artifact goes through.
   *
   * PUBLISH CONTRACT. This object is the only code in src/main that
   * stages, renames or keys a published artifact. Two primitives:
@@ -233,42 +231,4 @@ object Sinks {
         } catch { case w: Throwable => e.addSuppressed(w) }
         throw e
     }
-
-  /** JDBC staging store — the reference's optional MySQL staging layer
-    * (/root/reference/etl/mysql_staging.py:28-199: create staging table,
-    * bulk-load the batch, read it back for transform). Overwrite gives
-    * the reference's drop-and-recreate staging semantics. Executors
-    * write partitions concurrently over their own connections; cap
-    * `numPartitions` so a 1000-executor write doesn't open 1000
-    * connections against one RDBMS.
-    */
-  def jdbcStage(df: DataFrame, url: String, table: String,
-                props: Properties = new Properties(),
-                numPartitions: Int = 8): Unit = {
-    // unconditional: coalesce to >= current partition count is a no-op,
-    // and probing df.rdd.getNumPartitions would materialize the RDD
-    // lineage and report the pre-AQE count anyway
-    val sized = if (numPartitions > 0) df.coalesce(numPartitions) else df
-    sized.write.mode(SaveMode.Overwrite).jdbc(url, table, props)
-  }
-
-  /** Read a staged table back (mysql_staging.py:150-199's
-    * read_staging_table). With a `partitionColumn` + bounds the read
-    * fans out across executors as range-partitioned queries — the only
-    * way a JDBC scan parallelizes; without it the whole table streams
-    * through one task (fine for dims, wrong for facts).
-    */
-  def readStaging(spark: SparkSession, url: String, table: String,
-                  props: Properties = new Properties(),
-                  partitionColumn: String = null,
-                  lowerBound: Long = 0L, upperBound: Long = 0L,
-                  numPartitions: Int = 8): DataFrame =
-    if (partitionColumn == null) spark.read.jdbc(url, table, props)
-    else spark.read.jdbc(url, table, partitionColumn,
-      lowerBound, upperBound, numPartitions, props)
-
-  /** CSV export (dashboard-download analog). */
-  def csvExport(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode(SaveMode.Overwrite)
-      .option("header", "true").csv(path)
 }

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Typed loaders for the test tables plus the multi-source ingestion
-  * surface of the reference (CSV file source + JSON/REST source with
-  * nested-object flattening — /root/reference/etl/extract.py:27-123).
+/** Typed loaders for the test tables plus the reference's JSON/REST
+  * source with nested-object flattening (extract.py:62-100), which the
+  * API feeds (`Cleaning`'s ratings feed, [[Fetch]]) read through.
   *
   * All loaders return lazy DataFrames: column pruning and predicate
   * pushdown reach the parquet scan because nothing here forces an action.
@@ -44,16 +44,6 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 
-  /** CSV source reader (reference's Kaggle-CSV source,
-    * extract.py:27-55). Explicit schema — never infer on a 100 TB lake:
-    * schema inference is a full extra pass over the data.
-    */
-  def readCsv(spark: SparkSession, path: String, schema: StructType,
-              sourceTag: String, header: Boolean = true): DataFrame =
-    tagSource(
-      spark.read.schema(schema).option("header", header.toString).csv(path),
-      sourceTag)
-
   /** JSON source reader (reference's REST-API source, extract.py:62-100).
     * JSON lines with explicit schema; nested objects arrive as structs and
     * are flattened by [[flattenStructs]] the way the reference flattens the
@@ -84,12 +74,6 @@ object Tables {
     }
     df.select(cols.toIndexedSeq: _*)
   }
-
-  /** Standardize column names: trim, lower, spaces→underscores
-    * (reference transform.py:37-39). Projection only.
-    */
-  def standardizeColumns(df: DataFrame): DataFrame =
-    df.toDF(df.columns.map(_.trim.toLowerCase.replace(" ", "_")).toIndexedSeq: _*)
 
   /** Warehouse explorer (the reference dashboard's "Data Warehouse"
     * page, streamlit_app.py table browser): one row per (table, column)

@@ -2,24 +2,19 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Structured-Streaming surface of the event pipeline — the streaming
   * twins of the batch operators in graft.operators.Events (same column
   * logic, verified against them in EventsStreamSpec).
   *
-  * Scale notes: watermarks bound all window state; the stateful
-  * sessionizer keys state by user_id (bounded per-user footprint) and is
-  * the shape that runs continuously on a cluster — state lives in the
-  * state store, not the driver.
+  * Scale notes: watermarks bound all window and join state — state
+  * lives in the state store, not the driver.
   */
 object EventsStream {
 
   case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
                    event_type: String, value: Double)
-
-  case class UserStats(user_id: Long, n_events: Long, total_value: Double,
-                       last_epoch: Long)
 
   /** Hourly tumbling windowed aggregation with a 2-hour watermark —
     * streaming twin of Events.tumblingWindows. `approx_count_distinct`
@@ -46,26 +41,6 @@ object EventsStream {
         approx_count_distinct(col("user_id")).as("approx_users"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n_events"), col("total_value"), col("approx_users"))
-
-  /** Stateful per-user running stats via mapGroupsWithState (Update
-    * mode) — the custom-state building block the reference's pipeline
-    * monitor would use for live per-entity counters.
-    */
-  def runningUserStats(events: Dataset[Event]): Dataset[UserStats] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState[UserStats, UserStats](GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[UserStats]) =>
-          val prev = state.getOption.getOrElse(UserStats(userId, 0L, 0.0, 0L))
-          val next = batch.foldLeft(prev) { (s, e) =>
-            UserStats(userId, s.n_events + 1,
-              s.total_value + e.value,
-              math.max(s.last_epoch, e.ts.getTime / 1000))
-          }
-          state.update(next)
-          next
-      }
-  }
 
   /** Streaming twin of e06's DAU column: exact daily active users via
     * CHAINED stateful operators — bounded-state dedup to (user, day)
@@ -228,27 +203,6 @@ object EventsStream {
       bases.filter(_._1 < newV).foreach(b => fs.delete(b._2, true))
     }
   }
-
-  /** CHAINED continuous census — the stream-stream time-interval join
-    * feeding a time-window aggregation inside ONE streaming query, the
-    * multiple-stateful-operator chain Structured Streaming supports
-    * since Spark 3.5 (SPARK-42376 lifted the global-watermark check
-    * that previously rejected it; the foreachBatch census above
-    * predates that and remains the replay-idempotent
-    * at-least-once-file shape). The census is per purchase-hour
-    * window × gap bucket; Append mode emits each window's counts once
-    * its watermark closes, so a downstream sink sees immutable rows.
-    * State stays bounded on both operators: the join buffers at most
-    * the 1-hour click interval + 2-hour watermark slack per side, the
-    * aggregation at most the open windows. On static frames both
-    * stages degrade to their batch forms — the function is its own
-    * batch twin (asserted in StreamingSpec across multiple triggers).
-    */
-  def attributionCensusChained(clicks: DataFrame, purchases: DataFrame): DataFrame =
-    gapBuckets(purchaseClickJoin(clicks, purchases))
-      .groupBy(window(col("purchase_ts"), "1 hour").as("w"), col("gap_bucket"))
-      .agg(count(lit(1)).as("n_pairs"))
-      .select(col("w.start").as("window_start"), col("gap_bucket"), col("n_pairs"))
 
   /** The standing census after any number of triggers — an EMPTY census
     * (zero rows) before the first trigger has committed, never an error.

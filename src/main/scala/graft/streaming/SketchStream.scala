@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.Sketches
 
 /** Streaming twin of the sketch family: HLL distinct-count registers
-  * (s01/s05), the count-min grid (s02), and the theta sample (s03)
-  * maintained continuously over a document stream — the full
-  * production sketch feed, not just cardinality.
+  * (s01/s05) and the count-min grid (s02) maintained continuously over
+  * a document stream.
   *
   * The interesting property is the STATE BOUND: a streaming
   * aggregation's state normally grows with the key domain (why
@@ -49,18 +48,4 @@ object SketchStream {
     * bounded probe join over these cells.
     */
   def cmsCells(docs: DataFrame): DataFrame = Sketches.cmsCells(docs)
-
-  /** Continuous theta sample (s03's state): the distinct (source, h)
-    * token hashes below the fixed θ threshold. The dedup state is
-    * bounded BY THE FILTER — only the 2⁻⁶ key-range slice is ever
-    * retained — so no watermark is needed and the sample equals the
-    * batch sample over the full history exactly (fixed-θ, not
-    * bottom-k: arrival order cannot change which keys qualify). Run
-    * in Append mode; downstream overlap grids intersect these samples
-    * exactly as s03 does.
-    */
-  def thetaSample(docs: DataFrame): DataFrame =
-    Sketches.tokenHashes(docs)
-      .filter(col("h") < lit(Sketches.thetaThreshold))
-      .dropDuplicates("source", "h")
 }

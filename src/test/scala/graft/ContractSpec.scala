@@ -40,6 +40,37 @@ object TestSpark {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** `body`'s result and every stage that completed while it ran, on
+    * any thread (a streaming query's batches run on their own); a
+    * marker job drains the listener, as in [[jobsOf]].
+    */
+  def stagesOf[A](body: => A): (A, Seq[org.apache.spark.scheduler.StageInfo]) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val marker = s"graft_stages_${System.nanoTime()}"
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          drained.countDown()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        done.add(e.stageInfo): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobDescription(marker)
+      sc.parallelize(Seq(1), 1).count()
+      require(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus did not drain")
+      (out, done.toArray(Array.empty[StageInfo]).toSeq)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 /** Driver-contract invariants: every query runs, returns rows, and every

@@ -62,7 +62,6 @@ class FactStreamSpec extends AnyFunSuite {
   }
 
   test("each fact micro-batch writes its month files from more than one task, one file per month") {
-    import org.apache.spark.scheduler._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val li = graft.sources.Tables.lineitem(spark, TestSpark.sf)
@@ -74,22 +73,9 @@ class FactStreamSpec extends AnyFunSuite {
     val part = graft.sources.Tables.part(spark, TestSpark.sf)
       .select(col("p_partkey"), col("p_type"))
 
-    // the completed stages; a marker job drains the listener bus, as in
-    // TestSpark.jobsOf
-    val done = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
-    val marker = s"graft_fact_sink_${System.nanoTime()}"
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
-          drained.countDown()
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        done.add(e.stageInfo): Unit
-    }
     val src = MemoryStream[LineitemEvent]
     val out = java.nio.file.Files.createTempDirectory("graft_fact_sink").toString
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, stages) = TestSpark.stagesOf {
       val q = FactStream.run(
         FactStream.factStream(src.toDF(), orders, part),
         s"$out/fact", s"$out/ckpt")
@@ -97,18 +83,11 @@ class FactStreamSpec extends AnyFunSuite {
         src.addData(chunk: _*)
         q.processAllAvailable()
       } finally q.stop()
-      spark.sparkContext.setJobDescription(marker)
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "the listener bus did not drain")
-    } finally {
-      spark.sparkContext.setJobDescription(null)
-      spark.sparkContext.removeSparkListener(listener)
     }
 
     // a batch's sink-write stage is the one whose tasks wrote records;
     // the batches run one after another, so these are batches 0, 1, 2
-    val writeTasks = done.toArray(Array.empty[StageInfo]).toSeq
+    val writeTasks = stages
       .filter(_.taskMetrics.outputMetrics.recordsWritten > 0).map(_.numTasks)
     assert(writeTasks.size == 3, s"expected one sink-write stage per batch, got $writeTasks")
     writeTasks.zipWithIndex.foreach { case (tasks, b) =>

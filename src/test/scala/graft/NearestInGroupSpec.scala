@@ -6,15 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorFunctions.dot
 import graft.operators.Similarity
-import graft.plans.CosineSimilarity
 
-/** Pins the grouped map-form argmax (NearestInGroup inside
-  * Similarity.pqAssignTo and the hierarchical assignSub) bit-identical
-  * to the declarative shapes they replaced: equi-join on the group key
-  * → groupBy → min(struct(d2, code)) / max(struct(cos, -sub_id)).
-  * Covers both metrics, the smallest-id tie-break, the NaN ordering
-  * (greatest: loses the d2 min, wins the cos max), and malformed
-  * vectors landing on (smallest id in group, null score).
+/** Pins the grouped map-form argmin (NearestInGroup inside
+  * Similarity.pqAssignTo) bit-identical to the declarative shape it
+  * replaced: equi-join on the group key → groupBy →
+  * min(struct(d2, code)). Covers the smallest-id tie-break and
+  * malformed vectors landing on (smallest id in group, null score).
   */
 class NearestInGroupSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -73,42 +70,5 @@ class NearestInGroupSpec extends AnyFunSuite {
     assert(got(0L) == 0L) // tie between codes 0 and 1 -> smallest
     assert(got(1L) == 0L) // malformed -> smallest code in subspace
     assert(got(2L) == 2L)
-  }
-
-  test("hierarchical sub-assignment matches the declarative max-struct") {
-    // a1 shape: (vec_id, emb, coarse_id); cents: (coarse_id, sub_id, c_emb)
-    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-    val a1 = e.withColumn("coarse_id", pmod(col("vec_id"), lit(3L)))
-    val cents = a1.groupBy(col("coarse_id"),
-        pmod(col("vec_id"), lit(4L)).as("sub_id"))
-      .agg(min(struct(col("vec_id"), col("emb"))).as("s"))
-      .select(col("coarse_id"), col("sub_id"), col("s.emb").as("c_emb"))
-    cents.cache().count()
-    val got = Similarity.assignSubForTest(a1, cents).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(3),
-        if (r.isNullAt(4)) None else Some(r.getDouble(4))))).toMap
-    val want = a1.join(broadcast(cents), Seq("coarse_id"))
-      .groupBy(col("vec_id"))
-      .agg(first(col("coarse_id")).as("coarse_id"), first(col("emb")).as("emb"),
-        max(struct(round(CosineSimilarity.cosineSim(col("emb"), col("c_emb")), 4).as("cos_r"),
-          (-col("sub_id")).as("neg_sub"))).as("best"))
-      .select(col("vec_id"), col("coarse_id"), col("emb"),
-        (-col("best.neg_sub")).as("sub_id"), col("best.cos_r").as("cos_r"))
-      .collect()
-      .map(r => r.getLong(0) -> ((r.getLong(3),
-        if (r.isNullAt(4)) None else Some(r.getDouble(4))))).toMap
-    assert(got.keySet == want.keySet)
-    got.foreach { case (vid, (sid, cos)) =>
-      val (wsid, wcos) = want(vid)
-      assert(sid == wsid, s"vec $vid: sub $sid != $wsid")
-      (cos, wcos) match {
-        case (Some(a), Some(b)) =>
-          assert(java.lang.Double.doubleToLongBits(a) ==
-            java.lang.Double.doubleToLongBits(b), s"vec $vid: cos $a != $b")
-        case (a, b) => assert(a == b, s"vec $vid: cos nullity $a != $b")
-      }
-    }
-    cents.unpersist()
   }
 }

@@ -114,6 +114,26 @@ class PipelineSpec extends AnyFunSuite {
     assert(oneDay.queryExecution.executedPlan.toString.contains("PartitionFilters"))
   }
 
+  test("a month-grain fact load writes from more than one task, at most one file per month") {
+    val out = Files.createTempDirectory("graft_fact_load").toString
+    val (rows, stages) = TestSpark.stagesOf(graft.operators.Facts.loadFactIncrement(
+      spark, TestSpark.sf, s"$out/fact_sales", 19950101L, 19961231L))
+    assert(rows > 0)
+    // the staged write is the one stage whose tasks wrote records
+    val writeTasks = stages
+      .filter(_.taskMetrics.outputMetrics.recordsWritten > 0).map(_.numTasks)
+    assert(writeTasks.size == 1, s"expected one write stage, got $writeTasks")
+    assert(writeTasks.head > 1, s"the load wrote its month files from ${writeTasks.head} task(s)")
+    // each month's rows sit in one task, so each month dir holds one file
+    val months = new java.io.File(s"$out/fact_sales").listFiles()
+      .filter(_.getName.startsWith("month_key="))
+    assert(months.length == 24, s"expected the 24 months of 1995-1996, got ${months.length}")
+    months.foreach { m =>
+      val files = m.listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1, s"${m.getName} holds ${files.length} files")
+    }
+  }
+
   test("composed daily run: fact increments + shard dedup == one full rebuild") {
     import org.apache.spark.sql.functions.col
     val out = Files.createTempDirectory("graft_wh_daily").toString

@@ -39,61 +39,15 @@ class PqWideSpec extends AnyFunSuite {
         lit(0.0), (acc, x) => acc + x).as("d2"))
       .agg(avg(col("d2"))).head().getDouble(0)
 
-  test("signed-perm rotation preserves norms and re-balances a variance-skewed corpus") {
-    import spark.implicits._
-    // dims 0-3 carry almost all the variance; 4-15 are near-constant —
-    // the shape plain slicing handles worst (one subspace absorbs all
-    // quantization error) and OPQ-style rotation exists to fix
-    val dim = 16
-    val full = spark.range(0L, 2000L).toDF("vec_id")
-      .withColumn("r", transform(sequence(lit(0), lit(dim - 1)), p =>
-        when(p < 4,
-          (pmod(col("vec_id") * 2654435761L + p.cast("long") * 7919L, lit(1000L))
-            .cast("double") / 500.0) - 1.0)
-          .otherwise(
-            ((pmod(col("vec_id") * 104729L + p.cast("long") * 31L, lit(1000L))
-              .cast("double") / 500.0) - 1.0) / 1000.0)))
-    val rotated = full.withColumn("rot", Similarity.rotateResidual(col("r"), dim))
-    // orthogonality: the squared norm survives the transform exactly up
-    // to summation order (each term is v^2 — sign flips vanish)
-    val normDiff = rotated.select(abs(
-        aggregate(col("r"), lit(0.0), (a, x) => a + x * x) -
-          aggregate(col("rot"), lit(0.0), (a, x) => a + x * x)).as("d"))
-      .agg(max(col("d"))).head().getDouble(0)
-    assert(normDiff < 1e-9, s"rotation changed norms by $normDiff")
-
-    // drive the PRODUCTION residual seam end-to-end: a zero codebook
-    // makes the residual the vector itself, so pqResidualSubs owns the
-    // (rotate →) slice path for both variants
-    val e = full.select(col("vec_id"), col("r").as("emb"))
-    val assign = full.select(col("vec_id"), lit(0L).as("centroid_id"))
-    val cb = spark.range(1).select(lit(0L).as("centroid_id"),
-      transform(sequence(lit(0), lit(dim - 1)), _ => lit(0.0)).as("c_emb"))
-    val plain = Similarity.pqResidualSubs(e, assign, cb, rotateDim = None).persist()
-    val rot = Similarity.pqResidualSubs(e, assign, cb, rotateDim = Some(dim)).persist()
-    try {
-      val (bp, cp) = Similarity.pqTrain(plain, 16)
-      val (br, cr) = Similarity.pqTrain(rot, 16)
-      val (ep, er) = (meanErr(plain, bp, cp), meanErr(rot, br, cr))
-      // the rotation spread the 4 hot dims across subspaces: every
-      // subspace quantizes ~1 of them with its 16 codes instead of one
-      // subspace quantizing all 4
-      assert(er < ep, s"rotated error $er not under plain $ep")
-      // determinism: the permutation is a pure function of dim
-      assert(Similarity.signedPermOf(dim) == Similarity.signedPermOf(dim))
-      assert(Similarity.signedPermOf(dim).map(_._1).sorted == (0 until dim))
-    } finally {
-      plain.unpersist(false); rot.unpersist(false); spark.catalog.clearCache()
-    }
-  }
-
   test("ks=256 codebooks populate on a large-enough corpus and beat ks=16 error") {
     val s = subs.persist()
     try {
-      val (b16, c16) = Similarity.pqTrain(s, 16)
-      val (b256, c256) = Similarity.pqTrain(s, 256)
-      val (book16, codes16) = (b16.persist(), c16.persist())
-      val (book256, codes256) = (b256.persist(), c256.persist())
+      val book16 = Similarity.pqBookOf(s, 16).persist()
+      val book256 = Similarity.pqBookOf(s, 256).persist()
+      val codes16 = Similarity.pqAssignTo(s, book16)
+        .select(col("vec_id"), col("m"), col("code")).persist()
+      val codes256 = Similarity.pqAssignTo(s, book256)
+        .select(col("vec_id"), col("m"), col("code")).persist()
 
       // every subspace's 8-bit codebook actually populates: 4000
       // vectors / 256 seeds ≈ 16 members each — no degenerate collapse

@@ -43,7 +43,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(Similarity.adaptiveCells(100L) == 10)
     assert(Similarity.adaptiveCells(10_000_000_000L) == 4096)
     // publish the adaptive index as the corpus's active index
-    val a = Similarity.ivfBuildAdaptive(spark, TestSpark.sf)
+    val a = Similarity.ivfBuild(spark, TestSpark.sf, Similarity.adaptiveCells(n))
     val cells = a.select("centroid_id").distinct().count()
     assert(cells > 16 && cells <= k,
       s"adaptive k=$k should spread past the default 16, got $cells cells")
@@ -159,41 +159,6 @@ class SimilaritySpec extends AnyFunSuite {
       val k = byId(kept)
       k._3 < vcos || (k._3 == vcos && k._1 < vid)
     })
-  }
-
-  test("hierarchical semantic assignment: √n granularity at n^(1/4) scoring cost, bit-stable") {
-    val n = Tables.embeddings(spark, TestSpark.sf).count()
-    val (k1, k2) = Similarity.hierarchicalCells(n)
-    // the factoring keeps the fine-cell granularity target while the
-    // per-vector scoring cost drops from k to k1 + k2
-    assert(k1.toLong * k2 >= Similarity.adaptiveCells(n))
-    assert(k1 + k2 < Similarity.adaptiveCells(n),
-      s"hierarchy must be cheaper to build: $k1 + $k2 vs k=${Similarity.adaptiveCells(n)}")
-    val a = Similarity.semanticAssignHierarchical(spark, TestSpark.sf)
-    val rows = a.collect().map(r =>
-      (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-    assert(rows.length == n && rows.map(_._1).distinct.length == n)
-    val cells = rows.map(_._2).distinct
-    assert(cells.length <= k1 * k2 && cells.length > k1,
-      s"fine cells (${cells.length}) must refine past the $k1 coarse cells")
-    // published cell_size agrees with a recount
-    val counts = rows.groupBy(_._2).map { case (c, g) => c -> g.length.toLong }
-    assert(rows.forall(r => counts(r._2) == r._4))
-    // deterministic: a rebuild is bit-identical
-    val again = Similarity.semanticAssignHierarchical(spark, TestSpark.sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-    assert(again.toSet == rows.toSet)
-    // fit quality holds at the shared granularity target: the
-    // hierarchical assignment's mean centroid cosine lands within a
-    // small tolerance of the flat √n index's (different cell
-    // boundaries, same fineness — deterministic data, so this is a
-    // pinned measurement, not a flaky bound)
-    val meanH = rows.map(_._3).sum / rows.length
-    val flat = Similarity.semanticIndex(spark, TestSpark.sf)
-      .select("cos_to_centroid").collect().map(_.getDouble(0))
-    val meanF = flat.sum / flat.length
-    assert(meanH >= meanF - 0.05,
-      s"hierarchical fit $meanH should track the flat build's $meanF")
   }
 
   test("d23 semantic contamination: zero-safe per-bench rows, flags match brute force") {

@@ -69,29 +69,4 @@ class SketchStreamSpec extends AnyFunSuite {
     val occ = (b1 ++ b2 ++ b3).map(_.text.split("\\s+").count(_.nonEmpty)).sum
     assert(streamed.values.sum == occ.toLong * 4)
   }
-
-  test("streamed theta sample equals the batch sample over the full history") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val rnd = new Random(73)
-    val (b1, b2, b3) = (mkDocs(rnd, 25, 0), mkDocs(rnd, 25, 100), mkDocs(rnd, 25, 200))
-    val src = MemoryStream[Doc]
-    src.addData(b1: _*)
-    src.addData(b2: _*)
-    src.addData(b3: _*)
-    // Append mode: dropDuplicates emits each qualifying key once, on
-    // first sight — the union across micro-batches IS the sample set
-    val streamed = EventsStream.runToMemory(
-      SketchStream.thetaSample(src.toDF()), "theta_samp", OutputMode.Append())
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val batch = SketchStream.thetaSample((b1 ++ b2 ++ b3).toDF())
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(streamed == batch, "stream == batch, sampled key for key")
-    // the θ filter is what bounds the dedup state: the sample must be a
-    // strict slice of the vocabulary (2⁻⁶ expected; allow generous slack)
-    val vocab = (b1 ++ b2 ++ b3).flatMap(d =>
-      d.text.split("\\s+").filter(_.nonEmpty).map(d.source -> _)).toSet.size
-    assert(streamed.nonEmpty && streamed.size < vocab / 8,
-      s"sample ${streamed.size} vs vocab $vocab")
-  }
 }

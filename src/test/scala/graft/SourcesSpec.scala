@@ -8,25 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{Fetch, Sinks, Tables}
 
-/** The multi-source extract layer: CSV file source, JSON (REST-payload)
-  * source with nested-object flattening, source tagging, column
-  * standardization — the reference's extract.py surface.
+/** The source and sink layer: the JSON (REST-payload) source with
+  * nested-object flattening and source tagging (the reference's
+  * extract.py surface), the fetch seam, and the Sinks publish protocol.
   */
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-
-  test("csv source: explicit schema, header, source tag") {
-    val dir = Files.createTempDirectory("graft_csv").toString
-    Files.writeString(java.nio.file.Path.of(s"$dir/sales.csv"),
-      "Transaction ID,Total Amount\n1,10.5\n2,20.25\n")
-    val schema = StructType(Seq(
-      StructField("Transaction ID", LongType), StructField("Total Amount", DoubleType)))
-    val df = Tables.standardizeColumns(
-      Tables.readCsv(spark, s"$dir/sales.csv", schema, "kaggle_csv"))
-    assert(df.columns.toSet == Set("transaction_id", "total_amount", "_source", "_extracted_at"))
-    assert(df.count() == 2)
-    assert(df.select("_source").distinct().collect().head.getString(0) == "kaggle_csv")
-  }
 
   test("json source: nested struct flattens like the API rating object") {
     val dir = Files.createTempDirectory("graft_json").toString
@@ -45,34 +32,12 @@ class SourcesSpec extends AnyFunSuite {
     assert(df.where("rating_count = 120").count() == 1)
   }
 
-  test("stage-publish roundtrip preserves rows; csv export writes one file") {
+  test("stage-publish roundtrip preserves rows") {
     val dir = Files.createTempDirectory("graft_sink").toString
     val df = spark.read.parquet(s"${TestSpark.sf}/region.parquet")
     val n = Sinks.stagePublish(df, s"$dir/region")
     assert(n == df.count())
     assert(spark.read.parquet(s"$dir/region").count() == n)
-    Sinks.csvExport(df, s"$dir/region_csv")
-    val files = new java.io.File(s"$dir/region_csv").listFiles()
-      .filter(_.getName.endsWith(".csv"))
-    assert(files.length == 1)
-  }
-
-  test("jdbc staging roundtrip against embedded Derby, plain and range-partitioned") {
-    val url = "jdbc:derby:memory:graft_stage;create=true"
-    val df = spark.read.parquet(s"${TestSpark.sf}/nation.parquet")
-    Sinks.jdbcStage(df, url, "stg_nation")
-    val back = Sinks.readStaging(spark, url, "stg_nation")
-    assert(back.count() == df.count())
-    assert(back.selectExpr("cast(n_nationkey as long)").collect()
-      .map(_.getLong(0)).sorted.toSeq ==
-      df.selectExpr("cast(n_nationkey as long)").collect()
-        .map(_.getLong(0)).sorted.toSeq)
-    // range-partitioned read-back: same rows, parallel scan
-    val part = Sinks.readStaging(spark, url, "stg_nation",
-      partitionColumn = "n_nationkey", lowerBound = 0L, upperBound = 25L,
-      numPartitions = 4)
-    assert(part.rdd.getNumPartitions == 4)
-    assert(part.count() == df.count())
   }
 
   test("catalog lists every table with columns and row counts") {

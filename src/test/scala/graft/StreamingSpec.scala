@@ -132,47 +132,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(batch === got)
   }
 
-  test("chained census: stream-stream join into windowed agg, == batch across triggers") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[Event]
-    val purchases = MemoryStream[Event]
-    val q = EventsStream.attributionCensusChained(clicks.toDF(), purchases.toDF())
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("chained_census").start()
-    // three conversion triggers across two purchase hours
-    val feed = Seq(
-      (Event(1, ts("2024-01-01 10:00:00"), 1, "click", 0),
-        Event(10, ts("2024-01-01 10:03:00"), 1, "purchase", 1.0)),
-      (Event(2, ts("2024-01-01 10:10:00"), 2, "click", 0),
-        Event(11, ts("2024-01-01 10:40:00"), 2, "purchase", 2.0)),
-      (Event(3, ts("2024-01-01 11:05:00"), 3, "click", 0),
-        Event(12, ts("2024-01-01 11:15:00"), 3, "purchase", 3.0)))
-    feed.foreach { case (c, p) =>
-      clicks.addData(c); purchases.addData(p); q.processAllAvailable()
-    }
-    // advance BOTH watermarks far past the windows so Append emits them
-    clicks.addData(Event(99, ts("2024-01-02 12:00:00"), 99, "click", 0))
-    purchases.addData(Event(98, ts("2024-01-02 12:00:00"), 98, "purchase", 0))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("chained_census").collect()
-      .map(r => (r.getAs[Timestamp]("window_start").toString,
-        r.getAs[String]("gap_bucket"), r.getAs[Long]("n_pairs"))).toSet
-    // batch twin: the same function over the full static feed
-    val batch = EventsStream.attributionCensusChained(
-      (feed.map(_._1) :+ Event(99, ts("2024-01-02 12:00:00"), 99, "click", 0)).toDF(),
-      (feed.map(_._2) :+ Event(98, ts("2024-01-02 12:00:00"), 98, "purchase", 0)).toDF())
-      .collect()
-      .map(r => (r.getAs[Timestamp]("window_start").toString,
-        r.getAs[String]("gap_bucket"), r.getAs[Long]("n_pairs"))).toSet
-    assert(got == batch)
-    assert(got == Set(
-      ("2024-01-01 10:00:00.0", "<=5m", 1L),
-      ("2024-01-01 10:00:00.0", "<=30m", 1L),
-      ("2024-01-01 11:00:00.0", "<=15m", 1L)))
-  }
-
   test("census compaction bounds the file listing; empty batches write nothing") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -283,24 +242,5 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("event_id"), r.getAs[Long]("n_clicks_1h")))
       .filter(_._2 > 0).toMap
     assert(streamCounts === batch)
-  }
-
-  test("runningUserStats keeps per-user state across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val src = MemoryStream[Event]
-    val q = EventsStream.runningUserStats(src.toDS()).toDF()
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName("us").start()
-    src.addData(Event(1, ts("2024-01-01 10:00:00"), 7, "click", 1.5))
-    q.processAllAvailable()
-    src.addData(Event(2, ts("2024-01-01 10:10:00"), 7, "click", 2.5))
-    q.processAllAvailable()
-    q.stop()
-    // update mode emits one row per batch; the latest has the running totals
-    val last = spark.table("us").collect()
-      .map(r => (r.getAs[Long]("n_events"), r.getAs[Double]("total_value")))
-      .maxBy(_._1)
-    assert(last == ((2L, 4.0)))
   }
 }
