@@ -152,10 +152,9 @@ object GraftSession {
     * recomputes from lineage. A returned frame whose plan reads a
     * localCheckpoint leaf does NOT: its blocks are gone, and the next
     * action on it fails with `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`.
-    * Three query frames are of that kind — `d19_shard_dedup`
-    * (`shardDedup` returns a localCheckpoint), `d35_sliced_dedup`
-    * (its slices are eager localCheckpoints) and `q61_purchase_hits`
-    * (each HITS half-step is a lazy localCheckpoint). Release only
+    * Two query frames are of that kind — `d35_sliced_dedup` (its
+    * slices are eager localCheckpoints) and `q61_purchase_hits` (each
+    * HITS half-step is a lazy localCheckpoint). Release only
     * after such a frame is consumed, or re-run its query rather than
     * re-use the frame. Artifact-table state (the IVF index,
     * verified-pair parquet) is on disk and unaffected.

@@ -173,7 +173,7 @@ object Pipeline {
     * new sessions have none, which is the point).
     *
     * PARTITIONED artifacts (Hive `col=value` layout — the q47
-    * incremental fact's month/day grain, or any Sinks publish with
+    * incremental fact's month partitions, or any Sinks publish with
     * `partitionedBy`): `CREATE TABLE ... USING parquet LOCATION`
     * infers the partition COLUMN from the layout but registers an
     * EMPTY partition set — the catalog relation serves ZERO ROWS
@@ -491,7 +491,7 @@ object Pipeline {
     * invocation — the corpus's only when some slice carries a doc or
     * vector shard, so a fact-only schedule is the plain incremental
     * fact run (load.py:195 WRITE_APPEND made idempotent: a retry or
-    * backfill of a slice rewrites only its own `grain` partitions).
+    * backfill of a slice rewrites only its own month partitions).
     * Each slice contributes a fact LoadStat, whose row count is the
     * slice as READ BACK from the published partitions, and (when a
     * shard arrived) a dedup and a vector LoadStat, so the run log reads
@@ -500,7 +500,6 @@ object Pipeline {
   def dailyRun(spark: SparkSession, sfDir: String, outDir: String,
                slices: Seq[DailySlice], nShards: Int,
                validateFirst: Boolean = true,
-               grain: String = "month",
                onStage: String => Unit = _ => (),
                onStat: LoadStat => Unit = _ => ()): Seq[LoadStat] = {
     val modes = FullRun +:
@@ -513,7 +512,7 @@ object Pipeline {
     val indexDir = s"$outDir/dedup_index"
     val stats = slices.flatMap { s =>
       val fact = step(s"fact_sales[${s.fromKey}..${s.toKey}]")(Facts.loadFactIncrement(
-        spark, sfDir, s"$outDir/fact_sales", s.fromKey, s.toKey, grain))
+        spark, sfDir, s"$outDir/fact_sales", s.fromKey, s.toKey))
       val dedup = s.docShard.map(i => step(s"shard_dedup[shard=$i/$nShards]")(
         Dedup.shardIngest(spark, sfDir, indexDir, i, nShards).count()))
       // the vector side (q51's operating mode): first shard bootstraps
@@ -555,8 +554,7 @@ object Pipeline {
     * source mid-replace); the attempt count and last error survive
     * into the thrown exception so the failure tells the whole story.
     */
-  private[graft] def withRetries[A](retries: Int, stage: String,
-      retryDelayMs: Long = 0L)(body: => A): A = {
+  private[graft] def withRetries[A](retries: Int, stage: String)(body: => A): A = {
     // a negative count would skip the loop entirely and NPE on `last`
     // below — fail with the real story instead
     require(retries >= 0, s"stage $stage: retries must be >= 0, got $retries")
@@ -567,13 +565,6 @@ object Pipeline {
       // immediately, never re-execute the stage against corrupted state
       try return body
       catch { case scala.util.control.NonFatal(e) => last = e; attempt += 1 }
-      // the DAG's retry_delay + retry_exponential_backoff
-      // (default_args: 5 min, doubling): delay × 2^(attempt-1) before
-      // re-attempting — lets a torn source finish replacing / a rate
-      // limit reset instead of instantly re-hitting it. Default 0 keeps
-      // the in-process semantics (and tests) unchanged.
-      if (attempt <= retries && retryDelayMs > 0)
-        Thread.sleep(retryDelayMs << math.min(attempt - 1, 16))
     }
     throw new RuntimeException(
       s"stage $stage failed after ${retries + 1} attempts (dag retries=$retries): " +
@@ -628,11 +619,11 @@ object Pipeline {
     */
   def dailyRunNotified(spark: SparkSession, sfDir: String, outDir: String,
                        slices: Seq[DailySlice], nShards: Int,
-                       validateFirst: Boolean = true, grain: String = "month",
+                       validateFirst: Boolean = true,
                        runId: String = "daily",
                        stageSlaSeconds: Double = Double.PositiveInfinity): Seq[LoadStat] =
     withAlerts(spark, outDir, runId, stageSlaSeconds) { (onStage, onStat) =>
-      dailyRun(spark, sfDir, outDir, slices, nShards, validateFirst, grain,
+      dailyRun(spark, sfDir, outDir, slices, nShards, validateFirst,
         onStage = onStage, onStat = onStat)
       0L
     }

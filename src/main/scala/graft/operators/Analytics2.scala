@@ -37,23 +37,10 @@ object Analytics2 {
     * (streamlit_app.py:1769 px.box) plus p90: exact percentiles per
     * segment — `percentile()` bit-matches DuckDB quantile_cont.
     */
-  def segmentPercentiles(spark: SparkSession, dir: String): DataFrame =
-    segmentPercentiles(spark, dir, approx = false)
-
-  /** `approx = true` is the 100×-scale path: exact `percentile` buffers
-    * every group value in its final merge task (fine at dashboard scale,
-    * an OOM at per-segment corpus scale), while `approx_percentile`
-    * merges fixed-size quantile sketches and partial-aggregates map-side
-    * (plan-pinned in PlanHygieneSpec). The exact form stays the oracle
-    * row — approx results are data-dependent within the sketch's error
-    * bound, not bit-reproducible across engines.
-    */
-  def segmentPercentiles(spark: SparkSession, dir: String, approx: Boolean): DataFrame = {
+  def segmentPercentiles(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)
     val c = Tables.customer(spark, dir).select(col("c_custkey"), col("c_mktsegment"))
-    def pct(p: Double): Column =
-      if (approx) expr(s"approx_percentile(o_totalprice, $p, 10000)")
-      else expr(s"percentile(o_totalprice, $p)")
+    def pct(p: Double): Column = expr(s"percentile(o_totalprice, $p)")
     o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment").as("segment"))
       .agg(
@@ -332,24 +319,14 @@ object Analytics2 {
     * counts-map of every DISTINCT per-customer revenue in its final
     * merge task (the q26 accepted cost — bounded by distinct-revenue
     * cardinality, not customer count, but still a single-task reduce).
-    * For dims where that cardinality is itself huge, pass
-    * `approx = true`: `approx_percentile` partial-aggregates a
-    * fixed-size sketch and the boundaries become approximate — the
-    * honest production trade at 100 TB.
     */
-  def revenueDeciles(spark: SparkSession, dir: String): DataFrame =
-    revenueDeciles(spark, dir, approx = false)
-
-  def revenueDeciles(spark: SparkSession, dir: String, approx: Boolean): DataFrame = {
+  def revenueDeciles(spark: SparkSession, dir: String): DataFrame = {
     val perCust = Tables.orders(spark, dir)
       .groupBy(col("o_custkey"))
       .agg(round(sum(m3(col("o_totalprice"))), 2).cast("decimal(18,2)").as("rev_d"))
       .withColumn("rev", col("rev_d").cast("double"))
     val bounds = perCust.agg(
-      (if (approx)
-        expr("approx_percentile(rev, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9), 10000)")
-      else
-        expr("percentile(rev, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))")).as("ts"))
+      expr("percentile(rev, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))").as("ts"))
     val deciles = perCust.crossJoin(broadcast(bounds))
       .withColumn("decile",
         (size(filter(col("ts"), t => col("rev") > t)) + 1).cast("long"))
@@ -414,18 +391,12 @@ object Analytics2 {
     * to the customer frame; the three quintile boundary arrays come
     * from ONE aggregation over that post-agg frame and broadcast back
     * (the q44 pattern — never ntile's global single-task sort); each
-    * customer then scores map-side via counting filters. `approx =
-    * true` swaps the exact percentile for the sketch-merging
-    * approx_percentile where the customer frame's single-task exact
-    * buffer would matter (the q26/q44 scale path). Monetary stays in
+    * customer then scores map-side via counting filters. Monetary stays in
     * the exact DECIMAL domain until one final round (parallelism-
     * independent); recency counts whole days against the corpus's own
     * max order date, so the table is reproducible from the data alone.
     */
-  def rfmSegmentation(spark: SparkSession, dir: String): DataFrame =
-    rfmSegmentation(spark, dir, approx = false)
-
-  def rfmSegmentation(spark: SparkSession, dir: String, approx: Boolean): DataFrame = {
+  def rfmSegmentation(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)
     val dmax = o.agg(max(to_date(col("o_orderdate"))).as("dmax"))
     val perCust = o.groupBy(col("o_custkey"))
@@ -438,9 +409,7 @@ object Analytics2 {
         datediff(col("dmax"), col("last_order")).cast("long").as("recency_days"),
         col("frequency"),
         col("mon_d").cast("double").as("monetary"))
-    def pct(c: String) =
-      if (approx) expr(s"approx_percentile($c, array(0.2,0.4,0.6,0.8), 10000)")
-      else expr(s"percentile($c, array(0.2,0.4,0.6,0.8))")
+    def pct(c: String) = expr(s"percentile($c, array(0.2,0.4,0.6,0.8))")
     val bounds = perCust.agg(
       pct("recency_days").as("rb"), pct("frequency").as("fb"),
       pct("monetary").as("mb"))
@@ -606,20 +575,12 @@ object Analytics2 {
     * order key at 100 TB (x04 measures that win; Sinks.bucketed is
     * the writer). Only 3 columns survive to the join; lead-day math is
     * integer. Mean is exact-integer-sum / count. Percentiles group
-    * into ≤5 priorities, so the exact single-buffer form is the
-    * default and `approx = true` swaps in the sketch-merging
-    * approx_percentile (the q26/q52 scale rule).
+    * into ≤5 priorities, so the exact single-buffer form is enough.
     */
-  def leadTime(spark: SparkSession, dir: String): DataFrame =
-    leadTime(spark, dir, approx = false)
-
-  def leadTime(spark: SparkSession, dir: String, approx: Boolean): DataFrame = {
+  def leadTime(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_shipdate"))
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-    val pct =
-      if (approx) expr("approx_percentile(lead_days, array(0.5, 0.9), 10000)")
-      else expr("percentile(lead_days, array(0.5, 0.9))")
     li.join(o, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_orderpriority").as("priority"),
         datediff(to_date(col("l_shipdate")), to_date(col("o_orderdate")))
@@ -628,13 +589,11 @@ object Analytics2 {
       .agg(
         count(lit(1)).as("n_lines"),
         (sum(col("lead_days")).cast("double") / count(lit(1))).as("avg_lead_days"),
-        pct.as("p"),
+        expr("percentile(lead_days, array(0.5, 0.9))").as("p"),
         max(col("lead_days")).cast("long").as("max_days"))
-      // cast: approx_percentile preserves the INT input type while
-      // percentile returns DOUBLE — both paths must publish one schema
       .select(col("priority"), col("n_lines"), col("avg_lead_days"),
-        element_at(col("p"), 1).cast("double").as("p50_days"),
-        element_at(col("p"), 2).cast("double").as("p90_days"),
+        element_at(col("p"), 1).as("p50_days"),
+        element_at(col("p"), 2).as("p90_days"),
         col("max_days"))
   }
 
@@ -651,23 +610,15 @@ object Analytics2 {
     * class), the segment arrives via a broadcast dim join, and one
     * groupBy(segment) computes everything including both distinct
     * customer counts (5 segments — the distinct expansion is bounded).
-    * Median is the exact single-buffer form by default (gaps ≈ order
-    * rows; fine to ~10⁶ per segment) with `approx = true` swapping in
-    * the sketch-merging approx_percentile for the 100 TB run (the
-    * q26/q52 rule).
+    * Median is the exact single-buffer form (gaps ≈ order rows; fine
+    * to ~10⁶ per segment).
     */
-  def purchaseIntervals(spark: SparkSession, dir: String): DataFrame =
-    purchaseIntervals(spark, dir, approx = false)
-
-  def purchaseIntervals(spark: SparkSession, dir: String, approx: Boolean): DataFrame = {
+  def purchaseIntervals(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)
       .select(col("o_custkey"), col("o_orderkey"), to_date(col("o_orderdate")).as("od"))
     val c = Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
     val w = Window.partitionBy(col("o_custkey")).orderBy(col("od"), col("o_orderkey"))
-    val pct =
-      if (approx) expr("approx_percentile(gap, 0.5, 10000)").cast("double")
-      else expr("percentile(gap, 0.5)")
     o.withColumn("gap", datediff(col("od"), lag(col("od"), 1).over(w)))
       .join(broadcast(c), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment").as("segment"))
@@ -677,7 +628,7 @@ object Analytics2 {
           .as("n_repeat_customers"),
         count(col("gap")).as("n_gaps"),
         (sum(col("gap")).cast("double") / count(col("gap"))).as("avg_gap_days"),
-        pct.as("p50_gap_days"),
+        expr("percentile(gap, 0.5)").as("p50_gap_days"),
         max(col("gap")).cast("long").as("max_gap_days"))
       .withColumn("repeat_share",
         col("n_repeat_customers").cast("double") / col("n_customers"))

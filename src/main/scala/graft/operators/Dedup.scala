@@ -1080,25 +1080,34 @@ object Dedup {
     out
   }
 
-  /** Standing-index path for the d19 demo split: the index tier of the
-    * held-out corpus (doc_id % 5 ≠ 4), fingerprint-keyed to the source
+  /** Index-tier path for one side of the d19 demo split: "holdout5"
+    * for the held-out corpus (doc_id % 5 ≠ 4), "shard5" for the
+    * arriving shard (doc_id % 5 = 4), fingerprint-keyed to the source
     * like every artifact and banding-keyed like the d03 candidates.
-    * "holdout5" marks the split spec — a real deployment keys this by
+    * The tag marks the split spec — a real deployment keys this by
     * corpus snapshot.
     */
-  private def corpusTierPath(spark: SparkSession, dir: String,
-                             nBands: Int, rowsPerBand: Int): String =
-    Sinks.artifactPath(spark, "doc_index", dir, tag = "holdout5") +
+  private def tierPath(spark: SparkSession, dir: String, tag: String,
+                       nBands: Int, rowsPerBand: Int): String =
+    Sinks.artifactPath(spark, "doc_index", dir, tag = tag) +
       s"_b${nBands}r$rowsPerBand"
 
   /** d19 entry: split the documents table into a standing corpus
     * (doc_id % 5 ≠ 4) and an arriving shard (doc_id % 5 = 4), claim
-    * the corpus index tier iff missing (the standing index a previous
-    * run would have left), probe the shard's tier against it, and
-    * return the shard-involving removal report. Per-shard cost is then:
-    * the shard's one tier aggregation + the banded probe join +
-    * array-vs-array verification — the corpus is neither
+    * each side's index tier iff missing (the corpus tier is the
+    * standing index a previous run would have left; the shard tier is
+    * what an ingest tick publishes), probe the shard's tier against the
+    * corpus's, and return the shard-involving removal report. Per-shard
+    * cost is then: the shard's one tier aggregation + the banded probe
+    * join + array-vs-array verification — the corpus is neither
     * re-fingerprinted nor re-exploded.
+    *
+    * Both tiers are read back from parquet, as an ingest tick reads
+    * its own: over a lazy shard tier Catalyst would infer the shard's
+    * `pmod` filter through each [[candidateDocs]] branch, the copies of
+    * the band pair join would differ, and it would run three times.
+    * The returned frame holds no checkpoint, so it replays after
+    * [[graft.GraftSession.releaseQueryCaches]].
     */
   def shardDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
@@ -1107,11 +1116,10 @@ object Dedup {
     // candidates (banding-keyed path: a changed decision is a fresh
     // index build, never a mixed-banding probe)
     val (nb, nr) = chosenBanding(spark, dir)
-    def tier(d: DataFrame) = indexTierOf(wordShinglesOf(d, dedup = false), nb, nr)
-    val corpus = Sinks.ensure(spark, corpusTierPath(spark, dir, nb, nr))(
-      tier(docs.filter(!isShard)))
-    // the report is tiny: materialize it eagerly
-    shardProbeFrame(corpus, tier(docs.filter(isShard))).localCheckpoint()
+    def tier(tag: String, side: Column) =
+      Sinks.ensure(spark, tierPath(spark, dir, tag, nb, nr))(
+        indexTierOf(wordShinglesOf(docs.filter(side), dedup = false), nb, nr))
+    shardProbeFrame(tier("holdout5", !isShard), tier("shard5", isShard))
   }
 
   // ─── growing-index shard ingest (the composed daily-DAG primitive) ───
@@ -1830,19 +1838,15 @@ object Dedup {
 
   /** Salt fan-out for hot-key candidate joins. Parallelism-driven
     * (round-13 verdict item 5 — a fixed 32 sized the fan-out to THIS
-    * box's cores): defaults to `defaultParallelism` (the cluster's
+    * box's cores): it is `defaultParallelism` (the cluster's
     * total core count — the number of tasks a hot key's work can
     * actually spread across) floored at 32 so the local mode keeps its
-    * measured shape, overridable via `spark.graft.hot.salts` for
-    * deliberate re-profiles (the sf10 straggler-tail study). Bounded
-    * above at 4096: the replication cost is prefix-side rows × salts,
-    * and past the hot task's own frontier more fan-out only adds
-    * shuffle volume.
+    * measured shape. Bounded above at 4096: the replication cost is
+    * prefix-side rows × salts, and past the hot task's own frontier
+    * more fan-out only adds shuffle volume.
     */
   private[graft] def hotSalts(spark: org.apache.spark.sql.SparkSession): Int =
-    math.min(4096, math.max(32,
-      confLong(spark, "spark.graft.hot.salts",
-        spark.sparkContext.defaultParallelism.toLong).toInt))
+    math.min(4096, math.max(32, spark.sparkContext.defaultParallelism))
 
   /** Long config with a loud parse failure: a malformed setting names
     * the offending key and raw value instead of surfacing as a bare
@@ -2078,10 +2082,8 @@ object Dedup {
     // k=3 is the scale-robust optimum (the sf1 curve is the one that
     // transfers); output hashes identical at every k swept
     // (1,2,3,4,6,8,12 across both SFs). k=1 is exactly the round-12
-    // single-witness shape; `spark.graft.prefix.ext` overrides for
-    // re-profiles.
-    val prefExt = math.max(1L, confLong(sh0.sparkSession,
-      "spark.graft.prefix.ext", 3L))
+    // single-witness shape.
+    val prefExt = 3L
     val prefix = ranked.filter(
       col("rk") <= floor(col("n") / 5).cast("long") + prefExt)
     // position filter (PPJoin-style), ALSO lossless: the pair's MINIMUM

@@ -73,10 +73,9 @@ object Dimensions {
   /** Customer profile snapshot used by the dim build and the SCD2 merge:
     * one row per customer with purchase stats (transform.py:183-189).
     */
-  def customerSnapshot(spark: SparkSession, dir: String,
-                       ordersFilter: Column = lit(true)): DataFrame = {
+  def customerSnapshot(spark: SparkSession, dir: String): DataFrame = {
     val c = Tables.customer(spark, dir)
-    val o = Tables.orders(spark, dir).filter(ordersFilter)
+    val o = Tables.orders(spark, dir)
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"), col("o_orderdate"))
     c.join(o, col("c_custkey") === col("o_custkey"), "left")
       .groupBy(col("c_custkey"), col("c_name"), col("c_mktsegment"), col("c_acctbal"))

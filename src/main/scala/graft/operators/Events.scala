@@ -520,8 +520,8 @@ object Events {
     * Gini value is invariant to within-tie order (x constant inside a
     * tie). The one window rides that tiny value-census frame. The
     * p50/p99 percentile buffers the post-agg key frame in one merge
-    * task (the q26-documented bound; its approx_percentile swap is the
-    * scale path there and would be here too).
+    * task (the q26 bound: Spark's `approx_percentile` would bound it,
+    * but its sketch is not oracle-replayable).
     *
     * Determinism: all SUMS are BIGINTs (exact); every PRODUCT of those
     * sums (n·T, 1000·max·n, 2S−(n+1)T ~ n²·v) runs in double, because
@@ -579,7 +579,7 @@ object Events {
     * Scale: the lag window partitions by user_id (bounded per-user
     * history — the e01 class); the census is one map-side-combining
     * groupBy(user_id); the per-user exact median buffers only that
-    * user's gaps (group-bounded; the q26 approx_percentile swap is the
+    * user's gaps (group-bounded; Spark's `approx_percentile` is the
     * escape hatch if per-user histories ever stop being bounded).
     */
   def burstCensus(spark: SparkSession, dir: String): DataFrame =

@@ -86,11 +86,8 @@ object Facts {
     * daily; load.py:195 WRITE_APPEND for fact/mart loads): day N's run
     * appends that day's slice to the standing warehouse instead of
     * rebuilding it. Re-expressed Spark-first as DYNAMIC PARTITION
-    * OVERWRITE: the fact is partitioned by the chosen grain column —
-    * `month_key` (yyyyMM) by default, which keeps local partition
-    * counts sane at test SF, or `date_key` day grain (`grain="day"`),
-    * the 100 TB shape where each day is executor-plural — and each
-    * load rewrites ONLY the partitions its slice touches. That makes
+    * OVERWRITE: the fact is partitioned by `month_key` (yyyyMM), and
+    * each load rewrites ONLY the month partitions its slice touches. That makes
     * RE-RUNNING a slice
     * idempotent — the Airflow retry/backfill semantics WRITE_APPEND
     * alone does not have (a retried append double-counts; the
@@ -105,31 +102,23 @@ object Facts {
     * within each task.
     */
   def loadFactIncrement(spark: SparkSession, dir: String, outPath: String,
-                        fromKey: Long, toKey: Long,
-                        grain: String = "month"): Long = {
-    require(grain == "month" || grain == "day",
-      s"unknown fact partition grain '$grain' (expected month|day)")
+                        fromKey: Long, toKey: Long): Long = {
     // Dynamic partition overwrite rewrites WHOLE partitions: a slice
-    // whose bounds cut a partition would silently drop the partition's
-    // already-loaded remainder (load day 2 of a month at month grain →
-    // day 1 vanishes). So slice grain must align with partition grain:
-    // at day grain any date_key range is aligned by construction; at
-    // month grain we REQUIRE day-01 start and day-31+ end (a past-the-
-    // end day like 19990231 is a legal numeric bound — `between` on
-    // date_keys is inclusive-range arithmetic, not a calendar).
-    if (grain == "month")
-      require(fromKey % 100 <= 1 && toKey % 100 >= 31,
-        s"month-grain slice [$fromKey,$toKey] is not month-aligned " +
-          "(fromKey must end in 00/01, toKey in 31+ or an open sentinel); " +
-          "a mid-month bound would make dynamic overwrite drop the rest " +
-          "of its month — use grain=\"day\" for sub-month slices")
-    val partCol = if (grain == "month") "month_key" else "date_key"
-    val base = factSales(spark, dir)
+    // whose bounds cut a month would silently drop the month's
+    // already-loaded remainder (load day 2 of a month → day 1
+    // vanishes). So we REQUIRE a day-01 start and a day-31+ end (a
+    // past-the-end day like 19990231 is a legal numeric bound —
+    // `between` on date_keys is inclusive-range arithmetic, not a
+    // calendar).
+    require(fromKey % 100 <= 1 && toKey % 100 >= 31,
+      s"month-grain slice [$fromKey,$toKey] is not month-aligned " +
+        "(fromKey must end in 00/01, toKey in 31+ or an open sentinel); " +
+        "a mid-month bound would make dynamic overwrite drop the rest " +
+        "of its month — slice on whole months")
+    val partCol = "month_key"
+    val slice = factSales(spark, dir)
       .filter(col("date_key").between(fromKey, toKey))
-    val slice =
-      if (grain == "month")
-        base.withColumn("month_key", floor(col("date_key") / 100).cast("long"))
-      else base
+      .withColumn("month_key", floor(col("date_key") / 100).cast("long"))
     // Staged write + serialized partition swap (round 15, the r14
     // ADVICE medium item — and the PlanSweepSpec intermittent failure
     // it predicted): Spark does not support two concurrent writes into
@@ -163,10 +152,7 @@ object Facts {
     val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
     val staging = Sinks.hiddenSibling(outPath)
     val partitionPred =
-      if (grain == "month")
-        col("month_key").between(fromKey / 100, toKey / 100) &&
-          col("date_key").between(fromKey, toKey)
-      else // at day grain the date filter IS the partition filter
+      col("month_key").between(fromKey / 100, toKey / 100) &&
         col("date_key").between(fromKey, toKey)
     try {
       slice.repartition(w, col(partCol))

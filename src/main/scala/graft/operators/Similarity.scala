@@ -25,26 +25,14 @@ import graft.sources.{Sinks, Tables}
 object Similarity {
 
   // ─── d05 brute-force cosine top-k ────────────────────────────────────
-  /** Hard ceiling on the brute-force query set: the exact baseline is
-    * broadcast-queries × streamed-corpus, so its cost is queryBound ×
-    * corpus — widening the bound silently re-creates the all-pairs scan
-    * the ANN family exists to avoid (and a corpus-sized broadcast OOMs
-    * the driver first). Raise it only with an explicit maxQueryBound,
-    * which is the reviewable act.
+  /** The exact baseline over a fixed 20-vector query set: its cost is
+    * broadcast-queries × streamed-corpus, so a wide query set would
+    * re-create the all-pairs scan the ANN family exists to avoid.
     */
-  val defaultMaxQueryBound = 1024L
-
-  def embeddingKnn(spark: SparkSession, dir: String): DataFrame =
-    embeddingKnn(spark, dir, queryBound = 20L)
-
-  def embeddingKnn(spark: SparkSession, dir: String, queryBound: Long,
-                   maxQueryBound: Long = defaultMaxQueryBound): DataFrame = {
-    require(queryBound <= maxQueryBound,
-      s"d05 is the bounded exact baseline: queryBound=$queryBound exceeds " +
-        s"maxQueryBound=$maxQueryBound — use the IVF/LSH path for wide query sets")
+  def embeddingKnn(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-    val queries = e.filter(col("vec_id") < queryBound)
+    val queries = e.filter(col("vec_id") < 20L)
       .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
     val corpus = e.select(col("vec_id").as("c_id"), col("emb").as("c_emb"))
     // fused single-pass scorer (custom codegen Expression); bit-identical
@@ -183,10 +171,7 @@ object Similarity {
     * assignments the last iteration had already computed).
     */
   def ivfAssign(spark: SparkSession, dir: String): DataFrame =
-    ivfAssign(spark, dir, defaultCells)
-
-  def ivfAssign(spark: SparkSession, dir: String, k: Int): DataFrame =
-    assignmentFrom(ivfModel(corpusEmb(spark, dir), k)._2)
+    assignmentFrom(ivfModel(corpusEmb(spark, dir), defaultCells)._2)
 
   private def corpusEmb(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
@@ -1094,15 +1079,12 @@ object Similarity {
     * hierarchical coarse quantizer — backlog).
     * The pair join is an equi-join on centroid_id, the fused codegen
     * cosine scores candidates only, and the final rollup is one
-    * map-side-combining groupBy on the removed id. τ defaults to 0.40
+    * map-side-combining groupBy on the removed id. τ is 0.40
     * on this synthetic corpus (its within-cell cosine mass tops out
     * near 0.5); a real embedding corpus tunes τ at its near-dup knee
     * (the paper uses ~0.95+ on contrastive sentence embeddings).
     */
-  def semanticDedup(spark: SparkSession, dir: String): DataFrame =
-    semanticDedup(spark, dir, 0.40)
-
-  def semanticDedup(spark: SparkSession, dir: String, tau: Double): DataFrame = {
+  def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
     val m = semanticIndex(spark, dir)
       .select(col("vec_id"), col("centroid_id"), col("cos_to_centroid"))
       .join(Tables.embeddings(spark, dir)
@@ -1120,7 +1102,7 @@ object Similarity {
       .select(col("centroid_id"), col("r_id"), col("r_cos"),
         col("k_id"), col("k_cos"),
         cosR(col("k_emb"), col("r_emb")).as("pair_cos"))
-      .filter(col("pair_cos") >= tau)
+      .filter(col("pair_cos") >= semanticTau)
       .groupBy(col("r_id").as("vec_id"), col("centroid_id"),
         col("r_cos").as("cos_to_centroid"))
       .agg(
@@ -1131,6 +1113,9 @@ object Similarity {
         col("n_dup_partners"), col("max_pair_cos"),
         col("kmin.k_id").as("kept_vec"))
   }
+
+  /** d22's and d23's pair-cosine knee τ. */
+  private val semanticTau = 0.40
 
   // ─── d23 semantic decontamination ────────────────────────────────────
   /** Embedding-space benchmark decontamination — the third rung of the
@@ -1156,10 +1141,7 @@ object Similarity {
     * multi-probe curve says what nprobe buys if the screen must
     * tighten.
     */
-  def semanticContamination(spark: SparkSession, dir: String): DataFrame =
-    semanticContamination(spark, dir, 0.40)
-
-  def semanticContamination(spark: SparkSession, dir: String, tau: Double): DataFrame = {
+  def semanticContamination(spark: SparkSession, dir: String): DataFrame = {
     val m = semanticIndex(spark, dir)
       .select(col("vec_id"), col("centroid_id"))
       .join(Tables.embeddings(spark, dir)
@@ -1179,7 +1161,7 @@ object Similarity {
       .groupBy(col("bench_vec_id"), col("centroid_id"))
       .agg(
         count(lit(1)).as("n_candidates"),
-        sum(when(col("pair_cos") >= tau, 1L).otherwise(0L)).as("n_flagged"),
+        sum(when(col("pair_cos") >= semanticTau, 1L).otherwise(0L)).as("n_flagged"),
         max(col("pair_cos")).as("max_cos"))
     bench.select(col("bench_vec_id"), col("centroid_id"))
       .join(broadcast(perBench), Seq("bench_vec_id", "centroid_id"), "left")

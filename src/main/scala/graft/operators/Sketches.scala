@@ -579,9 +579,9 @@ object Sketches {
     * deterministic hash sample vs the exact pass it replaces. Completes
     * the sketch family's coverage (distinct → s01, frequency → s02,
     * overlap → s03, QUANTILES → s04): at 100 TB the exact percentile
-    * buffers every group value in its final merge task (the q26-
-    * documented OOM shape; approx_percentile is the in-engine fix but
-    * its sketch is not oracle-replayable), while the hash sample bounds
+    * buffers every group value in its final merge task (the q26 OOM
+    * shape; Spark's `approx_percentile` is the in-engine fix but its
+    * sketch is not oracle-replayable), while the hash sample bounds
     * the buffered set to 1/64 of the group scan-side — the predicate
     * pushes to the parquet scan, and the SAME rows are sampled on any
     * cluster, any partitioning, any engine.

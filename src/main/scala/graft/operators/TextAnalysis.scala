@@ -296,28 +296,15 @@ object TextAnalysis {
     *
     * Scale: scoring is the t02 narrow projection; the per-language
     * exact p25 is one tiny aggregation (values collect per language —
-    * the exact-percentile cost; at real corpus scale pass
-    * `approx = true` for the sketch-merging `approx_percentile` path,
-    * same join-back); thresholds broadcast back against the streamed scored
+    * the exact-percentile cost); thresholds broadcast back against the streamed scored
     * corpus. Score and threshold are computed from the same expressions
     * on both engines, so the >= comparison is bit-stable (percentile ==
     * quantile_cont established by q26).
     */
-  def qualityPrune(spark: SparkSession, dir: String): DataFrame =
-    qualityPrune(spark, dir, approx = false)
-
-  /** `approx = true` swaps the per-language threshold to
-    * `approx_percentile` — a fixed-size sketch that partial-aggregates
-    * map-side (plan-pinned in PlanHygieneSpec) instead of buffering the
-    * language's every score in one merge task. Same join-back shape;
-    * the exact form stays the oracle row.
-    */
-  def qualityPrune(spark: SparkSession, dir: String, approx: Boolean): DataFrame = {
+  def qualityPrune(spark: SparkSession, dir: String): DataFrame = {
     val s = scoredDocs(spark, dir).select(col("doc_id"), col("lang"), col("quality_score"))
-    val p25 =
-      if (approx) expr("approx_percentile(quality_score, 0.25, 10000)")
-      else expr("percentile(quality_score, 0.25)")
-    val thresholds = s.groupBy(col("lang")).agg(p25.as("lang_p25"))
+    val thresholds = s.groupBy(col("lang"))
+      .agg(expr("percentile(quality_score, 0.25)").as("lang_p25"))
     s.join(broadcast(thresholds), Seq("lang"))
       .select(col("doc_id"), col("lang"), col("quality_score"), col("lang_p25"),
         (col("quality_score") >= col("lang_p25")).as("is_kept"))
@@ -408,10 +395,7 @@ object TextAnalysis {
     * corpus-facing window to the bucket key).
     */
   def packSequences(spark: SparkSession, dir: String): DataFrame =
-    packSequences(spark, dir, budget = 2048L)
-
-  def packSequences(spark: SparkSession, dir: String, budget: Long): DataFrame =
-    packSequencesFrame(Tables.documents(spark, dir), budget)
+    packSequencesFrame(Tables.documents(spark, dir), 2048L)
 
   /** Frame-level core (the property spec replays generated corpora). */
   private[graft] def packSequencesFrame(docs: DataFrame, budget: Long): DataFrame = {
@@ -554,24 +538,12 @@ object TextAnalysis {
     * `percentile` (bit-matches DuckDB's quantile_cont, established by
     * q26).
     */
-  def corpusStats(spark: SparkSession, dir: String): DataFrame =
-    corpusStats(spark, dir, approx = false)
-
-  /** `approx = true` is the 100×-scale path for the per-language token
-    * percentiles (q26 rationale): sketch-merging `approx_percentile`
-    * partial-aggregates; exact `percentile` stays the oracle row.
-    */
-  def corpusStats(spark: SparkSession, dir: String, approx: Boolean): DataFrame = {
+  def corpusStats(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
       .select(col("lang"), col("n_chars"),
         size(regexp_extract_all(col("text"), lit("\\S+"), lit(0)))
           .cast("long").as("n_tokens"))
-    // cast keeps the exact path's DOUBLE schema: approx_percentile on a
-    // LONG column returns LONG (a dataset element), which would silently
-    // flip published schemas when a caller opts into the scale path
-    def pct(p: Double) =
-      if (approx) expr(s"approx_percentile(n_tokens, $p, 10000)").cast("double")
-      else expr(s"percentile(n_tokens, $p)")
+    def pct(p: Double) = expr(s"percentile(n_tokens, $p)")
     d.groupBy(col("lang")).agg(
       count(lit(1)).as("n_docs"),
       sum(col("n_tokens")).as("total_tokens"),
@@ -586,7 +558,7 @@ object TextAnalysis {
     * headers/footers/nav text repeated across pages (exact-substring
     * dedup at segment grain, the Lee-et-al-style pass, re-expressed
     * for a distributed engine at 8-token window grain): an 8-gram is
-    * BOILERPLATE when it appears in more than `minDocs` (10) distinct
+    * BOILERPLATE when it appears in more than 10 distinct
     * docs, and each doc reports how much of it is made of flagged
     * windows. Complements t06 (within-doc repetition) and d13
     * (benchmark-crossing grams): this is the corpus-internal
@@ -594,21 +566,20 @@ object TextAnalysis {
     *
     * Scale: one explode → one map-side-combining census groupBy; the
     * FLAGGED subset (high-DF grams — small by construction at any
-    * corpus size: a gram in >minDocs docs is rare precisely because
+    * corpus size: a gram in >10 docs is rare precisely because
     * most text is unique) broadcast-joins back against the exploded
     * grams, so the corpus-sized side is never shuffled twice.
     * Determinism: integer counts; one per-row division at the end.
     */
-  def boilerplateCensus(spark: SparkSession, dir: String,
-                        minDocs: Long = 10L): DataFrame =
-    boilerplateFrame(Tables.documents(spark, dir), minDocs)
+  def boilerplateCensus(spark: SparkSession, dir: String): DataFrame =
+    boilerplateFrame(Tables.documents(spark, dir))
 
   /** Frame-level census — the spec drives synthetic boilerplate-bearing
     * docs through it (the synthetic corpus's random word streams make
     * 8-grams unique, so its census is all-zero: a clean report, which
     * the oracle still verifies per-doc via the window counts).
     */
-  def boilerplateFrame(docs: DataFrame, minDocs: Long = 10L): DataFrame = {
+  def boilerplateFrame(docs: DataFrame): DataFrame = {
     val toks = docs
       .select(col("doc_id"),
         regexp_extract_all(col("text"), lit("\\S+"), lit(0)).as("t"))
@@ -620,7 +591,7 @@ object TextAnalysis {
           .as("gram"))
     val flagged = grams.groupBy(col("gram"))
       .agg(countDistinct(col("doc_id")).as("df"))
-      .filter(col("df") > minDocs)
+      .filter(col("df") > 10L)
     val perDoc = grams.join(broadcast(flagged), Seq("gram"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
@@ -743,53 +714,68 @@ object TextAnalysis {
     * any real corpus (100 TB of text is ~10¹³ tokens).
     */
   def dsirWeights(spark: SparkSession, dir: String): DataFrame =
-    dsirScore(dsirFeats(Tables.documents(spark, dir)),
-      ensureDsirModel(spark, dir))
+    dsirWeightsOf(spark, dir, Nil)
 
-  /** Frame-level core of [[dsirWeights]] — separated so the formula is
-    * assertable exactly on a hand-computable corpus. Artifact-free:
-    * the model derives inline from the same feats (the shape the
-    * dir-based query had before the published-model path landed; the
-    * model is deterministic, so both forms emit identical rows).
+  /** One DSIR, keyed by its target grouping: `Nil` scores every
+    * document against one global target (t16), `Seq("source")` against
+    * its own source's target (t18). The keys ride every grouping of the
+    * feats, the model and the scoring join; nothing else differs.
     */
-  private[graft] def dsirWeightsFrame(docs: DataFrame): DataFrame = {
-    val feats = dsirFeats(docs)
-    dsirScore(feats, dsirModelFrame(feats))
+  private def dsirWeightsOf(spark: SparkSession, dir: String,
+                            keys: Seq[String]): DataFrame =
+    dsirScore(dsirFeats(Tables.documents(spark, dir), keys),
+      ensureDsirModel(spark, dir, keys), keys)
+
+  /** Frame-level core of [[dsirWeights]] and [[dsirWeightsPerSource]] —
+    * separated so the formula is assertable exactly on a
+    * hand-computable corpus. Artifact-free: the model derives inline
+    * from the same feats (the shape the dir-based query had before the
+    * published-model path landed; the model is deterministic, so both
+    * forms emit identical rows).
+    */
+  private[graft] def dsirWeightsFrame(docs: DataFrame, keys: Seq[String]): DataFrame = {
+    val feats = dsirFeats(docs, keys)
+    dsirScore(feats, dsirModelFrame(feats, keys), keys)
   }
 
-  /** Hashed-bigram doc features (doc_id, is_target, bucket, c) — ONE
-    * corpus explosion; both the census (model build) and the scoring
-    * pass read this shape.
+  /** Hashed-bigram doc features (doc_id, keys…, is_target, bucket, c) —
+    * ONE corpus explosion; both the census (model build) and the
+    * scoring pass read this shape.
     */
-  private def dsirFeats(docs: DataFrame): DataFrame = {
+  private def dsirFeats(docs: DataFrame, keys: Seq[String]): DataFrame = {
     val B = 1024L
+    val id = col("doc_id") +: keys.map(col)
     docs
-      .select(col("doc_id"), (col("lang") === "en").as("is_target"),
-        regexp_extract_all(col("text"), lit("\\S+"), lit(0)).as("t"))
+      .select(id ++ Seq((col("lang") === "en").as("is_target"),
+        regexp_extract_all(col("text"), lit("\\S+"), lit(0)).as("t")): _*)
       .filter(size(col("t")) >= 2)
-      .select(col("doc_id"), col("is_target"), col("t"),
-        explode(sequence(lit(1), size(col("t")) - 1)).as("i"))
-      .select(col("doc_id"), col("is_target"),
+      .select(id ++ Seq(col("is_target"), col("t"),
+        explode(sequence(lit(1), size(col("t")) - 1)).as("i")): _*)
+      .select(id ++ Seq(col("is_target"),
         concat_ws(" ", element_at(col("t"), col("i")),
-          element_at(col("t"), col("i") + 1)).as("ng"))
+          element_at(col("t"), col("i") + 1)).as("ng")): _*)
       .withColumn("bucket",
         conv(substring(md5(col("ng")), 1, 4), 16, 10).cast("long") % B)
-      .groupBy(col("doc_id"), col("is_target"), col("bucket"))
+      .groupBy(id ++ Seq(col("is_target"), col("bucket")): _*)
       .agg(count(lit(1)).as("c"))
   }
 
-  /** The DSIR MODEL — 1024 (bucket, r6) fixed-point ratios from a feats
-    * frame. This 8 KB frame is the whole model, which is why the
-    * dir-based queries publish it once and re-read it (see
-    * [[ensureDsirModel]]).
+  /** The DSIR MODEL — 1024 (keys…, bucket, r6) fixed-point ratios per
+    * target group from a feats frame. This 8 KB-per-group frame is the
+    * whole model, which is why the dir-based queries publish it once
+    * and re-read it (see [[ensureDsirModel]]).
     */
-  private[graft] def dsirModelFrame(feats: DataFrame): DataFrame = {
+  private def dsirModelFrame(feats: DataFrame, keys: Seq[String]): DataFrame = {
     val B = 1024L
-    val census = feats.groupBy(col("bucket"))
+    val census = feats.groupBy(keys.map(col) :+ col("bucket"): _*)
       .agg(sum(col("c")).as("r_b"),
         sum(when(col("is_target"), col("c")).otherwise(0L)).as("t_b"))
-    val totals = census.agg(sum(col("r_b")).as("rr"), sum(col("t_b")).as("tt"))
-    census.crossJoin(broadcast(totals))
+    val totals = census.groupBy(keys.map(col): _*)
+      .agg(sum(col("r_b")).as("rr"), sum(col("t_b")).as("tt"))
+    // the global model's totals are one row: a broadcast nested-loop
+    // cross join, never a keyless equi-join
+    (if (keys.isEmpty) census.crossJoin(broadcast(totals))
+     else census.join(broadcast(totals), keys))
       .withColumn("num",
         (col("t_b") + 1L).cast("decimal(38,0)") * (col("rr") + B).cast("decimal(38,0)"))
       .withColumn("den",
@@ -797,19 +783,23 @@ object TextAnalysis {
       // integral div of the DECIMAL(38,0) pair returns BIGINT — r6 is a
       // 6-dp ratio (≤ ~10⁹ in any real mix), far inside long range
       .withColumn("r6", expr("(num * 2000000 + den) div (2 * den)"))
-      .select(col("bucket"), col("r6"))
+      .select(keys.map(col) ++ Seq(col("bucket"), col("r6")): _*)
   }
 
   /** Scoring pass: one broadcast join of the model against the feats. */
-  private def dsirScore(feats: DataFrame, model: DataFrame): DataFrame =
-    feats.join(broadcast(model), "bucket")
-      .groupBy(col("doc_id"))
+  private def dsirScore(feats: DataFrame, model: DataFrame,
+                        keys: Seq[String]): DataFrame = {
+    val id = col("doc_id") +: keys.map(col)
+    feats.join(broadcast(model), keys :+ "bucket")
+      .groupBy(id: _*)
       .agg(sum(col("c") * col("r6")).as("wfp"), sum(col("c")).as("n_bigrams"))
-      .select(col("doc_id"), col("n_bigrams"),
-        (col("wfp").cast("double") / 1000000.0d).as("weight"))
+      .select(id ++ Seq(col("n_bigrams"),
+        (col("wfp").cast("double") / 1000000.0d).as("weight")): _*)
+  }
 
   /** Build-if-missing published DSIR model (the q32 contract, claimed
-    * once through [[Sinks.ensure]] at the canonical key): the
+    * once through [[Sinks.ensure]] at the canonical key: `dsir_model`
+    * for the global target, `dsir_model_ps` per source): the
     * census pass — the SECOND corpus explosion every t16/t17 run used
     * to pay — runs once per corpus and lands in the warehouse; every
     * weighting/selection run after it is one explosion + a broadcast
@@ -817,10 +807,13 @@ object TextAnalysis {
     * publish once" note made real (and what the t17/t19 docs mean by
     * "production reads the published weights table").
     */
-  private def ensureDsirModel(spark: SparkSession, dir: String): DataFrame =
-    Sinks.ensure(spark, Sinks.artifactPath(spark, "dsir_model", dir)) {
-      dsirModelFrame(dsirFeats(Tables.documents(spark, dir)))
+  private def ensureDsirModel(spark: SparkSession, dir: String,
+                              keys: Seq[String]): DataFrame = {
+    val name = if (keys.isEmpty) "dsir_model" else "dsir_model_ps"
+    Sinks.ensure(spark, Sinks.artifactPath(spark, name, dir)) {
+      dsirModelFrame(dsirFeats(Tables.documents(spark, dir), keys), keys)
     }
+  }
 
   // ─── t17 DSIR-weighted budget selection ──────────────────────────────
   /** The selection step that closes the DSIR loop: order the corpus by
@@ -851,56 +844,8 @@ object TextAnalysis {
     * textually identical to the oracle's global running sum anyway, so
     * the equivalence argument never depends on the upstream filter.
     */
-  def dsirSelect(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    // published-model weighting (ensureDsirModel): the selection run
-    // pays one scoring explosion, never the census
-    val w = dsirWeights(spark, dir).select(col("doc_id"), col("weight"))
-    val toks = docs.select(col("doc_id"),
-      size(regexp_extract_all(col("text"), lit("\\S+"), lit(0)))
-        .cast("long").as("n_tokens"))
-    // round(weight·10⁶) recovers t16's exact fixed-point integer: the
-    // double is within 1e-10 of it, far inside the .5 rounding margin
-    // d feeds THREE consumers (the bucket-meta census, the clear branch,
-    // the boundary branch) — unpersisted, each re-ran the scoring
-    // explosion (bigram explode + md5 per bigram) upstream of `w`.
-    // Doc-sized (5 flat cols); released by the harness's per-query
-    // clearCache. Round-14 A/B at sf0.1: 2.06 → 1.65 s solo-warm
-    // (t19's same-shape persist read 1.71 → 1.42 s).
-    // Round-15 adjudication (the r14 verdict's watch item): calm-window
-    // interleaved A/B, 5-6 reps/side ×2 rounds — persist 1.61/1.46,
-    // no-persist 1.38/1.71 (t17 warm s; t19 1.48/1.47 vs 1.32/1.63) —
-    // run ORDER dominates, the delta is inside ±10% both directions,
-    // and the persisted rows read at-or-under their r13 driver
-    // baselines (1.59/1.81). KEPT: locally a wash, and at corpus scale
-    // three scoring explosions → one is the dominant term.
-    val d = w.join(toks, "doc_id")
-      .withColumn("wfp", round(col("weight") * 1000000).cast("long"))
-      .withColumn("vb", expr("wfp div 8192"))
-      .persist()
-    val wcum = Window.orderBy(col("vb").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val meta = d.groupBy(col("vb")).agg(sum(col("n_tokens")).as("btok"))
-      .withColumn("cum_end", sum(col("btok")).over(wcum))
-      .withColumn("cum_start", col("cum_end") - col("btok"))
-      .withColumn("budget",
-        shiftright(sum(col("btok")).over(
-          Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)), 1))
-      .select(col("vb"), col("cum_start"), col("cum_end"), col("budget"))
-    val classified = d.join(broadcast(meta), Seq("vb"))
-    val outCols = Seq(col("doc_id"), col("n_tokens"), col("weight"))
-    val clear = classified
-      .filter(col("cum_end") <= col("budget") || col("cum_start") > col("budget"))
-      .select(outCols :+ (col("cum_end") <= col("budget")).as("is_selected"): _*)
-    val wb = Window.partitionBy(col("vb"))
-      .orderBy(col("wfp").desc, col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val boundary = classified
-      .filter(col("cum_start") <= col("budget") && col("budget") < col("cum_end"))
-      .withColumn("run", col("cum_start") + sum(col("n_tokens")).over(wb))
-      .select(outCols :+ (col("run") <= col("budget")).as("is_selected"): _*)
-    clear.union(boundary)
-  }
+  def dsirSelect(spark: SparkSession, dir: String): DataFrame =
+    dsirSelectOf(spark, dir, Nil)
 
   // ─── t18 per-source DSIR targets ─────────────────────────────────────
   /** Multi-target DSIR (the production variant of Xie et al.'s recipe):
@@ -921,63 +866,7 @@ object TextAnalysis {
     * scoring join → bounded per-doc collapse.
     */
   def dsirWeightsPerSource(spark: SparkSession, dir: String): DataFrame =
-    dsirScorePs(dsirFeatsPs(Tables.documents(spark, dir)),
-      ensureDsirModelPs(spark, dir))
-
-  /** Frame-level core of [[dsirWeightsPerSource]] (spec-replayable,
-    * artifact-free — see [[dsirWeightsFrame]]).
-    */
-  private[graft] def dsirPerSourceFrame(docs: DataFrame): DataFrame = {
-    val feats = dsirFeatsPs(docs)
-    dsirScorePs(feats, dsirModelPsFrame(feats))
-  }
-
-  private def dsirFeatsPs(docs: DataFrame): DataFrame = {
-    val B = 1024L
-    docs
-      .select(col("doc_id"), col("source"), (col("lang") === "en").as("is_target"),
-        regexp_extract_all(col("text"), lit("\\S+"), lit(0)).as("t"))
-      .filter(size(col("t")) >= 2)
-      .select(col("doc_id"), col("source"), col("is_target"), col("t"),
-        explode(sequence(lit(1), size(col("t")) - 1)).as("i"))
-      .select(col("doc_id"), col("source"), col("is_target"),
-        concat_ws(" ", element_at(col("t"), col("i")),
-          element_at(col("t"), col("i") + 1)).as("ng"))
-      .withColumn("bucket",
-        conv(substring(md5(col("ng")), 1, 4), 16, 10).cast("long") % B)
-      .groupBy(col("doc_id"), col("source"), col("is_target"), col("bucket"))
-      .agg(count(lit(1)).as("c"))
-  }
-
-  /** Per-source model (source, bucket, r6) — #sources × 1024 rows. */
-  private[graft] def dsirModelPsFrame(feats: DataFrame): DataFrame = {
-    val B = 1024L
-    val census = feats.groupBy(col("source"), col("bucket"))
-      .agg(sum(col("c")).as("r_b"),
-        sum(when(col("is_target"), col("c")).otherwise(0L)).as("t_b"))
-    val totals = census.groupBy(col("source"))
-      .agg(sum(col("r_b")).as("rr"), sum(col("t_b")).as("tt"))
-    census.join(broadcast(totals), "source")
-      .withColumn("num",
-        (col("t_b") + 1L).cast("decimal(38,0)") * (col("rr") + B).cast("decimal(38,0)"))
-      .withColumn("den",
-        (col("r_b") + 1L).cast("decimal(38,0)") * (col("tt") + B).cast("decimal(38,0)"))
-      .withColumn("r6", expr("(num * 2000000 + den) div (2 * den)"))
-      .select(col("source"), col("bucket"), col("r6"))
-  }
-
-  private def dsirScorePs(feats: DataFrame, model: DataFrame): DataFrame =
-    feats.join(broadcast(model), Seq("source", "bucket"))
-      .groupBy(col("doc_id"), col("source"))
-      .agg(sum(col("c") * col("r6")).as("wfp"), sum(col("c")).as("n_bigrams"))
-      .select(col("doc_id"), col("source"), col("n_bigrams"),
-        (col("wfp").cast("double") / 1000000.0d).as("weight"))
-
-  /** Per-source twin of [[ensureDsirModel]]. */
-  private def ensureDsirModelPs(spark: SparkSession, dir: String): DataFrame =
-    Sinks.ensure(spark, Sinks.artifactPath(spark, "dsir_model_ps", dir)) {
-      dsirModelPsFrame(dsirFeatsPs(Tables.documents(spark, dir)))
-    }
+    dsirWeightsOf(spark, dir, Seq("source"))
 
   // ─── t19 per-source budget selection ─────────────────────────────────
   /** The per-source selection step closing the multi-target loop
@@ -1000,35 +889,58 @@ object TextAnalysis {
     * frame; see the t17 note), kept so the running-sum convention
     * matches the oracle's per-source running sum textually.
     */
-  def dsirSelectPerSource(spark: SparkSession, dir: String): DataFrame = {
+  def dsirSelectPerSource(spark: SparkSession, dir: String): DataFrame =
+    dsirSelectOf(spark, dir, Seq("source"))
+
+  /** The t17/t19 budget selection, keyed like [[dsirWeightsOf]]: each
+    * key group fills its own budget (half its scored tokens) in its own
+    * weight order; with no keys the whole corpus is one group.
+    */
+  private def dsirSelectOf(spark: SparkSession, dir: String,
+                           keys: Seq[String]): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    // published-model weighting (ensureDsirModelPs): one scoring
-    // explosion per selection run, never the census
-    val w = dsirWeightsPerSource(spark, dir)
-      .select(col("doc_id"), col("source"), col("weight"))
+    val kc = keys.map(col)
+    // published-model weighting (ensureDsirModel): the selection run
+    // pays one scoring explosion, never the census
+    val w = dsirWeightsOf(spark, dir, keys)
+      .select(col("doc_id") +: kc :+ col("weight"): _*)
     val toks = docs.select(col("doc_id"),
       size(regexp_extract_all(col("text"), lit("\\S+"), lit(0)))
         .cast("long").as("n_tokens"))
-    // three consumers, same persist rationale as t17
+    // round(weight·10⁶) recovers t16's exact fixed-point integer: the
+    // double is within 1e-10 of it, far inside the .5 rounding margin
+    // d feeds THREE consumers (the bucket-meta census, the clear branch,
+    // the boundary branch) — unpersisted, each re-ran the scoring
+    // explosion (bigram explode + md5 per bigram) upstream of `w`.
+    // Doc-sized (5 flat cols); released by the harness's per-query
+    // clearCache. Round-14 A/B at sf0.1: 2.06 → 1.65 s solo-warm
+    // (t19's same-shape persist read 1.71 → 1.42 s).
+    // Round-15 adjudication (the r14 verdict's watch item): calm-window
+    // interleaved A/B, 5-6 reps/side ×2 rounds — persist 1.61/1.46,
+    // no-persist 1.38/1.71 (t17 warm s; t19 1.48/1.47 vs 1.32/1.63) —
+    // run ORDER dominates, the delta is inside ±10% both directions,
+    // and the persisted rows read at-or-under their r13 driver
+    // baselines (1.59/1.81). KEPT: locally a wash, and at corpus scale
+    // three scoring explosions → one is the dominant term.
     val d = w.join(toks, "doc_id")
       .withColumn("wfp", round(col("weight") * 1000000).cast("long"))
       .withColumn("vb", expr("wfp div 8192"))
       .persist()
-    val wcum = Window.partitionBy(col("source")).orderBy(col("vb").desc)
+    val wcum = Window.partitionBy(kc: _*).orderBy(col("vb").desc)
       .rowsBetween(Window.unboundedPreceding, 0)
-    val meta = d.groupBy(col("source"), col("vb")).agg(sum(col("n_tokens")).as("btok"))
+    val meta = d.groupBy(kc :+ col("vb"): _*).agg(sum(col("n_tokens")).as("btok"))
       .withColumn("cum_end", sum(col("btok")).over(wcum))
       .withColumn("cum_start", col("cum_end") - col("btok"))
       .withColumn("budget",
-        shiftright(sum(col("btok")).over(Window.partitionBy(col("source"))
+        shiftright(sum(col("btok")).over(Window.partitionBy(kc: _*)
           .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)), 1))
-      .select(col("source"), col("vb"), col("cum_start"), col("cum_end"), col("budget"))
-    val classified = d.join(broadcast(meta), Seq("source", "vb"))
-    val outCols = Seq(col("doc_id"), col("source"), col("n_tokens"), col("weight"))
+      .select(kc ++ Seq(col("vb"), col("cum_start"), col("cum_end"), col("budget")): _*)
+    val classified = d.join(broadcast(meta), keys :+ "vb")
+    val outCols = (col("doc_id") +: kc) ++ Seq(col("n_tokens"), col("weight"))
     val clear = classified
       .filter(col("cum_end") <= col("budget") || col("cum_start") > col("budget"))
       .select(outCols :+ (col("cum_end") <= col("budget")).as("is_selected"): _*)
-    val wb = Window.partitionBy(col("source"), col("vb"))
+    val wb = Window.partitionBy(kc :+ col("vb"): _*)
       .orderBy(col("wfp").desc, col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val boundary = classified

@@ -91,10 +91,9 @@ object Fetch {
     * a hung endpoint cannot wedge the driver past its budget.
     */
   def fetchWithRetries(fetcher: Fetcher, url: String,
-                       retries: Int = 2, timeoutMs: Long = 30000,
-                       retryDelayMs: Long = 0L): String =
+                       retries: Int = 2, timeoutMs: Long = 30000): String =
     try {
-      graft.Pipeline.withRetries(retries, s"fetch $url", retryDelayMs) {
+      graft.Pipeline.withRetries(retries, s"fetch $url") {
         val exec = Executors.newSingleThreadExecutor { r =>
           val t = new Thread(r, "graft-fetch"); t.setDaemon(true); t
         }

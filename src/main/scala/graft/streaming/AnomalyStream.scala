@@ -40,12 +40,8 @@ object AnomalyStream {
                         n_events: Long, mean7: Double, std7: Double,
                         z_score: Option[Double], is_anomaly: Boolean)
 
-  /** Per-key state: ISO date strings keep the encoder trivial.
-    * `silentDays` counts CONSECUTIVE zero-filled finalized days — the
-    * run length the optional max-silent-days horizon measures.
-    */
-  case class AnomState(lastDate: String, ring: Seq[Long],
-                       pending: Map[String, Long], silentDays: Int = 0)
+  /** Per-key state: ISO date strings keep the encoder trivial. */
+  case class AnomState(lastDate: String, ring: Seq[Long], pending: Map[String, Long])
 
   private def utcDay(ts: java.sql.Timestamp): LocalDate =
     ts.toInstant.atZone(ZoneOffset.UTC).toLocalDate
@@ -70,11 +66,10 @@ object AnomalyStream {
         if (varNum > 0) math.abs(z.get) > 2.0 else n.toDouble != mean7
       out += AnomalyRow(et, java.sql.Date.valueOf(day), n, mean7, std7, z, isAnomaly)
     }
-    AnomState(day.toString, (st.ring :+ n).takeRight(7), st.pending,
-      if (n == 0L) st.silentDays + 1 else 0)
+    AnomState(day.toString, (st.ring :+ n).takeRight(7), st.pending)
   }
 
-  private def onGroup(maxSilentDays: Int)(
+  private def onGroup(
       et: String, it: Iterator[(String, java.sql.Timestamp)],
       state: GroupState[AnomState]): Iterator[AnomalyRow] = {
     val wm = state.getCurrentWatermarkMs()
@@ -97,22 +92,11 @@ object AnomalyStream {
       val d = LocalDate.parse(ds)
       if (st.lastDate.nonEmpty) {
         var gap = LocalDate.parse(st.lastDate).plusDays(1)
-        // capped like the trailing fill below: a silent run never emits
-        // past the cap no matter which loop walks it
-        while (gap.isBefore(d) &&
-               (maxSilentDays <= 0 || st.silentDays < maxSilentDays)) {
+        while (gap.isBefore(d)) {
           st = push(et, st, gap, 0L, out)
           gap = gap.plusDays(1)
         }
       }
-      // the silent run reached the cap before this day finalized: REBORN
-      // with fresh calendar/ring, exactly what drop-then-recreate would
-      // have produced had the day's rows arrived in a later trigger — so
-      // the emitted-day set does not depend on how triggers split the
-      // input (previously a resuming key retro-emitted every gap zero
-      // day beyond the cap)
-      if (maxSilentDays > 0 && st.silentDays >= maxSilentDays)
-        st = AnomState("", Nil, st.pending)
       st = push(et, st, d, st.pending(ds), out)
       st = st.copy(pending = st.pending - ds)
     }
@@ -126,32 +110,20 @@ object AnomalyStream {
       val frontier = java.time.Instant.ofEpochMilli(wm)
         .atZone(ZoneOffset.UTC).toLocalDate.minusDays(1)
       var g = LocalDate.parse(st.lastDate).plusDays(1)
-      while (!g.isAfter(frontier) &&
-             (maxSilentDays <= 0 || st.silentDays < maxSilentDays)) {
+      while (!g.isAfter(frontier)) {
         st = push(et, st, g, 0L, out)
         g = g.plusDays(1)
       }
     }
-    // max-silent-days horizon: a key whose trailing zero-fill run has
-    // reached the cap (and has nothing pending) is DROPPED — state
-    // removed, no timeout armed, emission stops until (if ever) new
-    // data recreates the key from scratch. With the default cap of 0
-    // the key alerts forever, which is correct for the bounded
-    // event_type domain but unbounded state for an open key domain.
-    if (maxSilentDays > 0 && st.pending.isEmpty &&
-        st.silentDays >= maxSilentDays) {
-      state.remove()
-    } else {
-      state.update(st)
-      // arm the next flush: the earliest unfinalized pending day, or the
-      // calendar day after the last finalized one — quiet keys advance on
-      // no-data batches as the global watermark moves
-      val nextEnd = (st.pending.keys.map(d => dayEndMs(LocalDate.parse(d))) ++
-        (if (st.lastDate.nonEmpty)
-          Seq(dayEndMs(LocalDate.parse(st.lastDate).plusDays(1))) else Nil))
-        .filter(_ > wm)
-      if (nextEnd.nonEmpty) state.setTimeoutTimestamp(nextEnd.min)
-    }
+    state.update(st)
+    // arm the next flush: the earliest unfinalized pending day, or the
+    // calendar day after the last finalized one — quiet keys advance on
+    // no-data batches as the global watermark moves
+    val nextEnd = (st.pending.keys.map(d => dayEndMs(LocalDate.parse(d))) ++
+      (if (st.lastDate.nonEmpty)
+        Seq(dayEndMs(LocalDate.parse(st.lastDate).plusDays(1))) else Nil))
+      .filter(_ > wm)
+    if (nextEnd.nonEmpty) state.setTimeoutTimestamp(nextEnd.min)
     out.result().iterator
   }
 
@@ -162,21 +134,17 @@ object AnomalyStream {
     * twin, differentially tested against it.
     *
     * STATE BOUND: per-key state is O(1) (a 7-slot ring + in-horizon
-    * pending days), but the KEY SET only ever grows — fine for the
-    * bounded event_type domain this feed serves; for an unbounded key
-    * domain set `maxSilentDays` > 0: a key whose consecutive zero-filled
-    * run reaches the cap stops emitting and its state is removed (the
-    * first `maxSilentDays` outage days still alert, which is the signal
-    * the feed exists for — the cap only silences a key that stayed dead).
+    * pending days), but the KEY SET only ever grows, and a silent key
+    * keeps alerting forever — right for the bounded event_type domain
+    * this feed serves, not for an unbounded key domain.
     */
-  def anomalies(events: DataFrame, horizon: String = "1 day",
-                maxSilentDays: Int = 0): Dataset[AnomalyRow] = {
+  def anomalies(events: DataFrame, horizon: String = "1 day"): Dataset[AnomalyRow] = {
     import events.sparkSession.implicits._
     events
       .withWatermark("ts", horizon)
       .select($"event_type", $"ts").as[(String, java.sql.Timestamp)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[AnomState, AnomalyRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(onGroup(maxSilentDays))
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(onGroup)
   }
 }

@@ -49,12 +49,11 @@ object DocStream {
     * BEFORE the stateful dedup, so junk never occupies dedup state.
     * Filter-then-dedup order matters in a stream: state is the scarce
     * resource, and a narrow codegen'd filter is free. The thresholds
-    * default to the batch operators' values so the stream front door
-    * enforces the same policy the batch passes report on.
+    * (20 chars, alphabetic ratio 0.5, duplicate-word fraction 0.85) are
+    * the batch operators' values, so the stream front door enforces the
+    * same policy the batch passes report on.
     */
-  def gatedIngest(docs: DataFrame, horizon: String = "1 hour",
-                  minChars: Int = 20, minAlphaRatio: Double = 0.5,
-                  maxDupWordFrac: Double = 0.85): DataFrame = {
+  def gatedIngest(docs: DataFrame, horizon: String = "1 hour"): DataFrame = {
     val alpha = length(regexp_replace(col("text"), lit("[^\\p{L}]"), lit("")))
     // tokenize EXACTLY as batch t06 does (regexp \S+, not split on \s+,
     // which emits an empty token under leading whitespace and skews the
@@ -64,9 +63,9 @@ object DocStream {
     val dupWordFrac =
       lit(1.0) - size(array_distinct(w)).cast("double") / size(w)
     dedupIngest(
-      docs.filter(length(col("text")) >= minChars &&
-        alpha.cast("double") / length(col("text")) >= minAlphaRatio &&
-        dupWordFrac <= maxDupWordFrac),
+      docs.filter(length(col("text")) >= 20 &&
+        alpha.cast("double") / length(col("text")) >= 0.5 &&
+        dupWordFrac <= 0.85),
       horizon)
   }
 }

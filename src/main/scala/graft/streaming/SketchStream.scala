@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.operators.Sketches
 
 /** Streaming twin of the sketch family: HLL distinct-count registers
-  * (s01/s05) and the count-min grid (s02) maintained continuously over
-  * a document stream.
+  * (s01/s05) maintained continuously over a document stream. The
+  * count-min grid (s02) needs no twin: `Sketches.cmsCells` runs on a
+  * stream as is.
   *
   * The interesting property is the STATE BOUND: a streaming
   * aggregation's state normally grows with the key domain (why
@@ -37,15 +38,4 @@ object SketchStream {
     Sketches.hllRankStream(Sketches.tokenHashes(docs), "source")
       .groupBy(col("source"), col("bucket"))
       .agg(max(col("rank")).as("reg"))
-
-  /** Continuous count-min grid (s02's state): per (r, bucket) cell
-    * counts over every token occurrence that ever arrived. Same state
-    * argument as the registers — the aggregation key space is the
-    * 4×1024 grid, so the unwatermarked state is constant-size by
-    * construction, and grids from independent streams merge by
-    * cell-wise SUM (the s02 mergeability contract). Run in
-    * Update/Complete mode; the served heavy-hitter estimates are s02's
-    * bounded probe join over these cells.
-    */
-  def cmsCells(docs: DataFrame): DataFrame = Sketches.cmsCells(docs)
 }

@@ -593,7 +593,7 @@ object StreamQueries {
     "stream_facts" -> graft.operators.Facts.factStreamOracleSql,
     "stream_dedup" ->
       // the gate (length / alpha-ratio / dup-word-frac floors at
-      // DocStream.gatedIngest's defaults) then DISTINCT at fingerprint
+      // DocStream.gatedIngest's thresholds) then DISTINCT at fingerprint
       // grain — the batch twin of gate-then-keep-first
       """WITH g AS (
         |  SELECT text FROM documents

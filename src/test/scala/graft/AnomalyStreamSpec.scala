@@ -110,33 +110,4 @@ class AnomalyStreamSpec extends AnyFunSuite {
       }
     }
   }
-
-  test("maxSilentDays drops a permanently-silent key after the cap") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val src = MemoryStream[Event]
-    val chunks = events.groupBy(_.ts.getTime / (6L * 86400000)).toSeq.sortBy(_._1)
-    chunks.foreach { case (_, es) => src.addData(es: _*) }
-    val out = EventsStream.runToMemory(
-      AnomalyStream.anomalies(src.toDF(), maxSilentDays = 2).toDF(),
-      "anom_stream_capped", OutputMode.Append())
-      .collect()
-
-    // pay goes permanently silent after 03-10: exactly 2 zero-filled
-    // outage days emit (the alerting window), then the key is dropped
-    val payZeroDays = out.filter(r => r.getAs[String]("event_type") == "pay" &&
-        r.getAs[Long]("n_events") == 0L)
-      .map(_.getAs[java.sql.Date]("activity_date").toString).sorted
-    assert(payZeroDays.toSeq == Seq("2024-03-11", "2024-03-12"),
-      s"capped silent key emitted $payZeroDays")
-
-    // click's one-day outage (03-11, resumes 03-12) sits under the cap:
-    // its outage day still emits and resumption resets the run length,
-    // so later days are unaffected by the horizon
-    val clickDays = out.filter(_.getAs[String]("event_type") == "click")
-      .map(_.getAs[java.sql.Date]("activity_date").toString).sorted
-    assert(clickDays.contains("2024-03-11"), "under-cap outage day must emit")
-    assert(clickDays.exists(_ > "2024-03-12"),
-      "a key that resumed must keep emitting past its outage")
-  }
 }

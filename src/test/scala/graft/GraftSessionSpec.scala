@@ -86,7 +86,6 @@ class GraftSessionSpec extends AnyFunSuite {
           new String(java.nio.file.Files.readAllBytes(p))).map(_.group(1)))
         .toSet
       finally stream.close()
-    assert(keys == Set("hot.df", "hot.salts", "prefix.ext", "q59.hint.bytes",
-      "scratch.budget.bytes"))
+    assert(keys == Set("hot.df", "q59.hint.bytes", "scratch.budget.bytes"))
   }
 }

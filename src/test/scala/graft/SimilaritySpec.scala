@@ -192,20 +192,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got.size == assign.count(_._1 % 10 == 0), "one row per benchmark vector")
   }
 
-  test("d05 guard: a query bound past the ceiling refuses to plan") {
-    // the exact baseline is broadcast-queries × streamed-corpus; a wide
-    // bound silently becomes the all-pairs scan ANN exists to avoid
-    val e = intercept[IllegalArgumentException] {
-      Similarity.embeddingKnn(spark, TestSpark.sf,
-        queryBound = Similarity.defaultMaxQueryBound + 1)
-    }
-    assert(e.getMessage.contains("queryBound"))
-    // an explicitly raised ceiling is the reviewable opt-in
-    val df = Similarity.embeddingKnn(spark, TestSpark.sf,
-      queryBound = 25L, maxQueryBound = 32L)
-    assert(df.columns.contains("rank"))
-  }
-
   test("ivf k-means: every vector lands in exactly one of ≤16 cells") {
     val df = Similarity.ivfAssign(spark, TestSpark.sf)
     val n = Tables.embeddings(spark, TestSpark.sf).count()

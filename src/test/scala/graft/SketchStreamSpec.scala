@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{EventsStream, SketchStream}
+import graft.operators.Sketches
 import graft.streaming.DocStream.Doc
 
 /** The streaming sketch: HLL registers maintained continuously must
@@ -58,9 +59,9 @@ class SketchStreamSpec extends AnyFunSuite {
     src.addData(b2: _*)
     src.addData(b3: _*)
     val streamed = EventsStream.runToMemory(
-      SketchStream.cmsCells(src.toDF()), "cms_cells", OutputMode.Complete())
+      Sketches.cmsCells(src.toDF()), "cms_cells", OutputMode.Complete())
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val batch = SketchStream.cmsCells((b1 ++ b2 ++ b3).toDF())
+    val batch = Sketches.cmsCells((b1 ++ b2 ++ b3).toDF())
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(streamed == batch, "stream == batch, cell for cell")
     // the state bound: the 4×1024 grid, nothing else

@@ -271,33 +271,6 @@ class SourcesSpec extends AnyFunSuite {
     assert(elapsedMs < 10000, s"2 attempts x 300 ms must not take $elapsedMs ms")
   }
 
-  test("fetch seam: retry backoff doubles per attempt (the DAG's " +
-      "retry_delay + retry_exponential_backoff contract)") {
-    // failures=2 with delay 120 ms: attempt 1 fails → wait 120 ms,
-    // attempt 2 fails → wait 240 ms, attempt 3 serves — the flaky
-    // endpoint sees the full doubling schedule (extract.py:74's
-    // timeout+retry discipline with the DAG's backoff around it)
-    val f = new FlakyFetcher("served", failures = 2)
-    val t0 = System.nanoTime()
-    val body = Fetch.fetchWithRetries(f, "http://fake/backoff",
-      retries = 2, retryDelayMs = 120L)
-    val elapsedMs = (System.nanoTime() - t0) / 1e6
-    assert(body == "served" && f.calls.get() == 3)
-    assert(elapsedMs >= 360.0,
-      s"backoff must sleep 120 + 240 ms before the serving attempt, measured $elapsedMs")
-    // no trailing sleep after the final failure: the budget-exhausted
-    // path surfaces immediately (2 × 80 ms of backoff, then throw)
-    val dead = new FlakyFetcher("never", failures = 3)
-    val t1 = System.nanoTime()
-    intercept[Fetch.FetchFailedException] {
-      Fetch.fetchWithRetries(dead, "http://fake/dead",
-        retries = 2, retryDelayMs = 80L)
-    }
-    val deadMs = (System.nanoTime() - t1) / 1e6
-    assert(deadMs >= 240.0 && deadMs < 5000.0,
-      s"exhausted budget: 80 + 160 ms backoff then immediate throw, measured $deadMs")
-  }
-
   test("fetch seam: top-level JSON array parses as one row per element") {
     val arr = new Fetch.Fetcher {
       def fetch(url: String): String =

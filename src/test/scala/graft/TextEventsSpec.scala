@@ -591,7 +591,7 @@ class TextEventsSpec extends AnyFunSuite {
       (3L, "fr", "x y"),
       (4L, "de", "z"))         // 1 token → excluded
       .toDF("doc_id", "lang", "text")
-    val got = graft.operators.TextAnalysis.dsirWeightsFrame(docs).collect()
+    val got = graft.operators.TextAnalysis.dsirWeightsFrame(docs, Nil).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("n_bigrams"), r.getAs[Double]("weight"))).toMap
     // driver-side replay in exact integer arithmetic
@@ -644,7 +644,7 @@ class TextEventsSpec extends AnyFunSuite {
       (3L, "en", "code", "x y x y"),
       (4L, "fr", "code", "a b c"))
       .toDF("doc_id", "lang", "source", "text")
-    val got = graft.operators.TextAnalysis.dsirPerSourceFrame(docs).collect()
+    val got = graft.operators.TextAnalysis.dsirWeightsFrame(docs, Seq("source")).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[String]("source"), r.getAs[Long]("n_bigrams"), r.getAs[Double]("weight")))
       .toMap
@@ -684,9 +684,9 @@ class TextEventsSpec extends AnyFunSuite {
     }
     // a single-source corpus collapses to the global t16 weights
     val single = docs.filter(col("source") === "web")
-    val perSrc = graft.operators.TextAnalysis.dsirPerSourceFrame(single).collect()
+    val perSrc = graft.operators.TextAnalysis.dsirWeightsFrame(single, Seq("source")).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("weight")).toMap
-    val global = graft.operators.TextAnalysis.dsirWeightsFrame(single).collect()
+    val global = graft.operators.TextAnalysis.dsirWeightsFrame(single, Nil).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("weight")).toMap
     assert(perSrc == global, s"per-source must equal t16 on one source: $perSrc vs $global")
   }
@@ -888,7 +888,7 @@ class TextEventsSpec extends AnyFunSuite {
     val header = "terms of service apply to all content on this site"
     val synth = (0 until 12).map(i => (i.toLong, s"$header unique$i tail$i words$i"))
       .toDF("doc_id", "text")
-    val flagged = TextAnalysis.boilerplateFrame(synth, minDocs = 10L).collect()
+    val flagged = TextAnalysis.boilerplateFrame(synth).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap
     flagged.values.foreach { r =>
       // 13 tokens -> 6 windows; the 3 windows fully inside the 10-token
